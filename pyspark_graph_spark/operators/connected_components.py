@@ -29,68 +29,57 @@ from pyspark.sql import functions as F
 from pyspark_graph_spark.constants import DST, ID, MSG, SRC, STATE
 from pyspark_graph_spark.graph import Graph
 from pyspark_graph_spark.operators.pregel import Pregel
-from pyspark_graph_spark.util import checkpoint_observed
+from pyspark_graph_spark.util import (
+    arrays,
+    checkpoint_observed,
+    fetch_bounded,
+    int_columns,
+    positions,
+)
 
 COMPONENT = "component"
 
 
-def _batch_min_label(budget0: int, hard_max: int, auto_extend: bool):
-    """Min-label propagation replayed in one Arrow batch (round 12,
-    guide §2.4): per round every vertex takes the min of its own label
-    and its neighbors' (full messaging is value-identical to the
-    Pregel's frontier messaging — a sender's label was already delivered
-    in the round after it last changed), with the same round budget,
-    the same auto_extend doubling, and the same stop-on-no-change
-    probe. Labels are exact integers, so batch == Pregel bit for bit,
-    INCLUDING truncated labellings when the budget runs out. Edges with
-    an endpoint outside the vertex table relay nothing, exactly like
-    the Pregel state join. Emits per-vertex rows plus constant
-    __rounds/__converged columns the caller reads via the checkpoint's
-    observed metrics."""
+def _min_label_kernel(ids, src, dst, budget0: int, hard_max: int, auto_extend: bool):
+    """Min-label propagation replayed in the driver: per round every
+    vertex takes the min of its own label and its neighbors' (full
+    messaging is value-identical to the Pregel's frontier messaging — a
+    sender's label was already delivered in the round after it last
+    changed), with the same round budget, the same auto_extend doubling,
+    and the same stop-on-no-change probe. Labels are exact integers, so
+    batch == Pregel bit for bit, INCLUDING truncated labellings when the
+    budget runs out. Edges with an endpoint outside the vertex table
+    relay nothing, exactly like the Pregel state join. Returns
+    ``(ids, labels, rounds, converged)``."""
+    import numpy as np
 
-    def kern(_key, v_pdf, e_pdf):
-        import numpy as np
-        import pandas as pd
+    ids = np.sort(ids)
+    s_idx, s_ok = positions(ids, src)
+    d_idx, d_ok = positions(ids, dst)
+    ok = s_ok & d_ok
+    s_idx, d_idx = s_idx[ok], d_idx[ok]
+    label = ids.copy()
+    rounds = 0
+    budget = budget0
+    converged = False
+    while rounds < budget:
+        new = label.copy()
+        np.minimum.at(new, d_idx, label[s_idx])
+        np.minimum.at(new, s_idx, label[d_idx])
+        rounds += 1
+        if np.array_equal(new, label):
+            converged = True
+            break
+        label = new
+        if rounds == budget and auto_extend and budget < hard_max:
+            budget = min(2 * budget, hard_max)
+    return ids, label, rounds, converged
 
-        ids = np.sort(v_pdf[ID].to_numpy(dtype=np.int64))
-        src = e_pdf[SRC].to_numpy(dtype=np.int64)
-        dst = e_pdf[DST].to_numpy(dtype=np.int64)
-        s_idx = np.searchsorted(ids, src)
-        d_idx = np.searchsorted(ids, dst)
-        ok = (
-            (s_idx < len(ids))
-            & (ids[np.minimum(s_idx, len(ids) - 1)] == src)
-            & (d_idx < len(ids))
-            & (ids[np.minimum(d_idx, len(ids) - 1)] == dst)
-        )
-        s_idx, d_idx = s_idx[ok], d_idx[ok]
-        label = ids.copy()
-        rounds = 0
-        budget = budget0
-        converged = False
-        while rounds < budget:
-            new = label.copy()
-            np.minimum.at(new, d_idx, label[s_idx])
-            np.minimum.at(new, s_idx, label[d_idx])
-            rounds += 1
-            if np.array_equal(new, label):
-                converged = True
-                break
-            label = new
-            if rounds == budget and auto_extend and budget < hard_max:
-                budget = min(2 * budget, hard_max)
-        return pd.DataFrame(
-            {
-                ID: ids,
-                COMPONENT: label,
-                "__rounds": np.full(len(ids), rounds, dtype=np.int64),
-                "__converged": np.full(
-                    len(ids), 1 if converged else 0, dtype=np.int32
-                ),
-            }
-        )
 
-    return kern
+def _local_components(spark, ids, labels) -> DataFrame:
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table({ID: ids, COMPONENT: labels}))
 
 
 class ConnectedComponents:
@@ -114,7 +103,11 @@ class ConnectedComponents:
     continues from the checkpointed frontier with a doubled budget
     (bounded by ``hard_max_iterations``, default 8x) instead of forcing
     a full restart; the truncation error below still fires if even the
-    hard cap is not enough."""
+    hard cap is not enough.
+
+    ``batch_finish``: while vertices + edges fit this many rows, both are
+    fetched with one limited Arrow collect each and the same rounds
+    replay in numpy in the driver (``_min_label_kernel``); 0 disables."""
 
     def __init__(
         self,
@@ -132,71 +125,69 @@ class ConnectedComponents:
         self.hard_max_iterations = hard_max_iterations
         self.batch_finish = batch_finish
 
-    def run(self, g: Graph) -> DataFrame:
-        vk = {f.name: f.dataType.typeName() for f in g.vertices.schema.fields}
-        ek = {f.name: f.dataType.typeName() for f in g.edges.schema.fields}
-        ints = ("long", "integer", "short", "byte")
-        if (
+    def _run_batch(self, g: Graph):
+        """The driver finish while vertices + edges fit ``batch_finish``;
+        None above it."""
+        import numpy as np
+
+        verts = g.vertices.select(ID)
+        edges = g.edges.select(SRC, DST)
+        if not (
             self.batch_finish
-            and vk.get(ID) in ints
-            and ek.get(SRC) in ints
-            and ek.get(DST) in ints
+            and int_columns(verts, ID)
+            and int_columns(edges, SRC, DST)
         ):
-            # plain count probes, NOT materializing checkpoints: above
-            # the bound the distributed Pregel repartitions and
-            # checkpoints the edge side itself, so a gate checkpoint
-            # would be a wasted full write at exactly the scale where it
-            # hurts (sf1-real A/B); below the bound the kernel's single
-            # job re-derives the small frames trivially
-            verts = g.vertices.select(ID)
-            edges = g.edges.select(SRC, DST)
-            n_total = verts.count() + edges.count()
-            if 0 < n_total <= self.batch_finish:
-                hard = (
-                    self.hard_max_iterations
-                    if self.hard_max_iterations is not None
-                    else (
-                        8 * self.max_iterations
-                        if self.auto_extend
-                        else self.max_iterations
-                    )
-                )
-                out, m = checkpoint_observed(
-                    verts.withColumn("__g", F.lit(0))
-                    .groupBy("__g")
-                    .cogroup(
-                        edges.withColumn("__g", F.lit(0)).groupBy("__g")
-                    )
-                    .applyInPandas(
-                        _batch_min_label(
-                            self.max_iterations, hard, self.auto_extend
-                        ),
-                        f"{ID} long, {COMPONENT} long, "
-                        "__rounds long, __converged int",
-                    ),
-                    __r=F.max("__rounds"),
-                    __c=F.min("__converged"),
-                )
-                self.rounds_run = int(m["__r"] or 0)
-                converged = (m["__c"] is None) or bool(m["__c"])
-                if self.require_convergence and not converged:
-                    raise RuntimeError(
-                        "ConnectedComponents hit max_iterations="
-                        f"{self.max_iterations} before the min-label "
-                        "fixpoint — a component with diameter beyond the "
-                        "budget would get silently split labels. Raise "
-                        "max_iterations, pass auto_extend=True (resumes "
-                        "the checkpointed frontier with a doubled budget, "
-                        "bounded by hard_max_iterations), use "
-                        "AlternatingConnectedComponents "
-                        "(diameter-independent), or pass "
-                        "require_convergence=False to accept truncation."
-                    )
-                return out.select(ID, COMPONENT)
-        # slim the state to (id, state): vertex attributes would otherwise
-        # ride through every per-round shuffle
+            return None
+        e = fetch_bounded(edges, self.batch_finish)
+        v = None if e is None else fetch_bounded(
+            verts, self.batch_finish - e.num_rows
+        )
+        if v is None:
+            return None
+        e = arrays(e, **{SRC: np.int64, DST: np.int64})
+        v = arrays(v, **{ID: np.int64})
+        if e is None or v is None:
+            return None
+        hard = (
+            self.hard_max_iterations
+            if self.hard_max_iterations is not None
+            else (
+                8 * self.max_iterations
+                if self.auto_extend
+                else self.max_iterations
+            )
+        )
+        ids, labels, self.rounds_run, converged = _min_label_kernel(
+            v[ID], e[SRC], e[DST], self.max_iterations, hard, self.auto_extend
+        )
+        self._check_converged(converged)
+        return _local_components(g.vertices.sparkSession, ids, labels)
+
+    def _check_converged(self, converged: bool) -> None:
+        if self.require_convergence and not converged:
+            raise RuntimeError(
+                "ConnectedComponents hit max_iterations="
+                f"{self.max_iterations} before the min-label fixpoint — "
+                "a component with diameter beyond the budget would get "
+                "silently split labels. Raise max_iterations, pass "
+                "auto_extend=True (resumes the checkpointed frontier with "
+                "a doubled budget, bounded by hard_max_iterations), use "
+                "AlternatingConnectedComponents (diameter-independent), "
+                "or pass require_convergence=False to accept truncation."
+            )
+
+    def run(self, g: Graph) -> DataFrame:
+        out = self._run_batch(g)
+        if out is not None:
+            return out
+        # slim the graph to (id) and (src, dst): vertex attributes and
+        # edge columns would otherwise ride through the Pregel's edge
+        # checkpoints and every per-round shuffle
         slim = Graph(
-            g.vertices.select(ID), g.edges, directed=g.directed, indexed=True
+            g.vertices.select(ID),
+            g.edges.select(SRC, DST),
+            directed=g.directed,
+            indexed=True,
         )
         pregel = Pregel(
             initial_state=F.col(ID),
@@ -211,17 +202,7 @@ class ConnectedComponents:
         )
         out = pregel.run(slim).select(ID, F.col(STATE).alias(COMPONENT))
         self.rounds_run = pregel.rounds_run
-        if self.require_convergence and not pregel.converged:
-            raise RuntimeError(
-                "ConnectedComponents hit max_iterations="
-                f"{self.max_iterations} before the min-label fixpoint — "
-                "a component with diameter beyond the budget would get "
-                "silently split labels. Raise max_iterations, pass "
-                "auto_extend=True (resumes the checkpointed frontier with "
-                "a doubled budget, bounded by hard_max_iterations), use "
-                "AlternatingConnectedComponents (diameter-independent), "
-                "or pass require_convergence=False to accept truncation."
-            )
+        self._check_converged(pregel.converged)
         return out
 
 
@@ -265,54 +246,64 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
+def _with_unlabelled(verts: DataFrame, membership: DataFrame) -> DataFrame:
+    """``membership`` plus every vertex it does not label, as its own
+    component (roots and isolated vertices)."""
+    roots_and_isolated = (
+        verts.join(membership.select(ID), on=ID, how="anti")
+        .withColumn(COMPONENT, F.col(ID))
+    )
+    return membership.unionByName(roots_and_isolated)
+
+
 def _batch_union_find(pdf):
     """(src, dst) pairs -> (id, component) with component = min member id
     for every vertex in the pairs' support.
 
-    Union-by-min: when two roots merge the smaller id stays root, so by
-    induction every root is the minimum id of its set — exactly the
-    representative the large-star/small-star fixpoint converges to
-    (Kiveris et al.: stars point at component minima). Runs inside one
-    bounded Arrow batch; shared by AlternatingCC's batch front-path and
-    BoruvkaMST's contraction."""
+    Union-by-min, vectorized: every round hooks the larger root of each
+    edge under the smaller one, then pointer-jumps every vertex to its
+    root, until both ends of every edge share a root. A vertex only ever
+    points at a smaller id in its own component, so each root is its
+    component's minimum id — exactly the representative the
+    large-star/small-star fixpoint converges to (Kiveris et al.: stars
+    point at component minima). Runs on one bounded batch; shared by
+    AlternatingCC's driver finish and BoruvkaMST's contraction."""
+    import numpy as np
     import pandas as pd
 
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for s, d in zip(pdf[SRC], pdf[DST]):
-        s, d = int(s), int(d)
-        if s not in parent:
-            parent[s] = s
-        if d not in parent:
-            parent[d] = d
-        rs, rd = find(s), find(d)
-        if rs != rd:
-            lo, hi = (rs, rd) if rs < rd else (rd, rs)
-            parent[hi] = lo
-    return pd.DataFrame(
-        [(v, find(v)) for v in parent], columns=[ID, COMPONENT]
-    )
+    src = pdf[SRC].to_numpy(dtype=np.int64)
+    dst = pdf[DST].to_numpy(dtype=np.int64)
+    ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    s, d = inv[: len(src)], inv[len(src):]
+    root = np.arange(len(ids))
+    while True:
+        lo = np.minimum(root[s], root[d])
+        np.minimum.at(root, root[s], lo)
+        np.minimum.at(root, root[d], lo)
+        while True:
+            up = root[root]
+            if np.array_equal(up, root):
+                break
+            root = up
+        if np.array_equal(root[s], root[d]):
+            return pd.DataFrame({ID: ids, COMPONENT: ids[root]})
 
 
 class AlternatingConnectedComponents:
     """Large-star/small-star alternating connected components (Kiveris et al.).
 
-    ``batch_finish``: once the deduped edge list fits this bound, label
-    components with a union-find in ONE bounded Arrow batch instead of
-    the O(log n) alternating-star fixpoint — the same adjudicated
-    bounded-batch-finish contract as matching/MIS/partition/MST, with
+    ``batch_finish``: while the loop-free edge list fits this bound, the
+    driver fetches it with one limited Arrow collect and labels components
+    with a union-find instead of the O(log n) alternating-star fixpoint —
     provably identical output (both paths label every component by its
-    minimum id; equality is pinned by test). 1M edges x 16 B ≈ 16 MB on
-    one executor. 0 disables; the distributed fixpoint remains the
-    asymptotic path for billion-edge graphs (and is what runs above the
-    bound at 100 TB — the bound only short-circuits dimension-scale
-    inputs and contraction tails)."""
+    minimum id; equality is pinned by test), and no ``rounds_run``. The
+    vertex table is fetched too while edges + vertices fit; otherwise the
+    unlabelled vertices come from a Spark anti-join. Above the bound the
+    distributed fixpoint runs, and after any round whose live edge list
+    fits the bound the driver union-find finishes the contraction tail
+    (the vertex side stays a Spark anti-join there). 1M edges x 16 B ≈
+    16 MB in the driver. 0 disables; the distributed fixpoint remains the
+    asymptotic path for billion-edge graphs."""
 
     def __init__(
         self,
@@ -343,44 +334,70 @@ class AlternatingConnectedComponents:
         # the guard exists for the day that stops being true.
         self.require_convergence = require_convergence
 
+    def _finish(self, g: Graph, pairs, vertex_budget: int | None = None):
+        """Labels from a fetched loop-free edge table by the driver
+        union-find. As in the distributed read, an edge vertex is labelled
+        by its component's minimum and every vertex no edge labels (roots,
+        isolated vertices) labels itself — fetched and joined in the driver
+        while the vertex table fits ``vertex_budget``, else by a Spark
+        anti-join against a local membership table."""
+        import numpy as np
+
+        mem = _batch_union_find(pairs.to_pandas())
+        mem = mem[mem[ID] != mem[COMPONENT]]
+        ids = mem[ID].to_numpy(dtype=np.int64)
+        comp = mem[COMPONENT].to_numpy(dtype=np.int64)
+        spark = g.vertices.sparkSession
+        verts = g.vertices.select(ID)
+        v = None
+        if vertex_budget is not None and int_columns(verts, ID):
+            v = fetch_bounded(verts, vertex_budget)
+        if v is not None:
+            v = arrays(v, **{ID: np.int64})
+        if v is None:
+            return _with_unlabelled(verts, _local_components(spark, ids, comp))
+        rest = v[ID][~np.isin(v[ID], ids)]
+        return _local_components(
+            spark, np.concatenate([ids, rest]), np.concatenate([comp, rest])
+        )
+
     def run(self, g: Graph) -> DataFrame:
-        # loop-free edge pairs (large-star symmetrizes per round); the
+        pairs = g.edges.select(SRC, DST).filter(F.col(SRC) != F.col(DST))
+        batch = bool(self.batch_finish) and int_columns(pairs, SRC, DST)
+        if batch:
+            # front path: the raw pairs fit, so no round runs and no
+            # rounds_run is set
+            front = fetch_bounded(pairs, self.batch_finish)
+            if front is not None:
+                return self._finish(
+                    g, front, self.batch_finish - front.num_rows
+                )
+        # deduped loop-free pairs (large-star symmetrizes per round); the
         # batch-bound count AND the initial content fingerprint ride the
-        # materializing job itself (round 12, checkpoint_observed) —
-        # previously two extra actions before the first round
-        edges, m0 = checkpoint_observed(
-            g.edges.select(SRC, DST)
-            .filter(F.col(SRC) != F.col(DST))
-            .distinct(),
+        # materializing job itself (checkpoint_observed)
+        edges, m = checkpoint_observed(
+            pairs.distinct(),
             __x=F.bit_xor(F.xxhash64(SRC, DST)),
             __n=F.count(F.lit(1)),
         )
-        n_edges = m0["__n"] or 0
-        if self.batch_finish and n_edges <= self.batch_finish:
-            membership = (
-                edges.withColumn("__g", F.lit(0))
-                .groupBy("__g")
-                .applyInPandas(
-                    _batch_union_find, f"{ID} long, {COMPONENT} long"
-                )
-            )
-            roots_and_isolated = (
-                g.vertices.select(ID)
-                .join(membership.select(ID), on=ID, how="anti")
-                .withColumn(COMPONENT, F.col(ID))
-            )
-            return membership.unionByName(roots_and_isolated)
+
+        def tail_fits(m) -> bool:
+            # contraction tail: once the live edge list fits the bound, the
+            # driver union-find finishes it exactly — every round keeps each
+            # component's vertices connected and its minimum in place
+            return batch and (m["__n"] or 0) <= self.batch_finish
 
         # order-insensitive content fingerprint; ids span the full 64-bit
         # hash range, so sums would overflow ANSI arithmetic — XOR of row
         # hashes + count is overflow-free. The per-round probe rides each
         # round's own checkpoint job (checkpoint_observed), not a
         # separate action.
-        fingerprint = (m0["__x"], m0["__n"])
+        fingerprint = (m["__x"], m["__n"])
+        handoff = tail_fits(m)
         converged = False
         rounds = 0
         budget = self.max_iterations
-        while rounds < budget:
+        while not handoff and rounds < budget:
             edges, m = checkpoint_observed(
                 _small_star(_large_star(edges)),
                 __x=F.bit_xor(F.xxhash64(SRC, DST)),
@@ -392,6 +409,7 @@ class AlternatingConnectedComponents:
                 converged = True
                 break
             fingerprint = new_fingerprint
+            handoff = tail_fits(m)
             if (
                 rounds == budget
                 and self.auto_extend
@@ -399,6 +417,8 @@ class AlternatingConnectedComponents:
             ):
                 budget = min(2 * budget, self.hard_max_iterations)
         self.rounds_run = rounds
+        if handoff:
+            return self._finish(g, edges.toArrow())
         if self.require_convergence and not converged:
             raise RuntimeError(
                 "AlternatingConnectedComponents hit max_iterations="
@@ -410,14 +430,8 @@ class AlternatingConnectedComponents:
                 "with a doubled budget, bounded by hard_max_iterations), "
                 "or pass require_convergence=False to accept truncation."
             )
-
         # post-fixpoint the edge list is a star forest pointing at roots
-
-
-        membership = edges.select(F.col(SRC).alias(ID), F.col(DST).alias(COMPONENT))
-        roots_and_isolated = (
-            g.vertices.select(ID)
-            .join(membership.select(ID), on=ID, how="anti")
-            .withColumn(COMPONENT, F.col(ID))
+        return _with_unlabelled(
+            g.vertices.select(ID),
+            edges.select(F.col(SRC).alias(ID), F.col(DST).alias(COMPONENT)),
         )
-        return membership.unionByName(roots_and_isolated)

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyspark_graph_spark.constants import ID, MSG, STATE
+from pyspark_graph_spark.constants import DST, ID, MSG, SRC, STATE
 from pyspark_graph_spark.graph import Graph
 from pyspark_graph_spark.operators.pregel import Pregel
 
@@ -42,10 +42,14 @@ class LabelPropagation:
 
     def run(self, g: Graph) -> DataFrame:
         # slim state: keep only id (+ the seed column if any) out of the
-        # per-round shuffles
+        # per-round shuffles, and only (src, dst) out of the Pregel's edge
+        # checkpoints — messages read nothing but the sender's state
         keep = [ID] + ([self.label_column] if self.label_column else [])
         slim = Graph(
-            g.vertices.select(*keep), g.edges, directed=g.directed, indexed=True
+            g.vertices.select(*keep),
+            g.edges.select(SRC, DST),
+            directed=g.directed,
+            indexed=True,
         )
         initial = (
             F.col(self.label_column) if self.label_column else F.col(ID)

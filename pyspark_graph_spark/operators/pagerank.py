@@ -28,129 +28,134 @@ from pyspark.sql import functions as F
 
 from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
-from pyspark_graph_spark.util import checkpoint_observed
+from pyspark_graph_spark.util import arrays, fetch_bounded, int_columns, positions
 
 PAGERANK = "pagerank"
 
-# Bounded-batch finish (round 12, guide §2.4): same contract and ulp
-# story as the SVD/ALS kernels (operators/svd.py module note) — below
-# batch_finish (vertices + edges in one bound) the whole power-iteration
-# trajectory runs in one cogrouped Arrow kernel replaying the identical
-# double algebra: per edge (pr(src) * w) / deg(src), per vertex
+# Bounded-batch finish: same contract and ulp story as the SVD/ALS
+# kernels (operators/svd.py module note). While vertices + edges fit
+# batch_finish, the driver fetches both with one limited Arrow collect
+# each (util.fetch_bounded) and replays the identical double algebra in
+# numpy: per edge (pr(src) * w) / deg(src), per vertex
 # (1-α)·reset + α·(sum of contributions, 0 when none), the same
-# iteration count and the same optional L1-delta early stop. The
-# per-iteration join/aggregate plan is unchanged above the bound and
-# remains the only 100 TB path.
+# iteration count and the same optional L1-delta early stop. The result
+# is a local DataFrame, so a small request costs two Spark jobs in all.
+# Inputs the kernel cannot replay exactly (a zero out-weight sum, whose
+# distributed division raises under ANSI; nulls) take the distributed
+# plan. Above the bound the per-iteration join/aggregate plan is
+# unchanged and remains the only 100 TB path.
 
 
-def _pagerank_batch_kernel(alpha: float, max_iterations: int, tolerance):
-    def kern(_key, v_pdf, e_pdf):
-        import numpy as np
-        import pandas as pd
+def _fetch_edges(g: Graph, w, bound: int):
+    """``(src, dst, w)`` arrays of ``g.symmetric_edges`` while they fit
+    ``bound`` rows, else None. An undirected graph is fetched once and
+    mirrored in numpy: the union's rows from one scan of the edge table."""
+    import numpy as np
 
-        ids = v_pdf[ID].to_numpy(dtype=np.int64)
-        reset = v_pdf["__reset"].to_numpy(dtype=np.float64)
-        order = np.argsort(ids, kind="stable")
-        ids, reset = ids[order], reset[order]
-        src = e_pdf[SRC].to_numpy(dtype=np.int64)
-        dst = e_pdf[DST].to_numpy(dtype=np.int64)
-        w = e_pdf["__w"].to_numpy(dtype=np.float64)
-        eorder = np.lexsort((dst, src))
-        src, dst, w = src[eorder], dst[eorder], w[eorder]
-        # out-degree (weight sum) over ALL edge sources, as the
-        # distributed deg aggregate does
-        dsrc, dinv = np.unique(src, return_inverse=True)
-        deg = np.zeros(len(dsrc), dtype=np.float64)
-        np.add.at(deg, dinv, w)
-        # edge endpoints resolved against the vertex table: a source
-        # with no rank row contributes nothing (the ranks join), a
-        # destination outside the vertex table is dropped (the verts
-        # left join)
-        s_idx = np.searchsorted(ids, src)
-        s_ok = (s_idx < len(ids)) & (ids[np.minimum(s_idx, len(ids) - 1)] == src)
-        d_idx = np.searchsorted(ids, dst)
-        d_ok = (d_idx < len(ids)) & (ids[np.minimum(d_idx, len(ids) - 1)] == dst)
-        keep = s_ok & d_ok
-        s_idx, d_idx = s_idx[keep], d_idx[keep]
-        wk = w[keep]
-        degk = deg[dinv[keep]]
-        if np.any(degk == 0.0):
-            # the distributed plan's division is unguarded — under ANSI
-            # a zero out-weight sum raises DIVIDE_BY_ZERO there; defer
-            # so that loud error is the behavior in both paths
-            raise RuntimeError("__PR_BATCH_DEGENERATE__")
+    edges = g.edges.select(SRC, DST, w.alias("__w"))
+    if not int_columns(edges, SRC, DST):
+        return None
+    t = fetch_bounded(edges, bound if g.directed else bound // 2)
+    if t is not None:
+        t = arrays(t, **{SRC: np.int64, DST: np.int64, "__w": np.float64})
+    if t is None:
+        return None
+    src, dst, wt = t[SRC], t[DST], t["__w"]
+    if g.directed:
+        return src, dst, wt
+    return (
+        np.concatenate([src, dst]),
+        np.concatenate([dst, src]),
+        np.concatenate([wt, wt]),
+    )
+
+
+def _pagerank_kernel(
+    ids, reset, src, dst, w, alpha: float, max_iterations: int, tolerance
+):
+    """``(ids, ranks)`` sorted by id, or None when the input must run the
+    distributed plan instead."""
+    import numpy as np
+
+    order = np.argsort(ids, kind="stable")
+    ids, reset = ids[order], reset[order]
+    # a fixed edge order makes the float sums independent of fetch order
+    eorder = np.lexsort((dst, src))
+    src, dst, w = src[eorder], dst[eorder], w[eorder]
+    # out-degree (weight sum) over ALL edge sources, as the distributed
+    # deg aggregate does
+    dsrc, dinv = np.unique(src, return_inverse=True)
+    deg = np.zeros(len(dsrc), dtype=np.float64)
+    np.add.at(deg, dinv, w)
+    # edge endpoints resolved against the vertex table: a source with no
+    # rank row contributes nothing (the ranks join), a destination outside
+    # the vertex table is dropped (the verts left join)
+    s_idx, s_ok = positions(ids, src)
+    d_idx, d_ok = positions(ids, dst)
+    keep = s_ok & d_ok
+    s_idx, d_idx = s_idx[keep], d_idx[keep]
+    wk = w[keep]
+    degk = deg[dinv[keep]]
+    if np.any(degk == 0.0):
+        # the distributed plan's division is unguarded — under ANSI a zero
+        # out-weight sum raises DIVIDE_BY_ZERO there; defer so that loud
+        # error is the behavior in both paths
+        return None
+    pr = reset.copy()
+    for _ in range(max_iterations):
+        contrib = np.zeros(len(ids), dtype=np.float64)
+        np.add.at(contrib, d_idx, (pr[s_idx] * wk) / degk)
+        new = (1.0 - alpha) * reset + alpha * contrib
+        if tolerance is not None:
+            delta = float(np.sum(np.abs(new - pr)))
+            pr = new
+            if delta < tolerance:
+                break
+        else:
+            pr = new
+    return ids, pr
+
+
+def _ppr_multi_kernel(starts, src, dst, w, alpha: float, max_iterations: int):
+    """All-sources personalized PageRank in the driver: ``(id, source,
+    pagerank)`` columns, or None when the input must run the distributed
+    plan. Per source the recurrence runs dense over the edge-endpoint id
+    universe; the emitted row set equals the sparse plan's (restart ∪
+    reachable): every sparse row's value is strictly positive —
+    contributions are (positive pr · positive w / positive deg) sums — so
+    positive-mass entries ARE the sparse row set. Nonpositive weights
+    would break that equivalence; the kernel defers them."""
+    import numpy as np
+
+    if np.any(~(w > 0.0)):
+        return None
+    eorder = np.lexsort((dst, src))
+    src, dst, w = src[eorder], dst[eorder], w[eorder]
+    dsrc, dinv = np.unique(src, return_inverse=True)
+    deg = np.zeros(len(dsrc), dtype=np.float64)
+    np.add.at(deg, dinv, w)
+    share_deg = deg[dinv]
+    ids = np.unique(np.concatenate([src, dst, np.array(starts, dtype=np.int64)]))
+    s_idx = np.searchsorted(ids, src)
+    d_idx = np.searchsorted(ids, dst)
+    out_id, out_src, out_pr = [], [], []
+    for start in sorted(starts):
+        reset = np.zeros(len(ids), dtype=np.float64)
+        reset[np.searchsorted(ids, start)] = 1.0
         pr = reset.copy()
         for _ in range(max_iterations):
             contrib = np.zeros(len(ids), dtype=np.float64)
-            np.add.at(contrib, d_idx, (pr[s_idx] * wk) / degk)
-            new = (1.0 - alpha) * reset + alpha * contrib
-            if tolerance is not None:
-                delta = float(np.sum(np.abs(new - pr)))
-                pr = new
-                if delta < tolerance:
-                    break
-            else:
-                pr = new
-        return pd.DataFrame({ID: ids, PAGERANK: pr})
-
-    return kern
-
-
-def _ppr_multi_batch_kernel(alpha: float, max_iterations: int):
-    """All-sources personalized PageRank in one Arrow batch. Per source
-    the recurrence runs dense over the edge-endpoint id universe; the
-    emitted row set equals the sparse plan's (restart ∪ reachable):
-    every sparse row's value is strictly positive — contributions are
-    (positive pr · positive w / positive deg) sums — so positive-mass
-    entries ARE the sparse row set. Nonpositive weights would break
-    that equivalence; the kernel defers them to the distributed plan."""
-
-    def kern(_key, r_pdf, e_pdf):
-        import numpy as np
-        import pandas as pd
-
-        src = e_pdf[SRC].to_numpy(dtype=np.int64)
-        dst = e_pdf[DST].to_numpy(dtype=np.int64)
-        w = e_pdf["__w"].to_numpy(dtype=np.float64)
-        if np.any(~(w > 0.0)):
-            raise RuntimeError("__PR_BATCH_DEGENERATE__")
-        eorder = np.lexsort((dst, src))
-        src, dst, w = src[eorder], dst[eorder], w[eorder]
-        dsrc, dinv = np.unique(src, return_inverse=True)
-        deg = np.zeros(len(dsrc), dtype=np.float64)
-        np.add.at(deg, dinv, w)
-        starts = sorted(
-            {(int(i), int(s)) for i, s in zip(r_pdf[ID], r_pdf["source"])}
-        )
-        ids = np.unique(
-            np.concatenate(
-                [src, dst, np.array([i for i, _ in starts], dtype=np.int64)]
-            )
-        )
-        s_idx = np.searchsorted(ids, src)
-        d_idx = np.searchsorted(ids, dst)
-        share_w = w
-        share_deg = deg[dinv]
-        out_id, out_src, out_pr = [], [], []
-        for start, source in starts:
-            reset = np.zeros(len(ids), dtype=np.float64)
-            reset[np.searchsorted(ids, start)] = 1.0
-            pr = reset.copy()
-            for _ in range(max_iterations):
-                contrib = np.zeros(len(ids), dtype=np.float64)
-                np.add.at(
-                    contrib, d_idx, (pr[s_idx] * share_w) / share_deg
-                )
-                pr = (1.0 - alpha) * reset + alpha * contrib
-            mask = pr > 0.0
-            out_id.extend(int(x) for x in ids[mask])
-            out_src.extend([source] * int(mask.sum()))
-            out_pr.extend(float(x) for x in pr[mask])
-        return pd.DataFrame(
-            {ID: out_id, "source": out_src, PAGERANK: out_pr}
-        )
-
-    return kern
+            np.add.at(contrib, d_idx, (pr[s_idx] * w) / share_deg)
+            pr = (1.0 - alpha) * reset + alpha * contrib
+        mask = pr > 0.0
+        out_id.append(ids[mask])
+        out_src.append(np.full(int(mask.sum()), start, dtype=np.int64))
+        out_pr.append(pr[mask])
+    return {
+        ID: np.concatenate(out_id),
+        "source": np.concatenate(out_src),
+        PAGERANK: np.concatenate(out_pr),
+    }
 
 
 class PageRank:
@@ -171,7 +176,10 @@ class PageRank:
         its out-edges proportionally to the edge weight (transition
         probability w / Σw) instead of uniformly. Same plan shape: the
         degree table becomes a weight-sum table, everything else is
-        unchanged."""
+        unchanged.
+
+        ``batch_finish``: vertices + edges at or below this many rows run
+        in the driver (module note); 0 disables."""
         self.alpha = alpha
         self.max_iterations = max_iterations
         self.tolerance = tolerance
@@ -179,23 +187,37 @@ class PageRank:
         self.weight_col = weight_col
         self.batch_finish = batch_finish
 
+    def _run_batch(self, g: Graph, w, verts: DataFrame):
+        """The driver finish, or None when the input is above the bound or
+        the kernel defers."""
+        import numpy as np
+        import pyarrow as pa
+
+        if not (self.batch_finish and int_columns(verts, ID)):
+            return None
+        e = _fetch_edges(g, w, self.batch_finish)
+        if e is None:
+            return None
+        v = fetch_bounded(verts, self.batch_finish - len(e[0]))
+        v = None if v is None else arrays(v, **{ID: np.int64, "__reset": np.float64})
+        if v is None:
+            return None
+        out = _pagerank_kernel(
+            v[ID], v["__reset"], *e,
+            self.alpha, self.max_iterations, self.tolerance,
+        )
+        if out is None:
+            return None
+        return verts.sparkSession.createDataFrame(
+            pa.table({ID: out[0], PAGERANK: out[1]})
+        )
+
     def run(self, g: Graph) -> DataFrame:
         """Returns ``(id, pagerank)`` for every vertex."""
-        # pre-partition the static edge side on the join key: per-iteration
-        # joins then shuffle only the rank frame
         w = (
             F.col(self.weight_col).cast("double")
             if self.weight_col
             else F.lit(1.0)
-        )
-        # probes ride the materializing checkpoints (round 12,
-        # checkpoint_observed); the reset column folds into the one
-        # vertex checkpoint instead of a second materialization
-        edges, me = checkpoint_observed(
-            g.symmetric_edges.select(SRC, DST, w.alias("__w")).repartition(
-                F.col(SRC)
-            ),
-            __n=F.count(F.lit(1)),
         )
         if self.sources is None:
             reset = F.lit(1.0)
@@ -204,44 +226,18 @@ class PageRank:
             reset = F.when(
                 F.array_contains(src_set, F.col(ID)), F.lit(1.0)
             ).otherwise(F.lit(0.0))
-        verts, mv = checkpoint_observed(
-            g.vertices.select(ID).withColumn("__reset", reset),
-            __n=F.count(F.lit(1)),
+        verts = g.vertices.select(ID).withColumn("__reset", reset)
+        out = self._run_batch(g, w, verts)
+        if out is not None:
+            return out
+        # pre-partition the static edge side on the join key: per-iteration
+        # joins then shuffle only the rank frame
+        edges = (
+            g.symmetric_edges.select(SRC, DST, w.alias("__w"))
+            .repartition(F.col(SRC))
+            .localCheckpoint()
         )
-        kinds = dict(
-            [(f.name, f.dataType.typeName()) for f in edges.schema.fields]
-            + [(f.name, f.dataType.typeName()) for f in verts.schema.fields]
-        )
-        integral = all(
-            kinds[c] in ("long", "integer", "short", "byte")
-            for c in (SRC, DST, ID)
-        )
-        if (
-            self.batch_finish
-            and integral
-            and 0
-            < (me["__n"] or 0) + (mv["__n"] or 0)
-            <= self.batch_finish
-        ):
-            out = (
-                verts.withColumn("__g", F.lit(0))
-                .groupBy("__g")
-                .cogroup(edges.withColumn("__g", F.lit(0)).groupBy("__g"))
-                .applyInPandas(
-                    _pagerank_batch_kernel(
-                        self.alpha, self.max_iterations, self.tolerance
-                    ),
-                    f"{ID} long, {PAGERANK} double",
-                )
-            )
-            try:
-                # eager so the zero-out-degree deferral surfaces here and
-                # the distributed plan (whose unguarded ANSI division is
-                # the loud behavior) takes over
-                return out.localCheckpoint()
-            except Exception as e:
-                if "__PR_BATCH_DEGENERATE__" not in str(e):
-                    raise
+        verts = verts.localCheckpoint()
         deg = (
             edges.groupBy(SRC)
             .agg(F.sum("__w").alias("__deg"))
@@ -322,43 +318,26 @@ def parallel_personalized_pagerank(
     """
     if not sources:
         raise ValueError("sources must be non-empty")
+    import pyarrow as pa
+
     spark = g.edges.sparkSession
     w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    edges, me = checkpoint_observed(
-        g.symmetric_edges.select(SRC, DST, w.alias("__w")).repartition(
-            F.col(SRC)
-        ),
-        __n=F.count(F.lit(1)),
+    starts = [int(s) for s in dict.fromkeys(sources)]
+    # bounded-batch finish (module note); the sources count toward the bound
+    e = None
+    if batch_finish >= len(sources):
+        e = _fetch_edges(g, w, batch_finish - len(sources))
+    out = None if e is None else _ppr_multi_kernel(starts, *e, alpha, max_iterations)
+    if out is not None:
+        return spark.createDataFrame(pa.table(out))
+    edges = (
+        g.symmetric_edges.select(SRC, DST, w.alias("__w"))
+        .repartition(F.col(SRC))
+        .localCheckpoint()
     )
     restart = spark.createDataFrame(
-        [(int(s), int(s)) for s in dict.fromkeys(sources)],
-        f"{ID} long, source long",
+        [(s, s) for s in starts], f"{ID} long, source long"
     ).localCheckpoint()
-    ekinds = {f.name: f.dataType.typeName() for f in edges.schema.fields}
-    if (
-        batch_finish
-        and all(
-            ekinds[c] in ("long", "integer", "short", "byte")
-            for c in (SRC, DST)
-        )
-        and 0 < (me["__n"] or 0) + len(sources) <= batch_finish
-    ):
-        out = (
-            restart.withColumn("__g", F.lit(0))
-            .groupBy("__g")
-            .cogroup(edges.withColumn("__g", F.lit(0)).groupBy("__g"))
-            .applyInPandas(
-                _ppr_multi_batch_kernel(alpha, max_iterations),
-                f"{ID} long, source long, {PAGERANK} double",
-            )
-        )
-        try:
-            # eager so the nonpositive-weight deferral surfaces here
-            return out.localCheckpoint()
-        except Exception as e:
-            if "__PR_BATCH_DEGENERATE__" not in str(e):
-                raise
-            # fall through to the distributed plan
     deg = edges.groupBy(SRC).agg(F.sum("__w").alias("__deg")).localCheckpoint()
     ranks = restart.withColumn(PAGERANK, F.lit(1.0)).localCheckpoint()
     for _ in range(max_iterations):

@@ -67,110 +67,91 @@ for _mapping in (QUERIES, ORACLES):
 # this round — declared below in ROUND_CHANGED — then (b) the stalest
 # latest-wins driver-green queries (fold of the committed
 # CORRECTNESS_r*.json artifacts), registration order within a round.
-# Round 11's changed set: svd_factorization_block (new: rank-k truncated
-# SVD by BLOCK power iteration with CholeskyQR orthogonalization — all k
-# factors on the same two shuffles per iteration, r10 verdict #3);
-# als_bias_rank2 (new: biased rank-2 ALS, the distributed trainer for
-# the SVD++-class model the reference's matrix marks ❌ everywhere —
-# closes r10 "What's missing" #2 as far as determinism allows);
-# als_implicit_rank2 (new: implicit-feedback ALS, Hu-Koren-Volinsky
-# 2008 — the confidence-weighted implicit half of the SVD++ model
-# class, global-Gram + sparse-correction solves, linear in nnz);
-# netmf_embeddings (new: NetMF graph embeddings, Qiu et al. 2018 —
-# rank-2 block SVD of the 6dp-rounded walk-PPMI matrix, composing the
-# walk corpus, walk_pmi's scored pairs, and the block SVD operator);
-# four_cycles / four_cycles_estimate / transitivity / triangle_estimate
-# / rich_club / triad_census family / densest_subgraph / bipartite_check
-# / coarsen_two_level / multilevel_partition (exact-integer DECIMAL(38,0)
-# / shiftright arithmetic replacing double sums, long wraps, and
-# fractional intermediates in every closed-form counting expression —
-# r10 verdict #1 + ADVICE #1); svd_factorization_k (normalizations
-# null-guard exhausted operators so the new rank probe raises loudly —
-# ADVICE #2); connected_components / connected_components_pregel /
-# temporal_reachability (iteration loops restructured for the opt-in
-# auto_extend resumable budget, r10 verdict #5 — default-off, plans
-# unchanged).
+# This round's changed set: the operators whose small inputs now finish
+# in the driver from one limited Arrow fetch (PageRank and personalized
+# PageRank, both connected-components operators, triangle count) and
+# label propagation (its Pregel edges are projected to (src, dst)) —
+# every query built on them: transitivity, connected_components,
+# connected_components_pregel, triangle_count, label_propagation,
+# pagerank, dedup_clusters, personalized_pagerank, weighted_pagerank,
+# cdc_dedup_clusters, percolation, er_clusters, ppr_trade,
+# er_clusters_multipass, ppr_multi. Outputs are unchanged; the plans moved.
 # (b) = the stalest greens.
-# The full-suite backstop is ORACLE_FULL_r11.json.
+# The full-suite backstop is ORACLE_FULL_r12.json.
 # GATE_ROUND bounds the staleness fold: this window folds
 # CORRECTNESS_r{1..GATE_ROUND-1} ONLY, so the driver dropping the
 # post-HEAD CORRECTNESS_r{GATE_ROUND}.json can never drift the pin
 # (the judge-time red of rounds 8 and 9 — r9 verdict #1).
-GATE_ROUND = 11
+GATE_ROUND = 12
 ROUND_CHANGED: list[str] = [
-    "svd_factorization_block",
-    "als_bias_rank2",
-    "als_implicit_rank2",
-    "netmf_embeddings",
-    "four_cycles",
-    "four_cycles_estimate",
     "transitivity",
-    "triangle_estimate",
-    "rich_club",
-    "triad_census",
-    "triad_census_estimate",
-    "triad_census_rmat",
-    "densest_subgraph",
-    "bipartite_check",
-    "coarsen_two_level",
-    "multilevel_partition",
-    "svd_factorization_k",
     "connected_components",
     "connected_components_pregel",
-    "temporal_reachability",
+    "triangle_count",
+    "label_propagation",
+    "pagerank",
+    "dedup_clusters",
+    "personalized_pagerank",
+    "weighted_pagerank",
+    "cdc_dedup_clusters",
+    "percolation",
+    "er_clusters",
+    "ppr_trade",
+    "er_clusters_multipass",
+    "ppr_multi",
 ]
 
 GATE_PRIORITY: list[str] = [
-    "svd_factorization_block",
-    "als_bias_rank2",
-    "als_implicit_rank2",
-    "netmf_embeddings",
-    "four_cycles",
-    "four_cycles_estimate",
     "transitivity",
-    "triangle_estimate",
-    "rich_club",
-    "triad_census",
-    "triad_census_estimate",
-    "triad_census_rmat",
-    "densest_subgraph",
-    "bipartite_check",
-    "coarsen_two_level",
-    "multilevel_partition",
-    "svd_factorization_k",
     "connected_components",
     "connected_components_pregel",
-    "temporal_reachability",
-    "critical_path",
-    "burst_windows",
-    "weighted_sample",
-    "returned_items",
-    "bilateral_volume",
-    "transitive_closure",
-    "multimodal_decode_tiff",
-    "k_anonymity",
-    "daily_type_pivot",
-    "hilbert_key",
-    "frequent_itemsets",
-    "event_transitions",
-    "running_cusum",
-    "table_profile",
-    "approx_closeness",
-    "effective_diameter",
-    "disorder_profile",
-    "tfidf_cosine_pairs",
-    "ab_test_z",
-    "seasonality_chi2",
-    "survival_curve",
-    "image_ahash",
-    "tokenizer_fertility",
-    "audio_fingerprint",
-    "video_shot_boundaries",
-    "association_rules",
-    "gini_concentration",
-    "promo_revenue",
-    "large_orders",
-    "market_share",
+    "triangle_count",
+    "label_propagation",
+    "pagerank",
+    "dedup_clusters",
+    "personalized_pagerank",
+    "weighted_pagerank",
+    "cdc_dedup_clusters",
+    "percolation",
+    "er_clusters",
+    "ppr_trade",
+    "er_clusters_multipass",
+    "ppr_multi",
+    "brand_revenue",
+    "autocorrelation",
+    "changepoint",
+    "ngram_novelty",
+    "quality_blend",
+    "session_paths",
+    "degree_centralization",
+    "degrees",
+    "out_degrees",
+    "multimodal_decode",
+    "dyad_census",
+    "seasonal_decompose",
+    "kmv_intersection",
+    "dedup_rate_curve",
+    "degree_ccdf",
+    "edge_cut",
+    "conversion_lag",
+    "rfm_segments",
+    "parts_supplier_counts",
+    "idle_customers",
+    "ppl_filter_calibration",
+    "seasonality_strength",
+    "markov_stationary",
+    "stickiness",
+    "hourly_profile",
+    "multimodal_decode_jpeg",
+    "multimodal_decode_jpeg_color",
+    "boilerplate_chunks",
+    "forecast_revenue",
+    "volume_shipping",
+    "top_supplier",
+    "small_qty_revenue",
+    "special_revenue",
+    "waiting_suppliers",
+    "heaps_law",
 ]
 
 

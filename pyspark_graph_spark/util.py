@@ -1,8 +1,10 @@
 """Join/union/motif helpers (semantics of reference util.py:9-39, fixed).
 
-All helpers are pure plan builders — no actions, no caching. They compose with
-Catalyst optimization (join reordering, pushdown) because they only use the
-public DataFrame API.
+The join/union/motif helpers are pure plan builders — no actions, no
+caching. They compose with Catalyst optimization (join reordering,
+pushdown) because they only use the public DataFrame API. The
+bounded-batch helpers at the end (``checkpoint_observed``,
+``fetch_bounded``) are the actions the iterative operators share.
 """
 
 from __future__ import annotations
@@ -124,3 +126,58 @@ def checkpoint_observed(
         obs, *[m.alias(n) for n, m in metrics.items()]
     ).localCheckpoint()
     return out, obs.get
+
+
+def fetch_bounded(df: DataFrame, bound: int):
+    """The rows of ``df`` as a ``pyarrow.Table``, or None when it holds
+    more than ``bound`` rows — ONE limited collect, no count probe.
+
+    This is the bounded-batch gate: below the bound an operator finishes
+    in the driver on the fetched table and returns
+    ``createDataFrame(table)`` (a ``LocalRelation``, so reading the result
+    launches no further job). Above it the probe costs one job that stops
+    at ``bound + 1`` rows, and the caller runs its distributed plan.
+    ``coalesce(1)`` puts the limit in the scanning task itself: above the
+    bound the probe then reads up to ``bound + 1`` rows in one task and
+    stops, instead of shuffling every partition's first ``bound + 1`` rows
+    to one reducer (half the probe's time on a 1M-row edge table). Callers
+    pass scans and projections, so the one task loses no parallel work.
+    ``DataFrame.toArrow`` is public API (Spark >= 4.0), so the gate also
+    works under Spark Connect."""
+    table = df.coalesce(1).limit(bound + 1).toArrow()
+    return None if table.num_rows > bound else table
+
+
+def int_columns(df: DataFrame, *cols: str) -> bool:
+    """True when every named column of ``df`` is an integral type — the
+    precondition of the int64 numpy kernels behind the batch finishes."""
+    kinds = {f.name: f.dataType.typeName() for f in df.schema.fields}
+    return all(
+        kinds.get(c) in ("long", "integer", "short", "byte") for c in cols
+    )
+
+
+def arrays(table, **dtypes):
+    """``{column: numpy array}`` of a fetched table cast to ``dtypes``, or
+    None when any of those columns holds a null: the numpy kernels assume
+    none, and the distributed plans define what a null id or weight does."""
+    if any(table.column(c).null_count for c in dtypes):
+        return None
+    return {
+        c: table.column(c).to_numpy().astype(dt, copy=False)
+        for c, dt in dtypes.items()
+    }
+
+
+def positions(ids, values):
+    """``(idx, found)``: where each of ``values`` sits in the sorted int64
+    array ``ids``, and whether it is there at all (an edge endpoint
+    outside the vertex table is not — it joins nothing). Safe on an empty
+    ``ids``."""
+    import numpy as np
+
+    idx = np.searchsorted(ids, values)
+    if len(ids) == 0:
+        return idx, np.zeros(len(values), dtype=bool)
+    found = (idx < len(ids)) & (ids[np.minimum(idx, len(ids) - 1)] == values)
+    return idx, found
