@@ -153,14 +153,10 @@ class BetweennessCentrality:
             and ek.get(SRC) in ints
             and ek.get(DST) in ints
         ):
-            vv, mv = checkpoint_observed(
-                g.vertices.select(ID), __n=F.count(F.lit(1))
-            )
-            if (
-                0
-                < (me["__n"] or 0) + (mv["__n"] or 0)
-                <= self.batch_finish
-            ):
+            # a plain count probe: above the bound a vertex checkpoint
+            # would be a wasted full write
+            vv = g.vertices.select(ID)
+            if 0 < (me["__n"] or 0) + vv.count() <= self.batch_finish:
                 return (
                     vv.withColumn("__g", F.lit(0))
                     .groupBy("__g")

@@ -32,7 +32,7 @@ from pyspark_graph_spark.operators.pregel import Pregel
 from pyspark_graph_spark.util import (
     arrays,
     checkpoint_observed,
-    fetch_bounded,
+    fetch_bounded_all,
     int_columns,
     positions,
 )
@@ -106,8 +106,8 @@ class ConnectedComponents:
     hard cap is not enough.
 
     ``batch_finish``: while vertices + edges fit this many rows, both are
-    fetched with one limited Arrow collect each and the same rounds
-    replay in numpy in the driver (``_min_label_kernel``); 0 disables."""
+    fetched in one limited Arrow collect and the same rounds replay in
+    numpy in the driver (``_min_label_kernel``); 0 disables."""
 
     def __init__(
         self,
@@ -138,14 +138,11 @@ class ConnectedComponents:
             and int_columns(edges, SRC, DST)
         ):
             return None
-        e = fetch_bounded(edges, self.batch_finish)
-        v = None if e is None else fetch_bounded(
-            verts, self.batch_finish - e.num_rows
-        )
-        if v is None:
+        t = fetch_bounded_all(self.batch_finish, edges, verts)
+        if t is None:
             return None
-        e = arrays(e, **{SRC: np.int64, DST: np.int64})
-        v = arrays(v, **{ID: np.int64})
+        e = arrays(t[0], **{SRC: np.int64, DST: np.int64})
+        v = arrays(t[1], **{ID: np.int64})
         if e is None or v is None:
             return None
         hard = (
@@ -297,7 +294,8 @@ class AlternatingConnectedComponents:
     with a union-find instead of the O(log n) alternating-star fixpoint —
     provably identical output (both paths label every component by its
     minimum id; equality is pinned by test), and no ``rounds_run``. The
-    vertex table is fetched too while edges + vertices fit; otherwise the
+    vertex table rides the same collect while edges + vertices fit;
+    otherwise the deduped pairs are checkpointed, and if they fit the
     unlabelled vertices come from a Spark anti-join. Above the bound the
     distributed fixpoint runs, and after any round whose live edge list
     fits the bound the driver union-find finishes the contraction tail
@@ -334,13 +332,13 @@ class AlternatingConnectedComponents:
         # the guard exists for the day that stops being true.
         self.require_convergence = require_convergence
 
-    def _finish(self, g: Graph, pairs, vertex_budget: int | None = None):
+    def _finish(self, g: Graph, pairs, verts=None):
         """Labels from a fetched loop-free edge table by the driver
         union-find. As in the distributed read, an edge vertex is labelled
         by its component's minimum and every vertex no edge labels (roots,
-        isolated vertices) labels itself — fetched and joined in the driver
-        while the vertex table fits ``vertex_budget``, else by a Spark
-        anti-join against a local membership table."""
+        isolated vertices) labels itself — in the driver when the vertex
+        table was fetched too (``verts``), else by a Spark anti-join
+        against a local membership table."""
         import numpy as np
 
         mem = _batch_union_find(pairs.to_pandas())
@@ -348,14 +346,11 @@ class AlternatingConnectedComponents:
         ids = mem[ID].to_numpy(dtype=np.int64)
         comp = mem[COMPONENT].to_numpy(dtype=np.int64)
         spark = g.vertices.sparkSession
-        verts = g.vertices.select(ID)
-        v = None
-        if vertex_budget is not None and int_columns(verts, ID):
-            v = fetch_bounded(verts, vertex_budget)
-        if v is not None:
-            v = arrays(v, **{ID: np.int64})
+        v = None if verts is None else arrays(verts, **{ID: np.int64})
         if v is None:
-            return _with_unlabelled(verts, _local_components(spark, ids, comp))
+            return _with_unlabelled(
+                g.vertices.select(ID), _local_components(spark, ids, comp)
+            )
         rest = v[ID][~np.isin(v[ID], ids)]
         return _local_components(
             spark, np.concatenate([ids, rest]), np.concatenate([comp, rest])
@@ -363,15 +358,14 @@ class AlternatingConnectedComponents:
 
     def run(self, g: Graph) -> DataFrame:
         pairs = g.edges.select(SRC, DST).filter(F.col(SRC) != F.col(DST))
+        verts = g.vertices.select(ID)
         batch = bool(self.batch_finish) and int_columns(pairs, SRC, DST)
-        if batch:
-            # front path: the raw pairs fit, so no round runs and no
-            # rounds_run is set
-            front = fetch_bounded(pairs, self.batch_finish)
+        if batch and int_columns(verts, ID):
+            # front path: pairs and vertices fit together in one fetch, so
+            # no round runs and no rounds_run is set
+            front = fetch_bounded_all(self.batch_finish, pairs, verts)
             if front is not None:
-                return self._finish(
-                    g, front, self.batch_finish - front.num_rows
-                )
+                return self._finish(g, *front)
         # deduped loop-free pairs (large-star symmetrizes per round); the
         # batch-bound count AND the initial content fingerprint ride the
         # materializing job itself (checkpoint_observed)
@@ -393,7 +387,11 @@ class AlternatingConnectedComponents:
         # round's own checkpoint job (checkpoint_observed), not a
         # separate action.
         fingerprint = (m["__x"], m["__n"])
-        handoff = tail_fits(m)
+        if tail_fits(m):
+            # the deduped pairs fit where the raw pairs and vertices did
+            # not: still no round, and the vertex side stays in Spark
+            return self._finish(g, edges.toArrow())
+        handoff = False
         converged = False
         rounds = 0
         budget = self.max_iterations

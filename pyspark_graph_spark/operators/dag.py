@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
-from pyspark_graph_spark.util import checkpoint_observed
+from pyspark_graph_spark.util import checkpoint_observed, positions
 
 LAYER = "layer"
 
@@ -173,14 +173,9 @@ def _batch_critical_path(max_iterations: int):
         w = e_pdf["__w"].to_numpy(dtype=np.float64)
         if np.any(np.isnan(w)):
             raise RuntimeError("__CP_BATCH_DEGENERATE__")
-        s_idx = np.searchsorted(ids, src)
-        d_idx = np.searchsorted(ids, dst)
-        ok = (
-            (s_idx < len(ids))
-            & (ids[np.minimum(s_idx, len(ids) - 1)] == src)
-            & (d_idx < len(ids))
-            & (ids[np.minimum(d_idx, len(ids) - 1)] == dst)
-        )
+        s_idx, s_ok = positions(ids, src)
+        d_idx, d_ok = positions(ids, dst)
+        ok = s_ok & d_ok
         s_idx, d_idx, w = s_idx[ok], d_idx[ok], w[ok]
         dist = np.zeros(len(ids), dtype=np.float64)
         for _ in range(max_iterations):
@@ -239,14 +234,10 @@ class CriticalPath:
             and ek.get(SRC) in ints
             and ek.get(DST) in ints
         ):
-            verts, mv = checkpoint_observed(
-                g.vertices.select(ID), __n=F.count(F.lit(1))
-            )
-            if (
-                0
-                < (mv["__n"] or 0) + (me["__n"] or 0)
-                <= self.batch_finish
-            ):
+            # a plain count probe: above the bound a vertex checkpoint
+            # would be a wasted full write
+            verts = g.vertices.select(ID)
+            if 0 < verts.count() + (me["__n"] or 0) <= self.batch_finish:
                 out = (
                     verts.withColumn("__g", F.lit(0))
                     .groupBy("__g")

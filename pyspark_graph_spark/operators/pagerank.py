@@ -28,36 +28,46 @@ from pyspark.sql import functions as F
 
 from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
-from pyspark_graph_spark.util import arrays, fetch_bounded, int_columns, positions
+from pyspark_graph_spark.util import (
+    arrays,
+    fetch_bounded,
+    fetch_bounded_all,
+    int_columns,
+    positions,
+)
 
 PAGERANK = "pagerank"
 
 # Bounded-batch finish: same contract and ulp story as the SVD/ALS
-# kernels (operators/svd.py module note). While vertices + edges fit
-# batch_finish, the driver fetches both with one limited Arrow collect
-# each (util.fetch_bounded) and replays the identical double algebra in
-# numpy: per edge (pr(src) * w) / deg(src), per vertex
+# kernels (operators/svd.py module note). While vertices + symmetric
+# edges fit batch_finish, the driver fetches both in one limited Arrow
+# collect (util.fetch_bounded_all) and replays the identical double
+# algebra in numpy: per edge (pr(src) * w) / deg(src), per vertex
 # (1-α)·reset + α·(sum of contributions, 0 when none), the same
 # iteration count and the same optional L1-delta early stop. The result
-# is a local DataFrame, so a small request costs two Spark jobs in all.
+# is a local DataFrame, so a small request costs two Spark jobs in all:
+# the fetch, and the Arrow collect that reads the result.
 # Inputs the kernel cannot replay exactly (a zero out-weight sum, whose
 # distributed division raises under ANSI; nulls) take the distributed
 # plan. Above the bound the per-iteration join/aggregate plan is
 # unchanged and remains the only 100 TB path.
 
 
-def _fetch_edges(g: Graph, w, bound: int):
-    """``(src, dst, w)`` arrays of ``g.symmetric_edges`` while they fit
-    ``bound`` rows, else None. An undirected graph is fetched once and
-    mirrored in numpy: the union's rows from one scan of the edge table."""
+def _edge_frame(g: Graph, w) -> DataFrame | None:
+    """``(src, dst, __w)`` of ``g.edges``, or None for non-integral ids,
+    which the int64 kernels do not take."""
+    edges = g.edges.select(SRC, DST, w.alias("__w"))
+    return edges if int_columns(edges, SRC, DST) else None
+
+
+def _edge_arrays(g: Graph, t):
+    """``(src, dst, w)`` arrays of ``g.symmetric_edges`` from a fetched
+    ``_edge_frame`` table, or None on a null. An undirected graph is
+    fetched once and mirrored in numpy: the union's rows from one scan of
+    the edge table."""
     import numpy as np
 
-    edges = g.edges.select(SRC, DST, w.alias("__w"))
-    if not int_columns(edges, SRC, DST):
-        return None
-    t = fetch_bounded(edges, bound if g.directed else bound // 2)
-    if t is not None:
-        t = arrays(t, **{SRC: np.int64, DST: np.int64, "__w": np.float64})
+    t = arrays(t, **{SRC: np.int64, DST: np.int64, "__w": np.float64})
     if t is None:
         return None
     src, dst, wt = t[SRC], t[DST], t["__w"]
@@ -193,14 +203,21 @@ class PageRank:
         import numpy as np
         import pyarrow as pa
 
-        if not (self.batch_finish and int_columns(verts, ID)):
+        edges = _edge_frame(g, w)
+        if not (
+            self.batch_finish and edges is not None and int_columns(verts, ID)
+        ):
             return None
-        e = _fetch_edges(g, w, self.batch_finish)
-        if e is None:
+        t = fetch_bounded_all(self.batch_finish, edges, verts)
+        if t is None:
             return None
-        v = fetch_bounded(verts, self.batch_finish - len(e[0]))
-        v = None if v is None else arrays(v, **{ID: np.int64, "__reset": np.float64})
-        if v is None:
+        e, v = t
+        # the bound counts the symmetric edge rows the kernel iterates on
+        if (1 if g.directed else 2) * e.num_rows + v.num_rows > self.batch_finish:
+            return None
+        e = _edge_arrays(g, e)
+        v = arrays(v, **{ID: np.int64, "__reset": np.float64})
+        if e is None or v is None:
             return None
         out = _pagerank_kernel(
             v[ID], v["__reset"], *e,
@@ -324,9 +341,11 @@ def parallel_personalized_pagerank(
     w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
     starts = [int(s) for s in dict.fromkeys(sources)]
     # bounded-batch finish (module note); the sources count toward the bound
-    e = None
-    if batch_finish >= len(sources):
-        e = _fetch_edges(g, w, batch_finish - len(sources))
+    edges, e = _edge_frame(g, w), None
+    if edges is not None and batch_finish >= len(sources):
+        bound = batch_finish - len(sources)
+        e = fetch_bounded(edges, bound if g.directed else bound // 2)
+        e = None if e is None else _edge_arrays(g, e)
     out = None if e is None else _ppr_multi_kernel(starts, *e, alpha, max_iterations)
     if out is not None:
         return spark.createDataFrame(pa.table(out))

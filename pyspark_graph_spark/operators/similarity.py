@@ -22,6 +22,18 @@ Skew note: a vertex of degree d contributes d² candidate pairs. For power-law
 graphs cap the hub fan-out with ``max_degree`` (drops hubs from the common-
 neighbor expansion — standard practice in MinHash/similarity pipelines) or
 rely on AQE skew splitting.
+
+Driver path: under ``strategy="auto"`` the edge pairs are fetched with one
+limited Arrow collect (``util.fetch_bounded``) while they fit ``BATCH_ROWS``
+rows, and the index plan is replayed in numpy: symmetrize (undirected),
+dedup (id, neighbour), drop hub neighbours, expand the pairs inside each
+neighbour group and count them. The score and the ``min_similarity``
+filter run in numpy too, and the result is a local DataFrame of the final
+columns — one Spark job in, one Arrow collect out. The second bound is
+the candidate wedges Σ C(k, 2) over the neighbour groups, counted from the
+fetched arrays, so checking it costs no job. Over either bound, and for
+null endpoints or non-integral ids, ``auto`` takes the Spark plans below,
+and only then pays their vertex-count and distinct-edge probes.
 """
 
 from __future__ import annotations
@@ -31,6 +43,17 @@ from pyspark.sql import functions as F
 
 from pyspark_graph_spark.constants import ADJ, DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
+from pyspark_graph_spark.util import (
+    arrays,
+    dense_pairs,
+    fetch_bounded,
+    int_columns,
+    later_pairs,
+)
+
+# edge rows ``auto`` scores in the driver, and candidate wedges it may
+# expand there (the batch bound of PageRank, CC and TriangleCount)
+BATCH_ROWS = 1_000_000
 
 
 def _pair_common_counts_allpairs(g: Graph) -> DataFrame:
@@ -202,7 +225,8 @@ def _choose_pairs(
 
     ``index``: inverted-index join (sparse graphs — output Σ deg² bounded).
     ``allpairs``: broadcast self-join + array_intersect (dense small-V).
-    ``auto``: allpairs when the vertex count (one cheap count) is small.
+    ``auto`` (above the driver bounds): allpairs when the vertex count (one
+    cheap count) is small, complement on dense graphs, else index.
     """
     if strategy == "auto":
         if max_degree is not None:
@@ -229,11 +253,53 @@ def _choose_pairs(
     raise ValueError(f"unknown strategy {strategy!r}")
 
 
-class JaccardSimilarity:
-    """|A∩B| / |A∪B| over neighbor sets, for pairs with ≥1 common neighbor.
+def _driver_pair_counts(g: Graph, max_degree: int | None):
+    """``(ids, src, dst, common, src_degree, dst_degree)``: the index
+    plan's pair counts as numpy arrays, ``src``/``dst`` as indexes into
+    the sorted ``ids``, from one limited Arrow fetch of the edge pairs —
+    or None when the input is over either driver bound, has a null
+    endpoint (a null neighbour still counts toward the Spark plan's
+    degrees) or non-integral ids."""
+    import numpy as np
 
-    Result: (src, dst, jaccard double), src < dst.
-    """
+    pairs = g.edges.select(SRC, DST)
+    if not int_columns(pairs, SRC, DST):
+        return None
+    t = fetch_bounded(pairs, BATCH_ROWS)
+    e = None if t is None else arrays(t, **{SRC: np.int64, DST: np.int64})
+    if e is None:
+        return None
+    src, dst = e[SRC], e[DST]
+    if not g.directed:
+        src, dst = np.concatenate([src, dst]), np.concatenate([dst, src])
+    # distinct (id, neighbour) rows
+    ids, a, nb = dense_pairs(src, dst)
+    n = len(ids)
+    deg = np.bincount(a, minlength=n)
+    if max_degree is not None:
+        keep = deg[nb] <= max_degree
+        a, nb = a[keep], nb[keep]
+    # neighbour groups, ascending id inside each: every member pairs with
+    # the later members of its group, so each pair comes out with a < b
+    order = np.lexsort((a, nb))
+    a, nb = a[order], nb[order]
+    later = np.searchsorted(nb, nb, side="right") - np.arange(len(a)) - 1
+    if later.sum() > BATCH_ROWS:
+        return None
+    first, second = later_pairs(later)
+    pair, common = np.unique(a[first] * n + a[second], return_counts=True)
+    s, d = pair // n, pair % n
+    return ids, s, d, common, deg[s], deg[d]
+
+
+class _NeighborhoodScore:
+    """One score over the pairs that share a neighbour: ``score(common,
+    src_degree, dst_degree, least)`` holds for Spark columns and numpy
+    arrays alike, so the driver path and the Spark plans compute it with
+    the same double algebra."""
+
+    column: str
+    both_directions = False
 
     def __init__(
         self,
@@ -245,19 +311,72 @@ class JaccardSimilarity:
         self.max_degree = max_degree
         self.strategy = strategy
 
+    def _run_driver(self, g: Graph) -> DataFrame | None:
+        import numpy as np
+        import pyarrow as pa
+        from pyspark.sql.types import DoubleType, StructField, StructType
+
+        counts = _driver_pair_counts(g, self.max_degree)
+        if counts is None:
+            return None
+        ids, s, d, common, sd, dd = counts
+        if self.both_directions:
+            s, d = np.concatenate([s, d]), np.concatenate([d, s])
+            sd, dd = np.concatenate([sd, dd]), np.concatenate([dd, sd])
+            common = np.concatenate([common, common])
+        score = self.score(common, sd, dd, np.minimum)
+        keep = score >= self.min_similarity
+        # ids typed as the Spark plan's, which reads them from symmetric_edges
+        id_type = g.symmetric_edges.schema[SRC].dataType
+        schema = StructType([
+            StructField(SRC, id_type),
+            StructField(DST, id_type),
+            StructField(self.column, DoubleType()),
+        ])
+        return g.edges.sparkSession.createDataFrame(
+            pa.table([ids[s[keep]], ids[d[keep]], score[keep]], names=schema.names),
+            schema,
+        )
+
     def run(self, g: Graph) -> DataFrame:
+        if self.strategy == "auto":
+            out = self._run_driver(g)
+            if out is not None:
+                return out
         pairs = _choose_pairs(g, self.max_degree, self.strategy)
-        sim = (
-            F.col("common")
-            / (F.col("src_degree") + F.col("dst_degree") - F.col("common"))
-        ).alias("jaccard")
-        out = pairs.select(SRC, DST, sim)
+        if self.both_directions:
+            pairs = pairs.unionByName(
+                pairs.select(
+                    F.col(DST).alias(SRC),
+                    F.col(SRC).alias(DST),
+                    "common",
+                    F.col("dst_degree").alias("src_degree"),
+                    F.col("src_degree").alias("dst_degree"),
+                )
+            )
+        score = self.score(
+            F.col("common"), F.col("src_degree"), F.col("dst_degree"), F.least
+        )
+        out = pairs.select(SRC, DST, score.alias(self.column))
         if self.min_similarity > 0.0:
-            out = out.filter(F.col("jaccard") >= self.min_similarity)
+            out = out.filter(F.col(self.column) >= self.min_similarity)
         return out
 
 
-class NeighborhoodContainment:
+class JaccardSimilarity(_NeighborhoodScore):
+    """|A∩B| / |A∪B| over neighbor sets, for pairs with ≥1 common neighbor.
+
+    Result: (src, dst, jaccard double), src < dst.
+    """
+
+    column = "jaccard"
+
+    @staticmethod
+    def score(common, src_degree, dst_degree, least):
+        return common / (src_degree + dst_degree - common)
+
+
+class NeighborhoodContainment(_NeighborhoodScore):
     """|A∩B| / |A| — the asymmetric containment of src's neighborhood in
     dst's. Emitted in **both directions** for every unordered pair with a
     common neighbor (containment is direction-dependent). Useful for
@@ -266,54 +385,22 @@ class NeighborhoodContainment:
     Result: (src, dst, containment double).
     """
 
-    def __init__(
-        self,
-        min_similarity: float = 0.0,
-        max_degree: int | None = None,
-        strategy: str = "auto",
-    ):
-        self.min_similarity = min_similarity
-        self.max_degree = max_degree
-        self.strategy = strategy
+    column = "containment"
+    both_directions = True
 
-    def run(self, g: Graph) -> DataFrame:
-        pairs = _choose_pairs(g, self.max_degree, self.strategy)
-        fwd = pairs.select(
-            SRC, DST, (F.col("common") / F.col("src_degree")).alias("containment")
-        )
-        rev = pairs.select(
-            F.col(DST).alias(SRC),
-            F.col(SRC).alias(DST),
-            (F.col("common") / F.col("dst_degree")).alias("containment"),
-        )
-        out = fwd.unionByName(rev)
-        if self.min_similarity > 0.0:
-            out = out.filter(F.col("containment") >= self.min_similarity)
-        return out
+    @staticmethod
+    def score(common, src_degree, dst_degree, least):
+        return common / src_degree
 
 
-class OverlapCoefficient:
+class OverlapCoefficient(_NeighborhoodScore):
     """|A∩B| / min(|A|, |B|) over neighbor sets, pairs with ≥1 common neighbor.
 
     Result: (src, dst, overlap double), src < dst.
     """
 
-    def __init__(
-        self,
-        min_similarity: float = 0.0,
-        max_degree: int | None = None,
-        strategy: str = "auto",
-    ):
-        self.min_similarity = min_similarity
-        self.max_degree = max_degree
-        self.strategy = strategy
+    column = "overlap"
 
-    def run(self, g: Graph) -> DataFrame:
-        pairs = _choose_pairs(g, self.max_degree, self.strategy)
-        sim = (
-            F.col("common") / F.least("src_degree", "dst_degree")
-        ).alias("overlap")
-        out = pairs.select(SRC, DST, sim)
-        if self.min_similarity > 0.0:
-            out = out.filter(F.col("overlap") >= self.min_similarity)
-        return out
+    @staticmethod
+    def score(common, src_degree, dst_degree, least):
+        return common / least(src_degree, dst_degree)

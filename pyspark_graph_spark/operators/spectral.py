@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
-from pyspark_graph_spark.util import checkpoint_observed
+from pyspark_graph_spark.util import checkpoint_observed, positions
 
 # Bounded-batch finish (round 12, guide §2.4): same contract and ulp
 # story as the SVD/ALS/PageRank kernels (operators/svd.py module note).
@@ -50,14 +50,9 @@ def _eigen_batch_kernel(iterations: int):
         dst = e_pdf[DST].to_numpy(dtype=np.int64)
         eorder = np.lexsort((dst, src))
         src, dst = src[eorder], dst[eorder]
-        s_idx = np.searchsorted(ids, src)
-        d_idx = np.searchsorted(ids, dst)
-        ok = (
-            (s_idx < len(ids))
-            & (ids[np.minimum(s_idx, len(ids) - 1)] == src)
-            & (d_idx < len(ids))
-            & (ids[np.minimum(d_idx, len(ids) - 1)] == dst)
-        )
+        s_idx, s_ok = positions(ids, src)
+        d_idx, d_ok = positions(ids, dst)
+        ok = s_ok & d_ok
         s_idx, d_idx = s_idx[ok], d_idx[ok]
         x = np.ones(len(ids), dtype=np.float64)
         for _ in range(iterations):

@@ -22,8 +22,10 @@ from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
 from pyspark_graph_spark.util import (
     arrays,
+    dense_pairs,
     fetch_bounded,
     int_columns,
+    later_pairs,
     match_structure,
     order_edges,
 )
@@ -50,11 +52,8 @@ def _count_triangles(src, dst) -> int:
     hi = np.maximum(src, dst)[loop_free]
     if len(lo) == 0:
         return 0
-    ids, inv = np.unique(np.concatenate([lo, hi]), return_inverse=True)
+    ids, a, b = dense_pairs(lo, hi)
     n = len(ids)
-    # dedup on dense indexes; n * n stays far below 2^63 at any batch size
-    key = np.unique(inv[: len(lo)] * n + inv[len(lo):])
-    a, b = key // n, key % n
     deg = np.bincount(np.concatenate([a, b]), minlength=n)
     rank = np.empty(n, dtype=np.int64)
     rank[np.lexsort((np.arange(n), deg))] = np.arange(n)
@@ -71,10 +70,8 @@ def _count_triangles(src, dst) -> int:
         np.cumsum(later), np.arange(0, later.sum(), _WEDGE_BLOCK), side="right"
     )
     for start, stop in zip(bounds, list(bounds[1:]) + [len(u)]):
-        c = later[start:stop]
-        first = np.repeat(np.arange(start, stop), c)
-        step = np.arange(len(first)) - np.repeat(np.cumsum(c) - c, c) + 1
-        q = v[first] * n + v[first + step]
+        first, second = later_pairs(later[start:stop], start)
+        q = v[first] * n + v[second]
         pos = np.minimum(np.searchsorted(edge_keys, q), len(edge_keys) - 1)
         total += int(np.count_nonzero(edge_keys[pos] == q))
     return total

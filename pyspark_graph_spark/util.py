@@ -4,7 +4,8 @@ The join/union/motif helpers are pure plan builders — no actions, no
 caching. They compose with Catalyst optimization (join reordering,
 pushdown) because they only use the public DataFrame API. The
 bounded-batch helpers at the end (``checkpoint_observed``,
-``fetch_bounded``) are the actions the iterative operators share.
+``fetch_bounded``, ``fetch_bounded_all``) are the actions the iterative
+operators share.
 """
 
 from __future__ import annotations
@@ -134,8 +135,9 @@ def fetch_bounded(df: DataFrame, bound: int):
 
     This is the bounded-batch gate: below the bound an operator finishes
     in the driver on the fetched table and returns
-    ``createDataFrame(table)`` (a ``LocalRelation``, so reading the result
-    launches no further job). Above it the probe costs one job that stops
+    ``createDataFrame(table)`` (a local relation or local Arrow batches,
+    so reading the result is one Arrow collect and no scan or shuffle).
+    Above it the probe costs one job that stops
     at ``bound + 1`` rows, and the caller runs its distributed plan.
     ``coalesce(1)`` puts the limit in the scanning task itself: above the
     bound the probe then reads up to ``bound + 1`` rows in one task and
@@ -146,6 +148,31 @@ def fetch_bounded(df: DataFrame, bound: int):
     works under Spark Connect."""
     table = df.coalesce(1).limit(bound + 1).toArrow()
     return None if table.num_rows > bound else table
+
+
+def fetch_bounded_all(bound: int, *dfs: DataFrame):
+    """``[pyarrow.Table]``, one per frame, or None when the frames hold
+    more than ``bound`` rows together — ``fetch_bounded`` over a tagged
+    ``unionByName``, so a driver finish that needs several inputs still
+    costs one collect. The tables carry each frame's own columns."""
+    import pyarrow.compute as pc
+
+    tagged = [
+        df.withColumn("__fetch_tag", F.lit(i)) for i, df in enumerate(dfs)
+    ]
+    table = fetch_bounded(
+        reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), tagged
+        ),
+        bound,
+    )
+    if table is None:
+        return None
+    tag = table.column("__fetch_tag")
+    return [
+        table.filter(pc.equal(tag, i)).select(df.columns)
+        for i, df in enumerate(dfs)
+    ]
 
 
 def int_columns(df: DataFrame, *cols: str) -> bool:
@@ -181,3 +208,27 @@ def positions(ids, values):
         return idx, np.zeros(len(values), dtype=bool)
     found = (idx < len(ids)) & (ids[np.minimum(idx, len(ids) - 1)] == values)
     return idx, found
+
+
+def dense_pairs(src, dst):
+    """``(ids, a, b)``: the distinct ``(src, dst)`` pairs of two int64
+    arrays as indexes into ``ids``, the sorted ids of their endpoints,
+    ordered by ``(a, b)``."""
+    import numpy as np
+
+    ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    n = len(ids)
+    # n * n stays far below 2^63 at any batch size
+    key = np.unique(inv[: len(src)] * n + inv[len(src):])
+    return ids, key // n, key % n
+
+
+def later_pairs(later, start: int = 0):
+    """``(first, second)`` index arrays pairing each position ``i`` (from
+    ``start``) with the ``later[i]`` positions after it — the pairs inside
+    sorted runs, when ``later[i]`` counts the rest of ``i``'s run."""
+    import numpy as np
+
+    first = np.repeat(np.arange(start, start + len(later)), later)
+    step = np.arange(len(first)) - np.repeat(np.cumsum(later) - later, later)
+    return first, first + step + 1
