@@ -11,11 +11,14 @@ Two implementations, as in the reference (connected_components.py:18-92):
 - :class:`AlternatingConnectedComponents` — the large-star/small-star
   alternation of Kiveris et al., "Connected Components in MapReduce and
   Beyond" (SOCC'14). O(log n) rounds independent of diameter — this is the
-  100 TB-scale implementation. Each round is two window aggregations +
-  dedup, checkpointed; convergence is a fingerprint probe on the
-  checkpointed edge list: ``bit_xor`` of per-row hashes plus a row count.
-  (A plain sum of 64-bit hash ids would overflow; XOR is the
-  overflow-free multiset fingerprint — do not "simplify" it back to sum.)
+  100 TB-scale implementation. Each star takes per-vertex minima with a
+  hash aggregate and joins them back to the edges (broadcast while they
+  fit ``spark.sql.autoBroadcastJoinThreshold``), so a round sorts nothing
+  and shuffles the edge list once, to dedup it before its checkpoint.
+  Convergence is a fingerprint probe on the checkpointed edge list:
+  ``bit_xor`` of per-row hashes plus a row count. (A plain sum of 64-bit
+  hash ids would overflow; XOR is the overflow-free multiset fingerprint —
+  do not "simplify" it back to sum.)
 
 Both return ``(id, component)`` where ``component`` is the minimum vertex id
 in the component; isolated vertices are their own component.
@@ -23,7 +26,7 @@ in the component; isolated vertices are their own component.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyspark_graph_spark.constants import DST, ID, MSG, SRC, STATE
@@ -31,8 +34,11 @@ from pyspark_graph_spark.graph import Graph
 from pyspark_graph_spark.operators.pregel import Pregel
 from pyspark_graph_spark.util import (
     arrays,
+    broadcast_if_small,
     checkpoint_observed,
+    fetch_bounded,
     fetch_bounded_all,
+    fetch_tagged,
     int_columns,
     positions,
 )
@@ -203,44 +209,69 @@ class ConnectedComponents:
         return out
 
 
+def _vertex_min(edges: DataFrame) -> DataFrame:
+    """``(src, __m)``: the smallest ``dst`` of every ``src``, checkpointed
+    with its row count observed, and broadcast while that fits."""
+    mins, m = checkpoint_observed(
+        edges.groupBy(SRC).agg(F.min(DST).alias("__m")),
+        __n=F.count(F.lit(1)),
+    )
+    return broadcast_if_small(mins, m["__n"])
+
+
 def _large_star(edges: DataFrame) -> DataFrame:
     """Connect every strictly-larger neighbor of u to m(u)=min(Γ(u) ∪ {u}).
 
     Neighborhoods are taken over both directions (input is symmetrized here
-    because small-star emits oriented edges). One shuffle (window over src).
-    """
+    because small-star emits oriented edges). The output may repeat an
+    edge: the round's small star dedups."""
     sym = edges.unionByName(
         edges.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST))
-    ).distinct()
-    w = Window.partitionBy(SRC)
-    m = F.least(F.min(DST).over(w), F.col(SRC))
+    )
     return (
-        sym.withColumn("__m", m)
-        .filter(F.col(DST) > F.col(SRC))
-        .select(F.col(DST).alias(SRC), F.col("__m").alias(DST))
-        .filter(F.col(SRC) != F.col(DST))
-        .distinct()
+        sym.filter(F.col(DST) > F.col(SRC))
+        .join(_vertex_min(sym), on=SRC)
+        .select(
+            F.col(DST).alias(SRC), F.least("__m", F.col(SRC)).alias(DST)
+        )
     )
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
     """Orient edges large→small, then connect u and all its (smaller)
-    neighbors to its minimum neighbor."""
+    neighbors to its minimum neighbor. The one dedup of the round."""
     oriented = edges.select(
         F.greatest(SRC, DST).alias(SRC), F.least(SRC, DST).alias(DST)
-    ).filter(F.col(SRC) != F.col(DST)).distinct()
-    w = Window.partitionBy(SRC)
-    m = F.min(DST).over(w)
-    with_m = oriented.withColumn("__m", m)
+    ).filter(F.col(SRC) != F.col(DST))
+    mins = _vertex_min(oriented)
     # neighbors v (all < u) point at m ...
-    nbrs = with_m.select(F.col(DST).alias(SRC), F.col("__m").alias(DST))
+    nbrs = oriented.join(mins, on=SRC).select(
+        F.col(DST).alias(SRC), F.col("__m").alias(DST)
+    )
     # ... and u itself points at m
-    selfe = with_m.select(SRC, F.col("__m").alias(DST)).distinct()
     return (
-        nbrs.unionByName(selfe)
-        .filter(F.col(SRC) != F.col(DST))
+        nbrs.filter(F.col(SRC) != F.col(DST))
+        .unionByName(mins.select(SRC, F.col("__m").alias(DST)))
         .distinct()
     )
+
+
+def _fingerprint() -> dict:
+    return {
+        "__x": F.bit_xor(F.xxhash64(SRC, DST)),
+        "__n": F.count(F.lit(1)),
+    }
+
+
+def _reproduces(pairs: DataFrame, fingerprint) -> bool:
+    """Whether the deduped ``pairs`` have ``fingerprint``: whether a first
+    round over them left them as they were. A round's edges all point
+    down (src > dst), so while one pair points up it cannot have; only
+    otherwise are the pairs deduped and fingerprinted."""
+    if not pairs.filter(F.col(SRC) < F.col(DST)).isEmpty():
+        return False
+    row = pairs.distinct().agg(*_fingerprint().values()).first()
+    return (row[0], row[1]) == fingerprint
 
 
 def _with_unlabelled(verts: DataFrame, membership: DataFrame) -> DataFrame:
@@ -295,13 +326,14 @@ class AlternatingConnectedComponents:
     provably identical output (both paths label every component by its
     minimum id; equality is pinned by test), and no ``rounds_run``. The
     vertex table rides the same collect while edges + vertices fit;
-    otherwise the deduped pairs are checkpointed, and if they fit the
-    unlabelled vertices come from a Spark anti-join. Above the bound the
-    distributed fixpoint runs, and after any round whose live edge list
-    fits the bound the driver union-find finishes the contraction tail
-    (the vertex side stays a Spark anti-join there). 1M edges x 16 B ≈
-    16 MB in the driver. 0 disables; the distributed fixpoint remains the
-    asymptotic path for billion-edge graphs."""
+    otherwise, unless the pairs alone filled that collect, they are
+    fetched alone, and if they fit the unlabelled vertices come from a
+    Spark anti-join. Above the bound the distributed fixpoint runs, its
+    first round straight from the loop-free pairs, and after any round
+    whose live edge list fits the bound the driver union-find finishes
+    the contraction tail, fetched with the vertex table the same way. 1M
+    edges x 16 B ≈ 16 MB in the driver. 0 disables; the distributed
+    fixpoint remains the asymptotic path for billion-edge graphs."""
 
     def __init__(
         self,
@@ -360,20 +392,20 @@ class AlternatingConnectedComponents:
         pairs = g.edges.select(SRC, DST).filter(F.col(SRC) != F.col(DST))
         verts = g.vertices.select(ID)
         batch = bool(self.batch_finish) and int_columns(pairs, SRC, DST)
-        if batch and int_columns(verts, ID):
+        # the vertex table rides each fetch when the kernel can take it
+        extra = [verts] if int_columns(verts, ID) else []
+        if batch:
             # front path: pairs and vertices fit together in one fetch, so
-            # no round runs and no rounds_run is set
-            front = fetch_bounded_all(self.batch_finish, pairs, verts)
+            # no round runs and no rounds_run is set; if only the pairs
+            # fit, the unlabelled vertices come from a Spark anti-join
+            front, seen = fetch_tagged(self.batch_finish, pairs, *extra)
+            # the pairs alone can fit only if the vertex table supplied
+            # some of the bound + 1 rows the joint fetch stopped at
+            if front is None and extra and seen[0] <= self.batch_finish:
+                front = fetch_bounded(pairs, self.batch_finish)
+                front = None if front is None else [front]
             if front is not None:
                 return self._finish(g, *front)
-        # deduped loop-free pairs (large-star symmetrizes per round); the
-        # batch-bound count AND the initial content fingerprint ride the
-        # materializing job itself (checkpoint_observed)
-        edges, m = checkpoint_observed(
-            pairs.distinct(),
-            __x=F.bit_xor(F.xxhash64(SRC, DST)),
-            __n=F.count(F.lit(1)),
-        )
 
         def tail_fits(m) -> bool:
             # contraction tail: once the live edge list fits the bound, the
@@ -385,25 +417,23 @@ class AlternatingConnectedComponents:
         # hash range, so sums would overflow ANSI arithmetic — XOR of row
         # hashes + count is overflow-free. The per-round probe rides each
         # round's own checkpoint job (checkpoint_observed), not a
-        # separate action.
-        fingerprint = (m["__x"], m["__n"])
-        if tail_fits(m):
-            # the deduped pairs fit where the raw pairs and vertices did
-            # not: still no round, and the vertex side stays in Spark
-            return self._finish(g, edges.toArrow())
+        # separate action. Round 1 reads the pairs as they are (the stars
+        # ignore repeats), so its "previous" fingerprint is the deduped
+        # pairs', computed only when it can match (_reproduces).
+        edges, fingerprint = pairs, None
         handoff = False
         converged = False
         rounds = 0
         budget = self.max_iterations
         while not handoff and rounds < budget:
             edges, m = checkpoint_observed(
-                _small_star(_large_star(edges)),
-                __x=F.bit_xor(F.xxhash64(SRC, DST)),
-                __n=F.count(F.lit(1)),
+                _small_star(_large_star(edges)), **_fingerprint()
             )
             rounds += 1
             new_fingerprint = (m["__x"], m["__n"])
-            if new_fingerprint == fingerprint:
+            if new_fingerprint == fingerprint or (
+                rounds == 1 and _reproduces(pairs, new_fingerprint)
+            ):
                 converged = True
                 break
             fingerprint = new_fingerprint
@@ -416,7 +446,8 @@ class AlternatingConnectedComponents:
                 budget = min(2 * budget, self.hard_max_iterations)
         self.rounds_run = rounds
         if handoff:
-            return self._finish(g, edges.toArrow())
+            tail = fetch_bounded_all(self.batch_finish, edges, *extra)
+            return self._finish(g, *(tail or [edges.toArrow()]))
         if self.require_convergence and not converged:
             raise RuntimeError(
                 "AlternatingConnectedComponents hit max_iterations="

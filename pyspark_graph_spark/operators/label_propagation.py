@@ -9,8 +9,9 @@ the **smallest label**, so results are reproducible and oracle-comparable.
 
 The deterministic mode is supplied to Pregel as a callable aggregation:
 ``(id, msg) -> (id, msg)`` via count-per-label + ``max_by`` over
-``(count, -label)`` — all built-in JVM aggregates, two shuffles per round on
-the same key (AQE reuses the exchange where possible).
+``(count, -label)`` — all built-in JVM aggregates. The messages are
+hash-partitioned on ``id`` once, which both aggregates' groupings share,
+so a round shuffles its messages once.
 """
 
 from __future__ import annotations
@@ -27,7 +28,12 @@ LABEL = "label"
 
 def deterministic_mode(messages: DataFrame) -> DataFrame:
     """Most frequent ``msg`` per ``id``; ties -> smallest ``msg``."""
-    counts = messages.groupBy(ID, MSG).agg(F.count(F.lit(1)).alias("__n"))
+    # one exchange on id serves the (id, msg) and the id grouping alike
+    counts = (
+        messages.repartition(ID)
+        .groupBy(ID, MSG)
+        .agg(F.count(F.lit(1)).alias("__n"))
+    )
     return counts.groupBy(ID).agg(
         F.max_by(MSG, F.struct(F.col("__n"), F.negative(MSG))).alias(MSG)
     )

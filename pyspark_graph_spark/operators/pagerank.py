@@ -10,15 +10,19 @@ engine extension. Semantics follow GraphX's classic formulation:
 GraphX's default; documented, and what the SQL oracle states). Undirected
 graphs contribute along both edge directions.
 
-Physical shape per iteration: ranks ⋈ edges on the source key, groupBy
-destination sum, left-join back to vertices (zero in-degree ⇒ baseline
-rank). Ranks and the degree table are checkpointed; iterations stop at
-``max_iterations`` or when the L1 delta drops below ``tolerance``.
+Physical shape (GraphX's, OSDI 2014): the edge table with its weights is
+checkpointed once and then only scanned; the |V|-row rank state moves to
+it. Each iteration joins the edges to the state (broadcast while it fits
+``spark.sql.autoBroadcastJoinThreshold``, util.broadcast_if_small), and
+one union + aggregate on the vertex id folds the contributions into the
+next state. The out-degree (weight sum) rides the state as ``__deg``, so
+a contribution is ``(pr * w) / deg`` as in the driver kernel.
+Iterations stop at ``max_iterations`` or when the L1 delta, observed on
+the state's own checkpoint, drops below ``tolerance``.
 
-Scale: two shuffles per iteration on the vertex id; co-partitioning edges
-by src (bucketing) makes the contribution join local. The degree table is
-computed once. This is the textbook distributed PageRank — the operator to
-benchmark a cluster's iterative-join path with.
+Scale: one shuffle of vertex-sized partial sums per iteration, plus the
+broadcast of the state. Above the broadcast threshold the plain join
+shuffles both sides; that is the path for vertex tables of any size.
 """
 
 from __future__ import annotations
@@ -30,6 +34,8 @@ from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
 from pyspark_graph_spark.util import (
     arrays,
+    broadcast_if_small,
+    checkpoint_observed,
     fetch_bounded,
     fetch_bounded_all,
     int_columns,
@@ -41,7 +47,9 @@ PAGERANK = "pagerank"
 # Bounded-batch finish: same contract and ulp story as the SVD/ALS
 # kernels (operators/svd.py module note). While vertices + symmetric
 # edges fit batch_finish, the driver fetches both in one limited Arrow
-# collect (util.fetch_bounded_all) and replays the identical double
+# collect (util.fetch_bounded_all): (src, dst), the weight only when
+# weighted, and the vertex ids; unit weights and the reset vector are
+# built in numpy. The kernel replays the identical double
 # algebra in numpy: per edge (pr(src) * w) / deg(src), per vertex
 # (1-α)·reset + α·(sum of contributions, 0 when none), the same
 # iteration count and the same optional L1-delta early stop. The result
@@ -53,24 +61,28 @@ PAGERANK = "pagerank"
 # unchanged and remains the only 100 TB path.
 
 
-def _edge_frame(g: Graph, w) -> DataFrame | None:
-    """``(src, dst, __w)`` of ``g.edges``, or None for non-integral ids,
-    which the int64 kernels do not take."""
-    edges = g.edges.select(SRC, DST, w.alias("__w"))
+def _edge_frame(g: Graph, weight_col) -> DataFrame | None:
+    """``(src, dst)`` of ``g.edges``, plus ``__w`` when weighted, or None
+    for non-integral ids, which the int64 kernels do not take."""
+    w = [F.col(weight_col).cast("double").alias("__w")] if weight_col else []
+    edges = g.edges.select(SRC, DST, *w)
     return edges if int_columns(edges, SRC, DST) else None
 
 
 def _edge_arrays(g: Graph, t):
     """``(src, dst, w)`` arrays of ``g.symmetric_edges`` from a fetched
-    ``_edge_frame`` table, or None on a null. An undirected graph is
-    fetched once and mirrored in numpy: the union's rows from one scan of
-    the edge table."""
+    ``_edge_frame`` table, or None on a null; an unweighted table gets
+    the literal 1.0 weights here. An undirected graph is fetched once and
+    mirrored in numpy: the union's rows from one scan of the edge
+    table."""
     import numpy as np
 
-    t = arrays(t, **{SRC: np.int64, DST: np.int64, "__w": np.float64})
+    cols = {SRC: np.int64, DST: np.int64, "__w": np.float64}
+    t = arrays(t, **{c: cols[c] for c in t.column_names})
     if t is None:
         return None
-    src, dst, wt = t[SRC], t[DST], t["__w"]
+    src, dst = t[SRC], t[DST]
+    wt = t.get("__w", np.ones(len(src), dtype=np.float64))
     if g.directed:
         return src, dst, wt
     return (
@@ -197,13 +209,14 @@ class PageRank:
         self.weight_col = weight_col
         self.batch_finish = batch_finish
 
-    def _run_batch(self, g: Graph, w, verts: DataFrame):
+    def _run_batch(self, g: Graph):
         """The driver finish, or None when the input is above the bound or
         the kernel defers."""
         import numpy as np
         import pyarrow as pa
 
-        edges = _edge_frame(g, w)
+        edges = _edge_frame(g, self.weight_col)
+        verts = g.vertices.select(ID)
         if not (
             self.batch_finish and edges is not None and int_columns(verts, ID)
         ):
@@ -216,12 +229,15 @@ class PageRank:
         if (1 if g.directed else 2) * e.num_rows + v.num_rows > self.batch_finish:
             return None
         e = _edge_arrays(g, e)
-        v = arrays(v, **{ID: np.int64, "__reset": np.float64})
+        v = arrays(v, **{ID: np.int64})
         if e is None or v is None:
             return None
+        ids = v[ID]
+        reset = np.ones(len(ids)) if self.sources is None else np.isin(
+            ids, np.array([int(s) for s in self.sources], dtype=np.int64)
+        ).astype(np.float64)
         out = _pagerank_kernel(
-            v[ID], v["__reset"], *e,
-            self.alpha, self.max_iterations, self.tolerance,
+            ids, reset, *e, self.alpha, self.max_iterations, self.tolerance
         )
         if out is None:
             return None
@@ -231,6 +247,9 @@ class PageRank:
 
     def run(self, g: Graph) -> DataFrame:
         """Returns ``(id, pagerank)`` for every vertex."""
+        out = self._run_batch(g)
+        if out is not None:
+            return out
         w = (
             F.col(self.weight_col).cast("double")
             if self.weight_col
@@ -243,66 +262,60 @@ class PageRank:
             reset = F.when(
                 F.array_contains(src_set, F.col(ID)), F.lit(1.0)
             ).otherwise(F.lit(0.0))
-        verts = g.vertices.select(ID).withColumn("__reset", reset)
-        out = self._run_batch(g, w, verts)
-        if out is not None:
-            return out
-        # pre-partition the static edge side on the join key: per-iteration
-        # joins then shuffle only the rank frame
-        edges = (
-            g.symmetric_edges.select(SRC, DST, w.alias("__w"))
-            .repartition(F.col(SRC))
-            .localCheckpoint()
+        edges = g.symmetric_edges.select(SRC, DST, w.alias("__w"))
+        edges = edges.localCheckpoint()
+        # the out-weight sum over ALL edge sources rides the state
+        deg = edges.groupBy(F.col(SRC).alias(ID)).agg(
+            F.sum("__w").alias("__deg")
         )
-        verts = verts.localCheckpoint()
-        deg = (
-            edges.groupBy(SRC)
-            .agg(F.sum("__w").alias("__deg"))
-            .localCheckpoint()
+        state, m = checkpoint_observed(
+            g.vertices.select(ID)
+            .withColumn("__reset", reset)
+            .join(deg, on=ID, how="left")
+            .withColumn(PAGERANK, F.col("__reset")),
+            __n=F.count(F.lit(1)),
         )
-        ranks = verts.select(
-            ID, F.col("__reset").alias(PAGERANK)
-        ).localCheckpoint()
-
         for _ in range(self.max_iterations):
-            contribs = (
-                edges.join(deg, on=SRC)
-                .join(ranks, on=F.col(SRC) == F.col(ID))
-                .select(
-                    F.col(DST).alias(ID),
-                    (F.col(PAGERANK) * F.col("__w") / F.col("__deg")).alias(
-                        "__c"
+            ranks = broadcast_if_small(
+                state.select(ID, PAGERANK, "__deg"), m["__n"]
+            )
+            contribs = edges.join(ranks, on=F.col(SRC) == F.col(ID)).select(
+                F.col(DST).alias(ID),
+                (F.col(PAGERANK) * F.col("__w") / F.col("__deg")).alias("__c"),
+            )
+            # the state's own rows carry the static columns and the old
+            # rank through the aggregate; a destination outside the vertex
+            # table has none and drops out, as in a left join from vertices
+            state, probe = checkpoint_observed(
+                contribs.unionByName(
+                    state.select(
+                        ID, "__reset", "__deg", F.col(PAGERANK).alias("__old")
                     ),
+                    allowMissingColumns=True,
                 )
                 .groupBy(ID)
-                .agg(F.sum("__c").alias("__sum"))
-            )
-            new_ranks = (
-                verts.join(contribs, on=ID, how="left")
+                .agg(
+                    F.sum("__c").alias("__sum"),
+                    *[F.max(c).alias(c) for c in ("__reset", "__deg", "__old")],
+                )
+                .filter(F.col("__reset").isNotNull())
                 .select(
                     ID,
+                    "__reset",
+                    "__deg",
+                    "__old",
                     (
                         F.lit(1.0 - self.alpha) * F.col("__reset")
                         + F.lit(self.alpha) * F.coalesce("__sum", F.lit(0.0))
                     ).alias(PAGERANK),
-                )
-                .localCheckpoint()
+                ),
+                __delta=F.sum(F.abs(F.col(PAGERANK) - F.col("__old"))),
             )
-            if self.tolerance is not None:
-                delta = (
-                    new_ranks.withColumnRenamed(PAGERANK, "__new")
-                    .join(ranks, on=ID)
-                    .agg(
-                        F.sum(F.abs(F.col("__new") - F.col(PAGERANK)))
-                    )
-                    .first()[0]
-                )
-                ranks = new_ranks
-                if delta is not None and delta < self.tolerance:
+            delta = probe["__delta"]
+            if self.tolerance is not None and delta is not None:
+                if delta < self.tolerance:
                     break
-            else:
-                ranks = new_ranks
-        return ranks
+        return state.select(ID, PAGERANK)
 
 
 def parallel_personalized_pagerank(
@@ -326,10 +339,10 @@ def parallel_personalized_pagerank(
     the walk can have reached ``id`` from ``source`` (all terms positive),
     so early iterations carry |sources|·|k-hop ball| rows, not V·|sources|.
     Per iteration: one contribution join keyed on the vertex id (the static
-    edge side is pre-partitioned on src and checkpointed once) and one
-    union+groupBy that folds the (1-α) restart rows in — no outer join, no
-    per-source loop, no map-state blowup. At 100 TB this batches any number
-    of sources through the same two shuffles classic PageRank pays.
+    edge side is checkpointed once) and one union+groupBy that folds the
+    (1-α) restart rows in — no outer join, no per-source loop, no
+    map-state blowup. At 100 TB this batches any number of sources
+    through one per-iteration plan.
 
     Returns ``(id, source, pagerank)`` with only positive-mass rows.
     """
@@ -338,10 +351,9 @@ def parallel_personalized_pagerank(
     import pyarrow as pa
 
     spark = g.edges.sparkSession
-    w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
     starts = [int(s) for s in dict.fromkeys(sources)]
     # bounded-batch finish (module note); the sources count toward the bound
-    edges, e = _edge_frame(g, w), None
+    edges, e = _edge_frame(g, weight_col), None
     if edges is not None and batch_finish >= len(sources):
         bound = batch_finish - len(sources)
         e = fetch_bounded(edges, bound if g.directed else bound // 2)
@@ -349,11 +361,8 @@ def parallel_personalized_pagerank(
     out = None if e is None else _ppr_multi_kernel(starts, *e, alpha, max_iterations)
     if out is not None:
         return spark.createDataFrame(pa.table(out))
-    edges = (
-        g.symmetric_edges.select(SRC, DST, w.alias("__w"))
-        .repartition(F.col(SRC))
-        .localCheckpoint()
-    )
+    w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
+    edges = g.symmetric_edges.select(SRC, DST, w.alias("__w")).localCheckpoint()
     restart = spark.createDataFrame(
         [(s, s) for s in starts], f"{ID} long, source long"
     ).localCheckpoint()

@@ -16,6 +16,11 @@ Physical redesign for scale (the reference's biggest flaw, SURVEY.md §3b):
   checkpointed partitions only.
 - **Frontier messaging kept** (only changed vertices send — algorithmic
   pruning the reference also does).
+- **Vertex state moves to the edges** (GraphX, OSDI 2014). Both message
+  directions scan one edge checkpoint; the changed senders, counted on
+  the previous round's checkpoint, are broadcast to it while they fit
+  (util.broadcast_if_small). Salted runs keep one checkpoint per
+  direction, partitioned on key and salt.
 - **``unionByName`` upsert** — the reference's positional union
   (pregel.py:68) silently depends on column order.
 
@@ -42,7 +47,11 @@ from pyspark_graph_spark.constants import (
     STATE,
 )
 from pyspark_graph_spark.graph import Graph
-from pyspark_graph_spark.util import checkpoint_observed, ne_null_safe
+from pyspark_graph_spark.util import (
+    broadcast_if_small,
+    checkpoint_observed,
+    ne_null_safe,
+)
 
 
 class Pregel:
@@ -134,14 +143,15 @@ class Pregel:
         edges_by_src: DataFrame | None,
         edges_by_dst: DataFrame | None,
         senders: DataFrame,
+        n_senders: int,
     ) -> DataFrame:
         """Build the (id, msg) frame for one superstep.
 
         ``senders`` is the changed-state frame (id, attrs..., state). Each
         directed edge whose sender endpoint changed emits the message
-        expression evaluated over edge ⋈ sender-state columns. The edge
-        frames arrive pre-partitioned on their join key (see ``run``), so
-        only the (smaller, changing) sender side shuffles per round.
+        expression evaluated over edge ⋈ sender-state columns. Unsalted,
+        the senders (``n_senders`` rows) are broadcast to the edges while
+        they fit (module note), so the edge table does not move.
         """
         if self.salt_buckets:
             senders = senders.withColumn(
@@ -150,6 +160,8 @@ class Pregel:
                     F.sequence(F.lit(0), F.lit(self.salt_buckets - 1))
                 ),
             )
+        else:
+            senders = broadcast_if_small(senders, n_senders)
 
         def join_on(edges, key):
             cond = edges[key] == senders[ID]
@@ -187,11 +199,10 @@ class Pregel:
 
     def run(self, g: Graph) -> DataFrame:
         """Returns the vertex table with a final ``state`` column."""
-        # materialize the static edge side once per message direction,
-        # hash-partitioned on its join key: the per-superstep message join
-        # then shuffles only the sender state, not the (bigger) edge table.
-        # With salting, the salt (derived from the OTHER endpoint, so a
-        # hub's edges spread) joins the partitioning key.
+        # the static edge side is materialized once and shared by both
+        # message directions. With salting, the salt (derived from the
+        # OTHER endpoint, so a hub's edges spread) joins the partitioning
+        # key, one checkpoint per direction.
         def prep(key, other):
             e = g.edges
             if self.salt_buckets:
@@ -204,8 +215,9 @@ class Pregel:
                 return e.repartition(
                     F.col(key), F.col("__salt")
                 ).localCheckpoint()
-            return e.repartition(F.col(key)).localCheckpoint()
+            return edges
 
+        edges = None if self.salt_buckets else g.edges.localCheckpoint()
         edges_by_src = (
             prep(SRC, DST) if self.msg_to_dst is not None else None
         )
@@ -215,8 +227,9 @@ class Pregel:
         state = g.vertices.withColumn(STATE, self.initial_state)
         if self.carry_columns is not None:
             state = state.select(ID, *self.carry_columns, STATE)
-        state = state.localCheckpoint()
+        state, m = checkpoint_observed(state, __n=F.count(F.lit(1)))
         changed = state  # every vertex is "changed" before round 1
+        n_changed = m["__n"]
 
         # exposed after run(): False means the loop hit max_iterations with
         # a non-empty changed frontier, i.e. the fixpoint was truncated.
@@ -227,7 +240,7 @@ class Pregel:
         budget = self.max_iterations
         while self.rounds_run < budget:
             agg = self._aggregate(
-                self._messages(edges_by_src, edges_by_dst, changed)
+                self._messages(edges_by_src, edges_by_dst, changed, n_changed)
             )
             # Fused upsert (round 11, guide §2.4): the previous shape was
             # an INNER join to compute updates, then an anti-join + union
@@ -274,7 +287,8 @@ class Pregel:
             changed = updated.filter(F.col("__changed")).drop("__changed")
             state = updated.drop("__changed")
             self.rounds_run += 1
-            if not probe["__n_changed"]:
+            n_changed = probe["__n_changed"]
+            if not n_changed:
                 self.converged = True
                 break
             if (

@@ -3,8 +3,8 @@
 Engine extensions (the reference ships no centralities at all; its README
 lists even PageRank as unsupported — `/root/reference/README.md:24-38`).
 Both are classic power iterations, so they reuse the engine's iterative
-shape: pre-partitioned static edge side, per-round localCheckpoint to cut
-lineage, global normalization as a broadcast 1-row crossJoin.
+shape: a static edge side checkpointed once, per-round localCheckpoint to
+cut lineage, global normalization as a broadcast 1-row crossJoin.
 
     eigenvector:  x ← A·x / ‖A·x‖₂          (symmetrized adjacency)
     HITS:         a ← Aᵀ·h / ‖Aᵀ·h‖₂,  h ← A·a / ‖A·a‖₂
@@ -153,8 +153,7 @@ class EigenvectorCentrality:
         """Returns ``(id, eigenvector)`` for every vertex."""
         # probes ride the materializing checkpoints (round 12)
         edges, me = checkpoint_observed(
-            g.symmetric_edges.select(SRC, DST).repartition(F.col(SRC)),
-            __n=F.count(F.lit(1)),
+            g.symmetric_edges.select(SRC, DST), __n=F.count(F.lit(1))
         )
         verts, mv = checkpoint_observed(
             g.vertices.select(ID), __n=F.count(F.lit(1))

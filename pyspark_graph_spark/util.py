@@ -4,12 +4,14 @@ The join/union/motif helpers are pure plan builders — no actions, no
 caching. They compose with Catalyst optimization (join reordering,
 pushdown) because they only use the public DataFrame API. The
 bounded-batch helpers at the end (``checkpoint_observed``,
-``fetch_bounded``, ``fetch_bounded_all``) are the actions the iterative
-operators share.
+``fetch_bounded``, ``fetch_bounded_all``, ``fetch_tagged``) are the
+actions the iterative operators share, and ``broadcast_if_small`` is how
+their loops decide which side of a join moves.
 """
 
 from __future__ import annotations
 
+import re
 from functools import reduce
 from typing import Iterable, Sequence
 
@@ -155,24 +157,64 @@ def fetch_bounded_all(bound: int, *dfs: DataFrame):
     more than ``bound`` rows together — ``fetch_bounded`` over a tagged
     ``unionByName``, so a driver finish that needs several inputs still
     costs one collect. The tables carry each frame's own columns."""
+    return fetch_tagged(bound, *dfs)[0]
+
+
+def fetch_tagged(bound: int, *dfs: DataFrame):
+    """``(fetch_bounded_all(bound, *dfs), seen)``, where ``seen[i]`` is how
+    many of the fetched rows came from ``dfs[i]``. Above the bound the
+    fetch stops at ``bound + 1`` rows, so a frame that supplied all of
+    them holds more than ``bound`` rows on its own, in whatever order
+    the rows arrived."""
     import pyarrow.compute as pc
 
     tagged = [
         df.withColumn("__fetch_tag", F.lit(i)) for i, df in enumerate(dfs)
     ]
-    table = fetch_bounded(
-        reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), tagged
-        ),
-        bound,
+    union = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), tagged
     )
-    if table is None:
-        return None
+    # fetch_bounded's collect, keeping the table above the bound
+    table = union.coalesce(1).limit(bound + 1).toArrow()
     tag = table.column("__fetch_tag")
+    seen = [pc.sum(pc.equal(tag, i)).as_py() or 0 for i in range(len(dfs))]
+    if table.num_rows > bound:
+        return None, seen
     return [
         table.filter(pc.equal(tag, i)).select(df.columns)
         for i, df in enumerate(dfs)
-    ]
+    ], seen
+
+
+# Spark's per-column size estimates (DataType.defaultSize) by typeName; a
+# row adds 8 bytes (EstimationUtils.getSizePerRow)
+_DEFAULT_SIZE = dict(byte=1, short=2, integer=4, long=8, float=4, double=8,
+                     boolean=1, date=4, timestamp=8, timestamp_ntz=8,
+                     string=20, binary=100)
+_UNITS = {"": 0, "b": 0, "k": 10, "kb": 10, "m": 20, "mb": 20, "g": 30, "gb": 30}
+
+
+def broadcast_if_small(df: DataFrame, rows) -> DataFrame:
+    """``F.broadcast(df)`` when ``rows`` rows of ``df`` fit Spark's own
+    ``spark.sql.autoBroadcastJoinThreshold``, else ``df``.
+
+    The BSP loops join a vertex-sized frame that changes every round to
+    an edge table that does not. Spark sizes a ``localCheckpoint`` from
+    the plan it came from, often far from its real size, so it may
+    broadcast the edge side instead or shuffle both. The loops know the
+    real row count (``checkpoint_observed``), sized here as Spark sizes
+    rows. Over the threshold, at -1, or for a column without a fixed size
+    estimate, the plain join runs: the path for vertex tables of any
+    size."""
+    conf = df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    m = re.fullmatch(r"\s*(-?\d+)\s*([a-z]*)\s*", str(conf).lower())
+    sizes = [_DEFAULT_SIZE.get(f.dataType.typeName()) for f in df.schema.fields]
+    if rows is None or m is None or m.group(2) not in _UNITS or None in sizes:
+        return df
+    threshold = int(m.group(1)) << _UNITS[m.group(2)]
+    if threshold < 0 or rows * (8 + sum(sizes)) > threshold:
+        return df
+    return F.broadcast(df)
 
 
 def int_columns(df: DataFrame, *cols: str) -> bool:

@@ -31,7 +31,11 @@ from pyspark_graph_spark.operators.similarity import (
 from pyspark_graph_spark.operators.spectral import EigenvectorCentrality
 from pyspark_graph_spark.operators.triangle_count import TriangleCount
 from pyspark_graph_spark.session import supports_jvm_internals
-from pyspark_graph_spark.util import fetch_bounded, fetch_bounded_all
+from pyspark_graph_spark.util import (
+    fetch_bounded,
+    fetch_bounded_all,
+    fetch_tagged,
+)
 
 SIMILARITIES = (JaccardSimilarity, OverlapCoefficient, NeighborhoodContainment)
 
@@ -51,6 +55,15 @@ def test_fetch_bounded_returns_none_above_the_bound(spark):
     assert fetch_bounded(df, 5).num_rows == 5
     assert fetch_bounded(df, 4) is None
     assert fetch_bounded(df.limit(0), 0).num_rows == 0
+
+
+def test_fetch_tagged_counts_each_frames_rows_above_the_bound(spark):
+    a, b = spark.range(5), spark.range(3)
+    assert fetch_tagged(2, a) == (None, [3])
+    tables, seen = fetch_tagged(2, a, b)
+    assert tables is None and sum(seen) == 3
+    tables, seen = fetch_tagged(8, a, b)
+    assert seen == [5, 3] and [t.num_rows for t in tables] == [5, 3]
 
 
 def test_fetch_bounded_all_splits_one_collect_per_frame(spark):
