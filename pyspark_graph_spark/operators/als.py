@@ -41,13 +41,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Bounded-batch finish (round 12, guide §2.4): same contract and ulp
-# story as the SVD kernels (operators/svd.py module note) — below
-# batch_finish the whole alternation trajectory runs in one Arrow
-# kernel replaying the identical closed-form double algebra; the
-# per-alternation join/groupBy plan is unchanged above the bound and
-# remains the only 100 TB path. ALS has no degenerate regime to defer:
-# reg > 0 keeps every solve nonsingular by construction.
+from pyspark_graph_spark.util import driver_finish, int_columns
+
+# Bounded-batch finish: same contract and ulp story as the SVD kernels
+# (operators/svd.py module note) — below batch_finish one limited Arrow
+# fetch brings the ratings to the driver (util.driver_finish) and the
+# whole alternation trajectory runs there, replaying the identical
+# closed-form double algebra; the per-alternation join/groupBy plan is
+# unchanged above the bound and remains the only 100 TB path. ALS has
+# no degenerate regime to defer (reg > 0 keeps every solve nonsingular
+# by construction); only an empty ratings table goes to that plan.
 
 _ALS_SCHEMA = (
     "side tinyint, key long, f1 double, f2 double, b double"
@@ -90,25 +93,24 @@ def _als_emit(users, uf, items, vf):
     )
 
 
-def _als_batch_out(r: DataFrame, kernel) -> DataFrame:
-    return (
-        r.withColumn("__g", F.lit(0))
-        .groupBy("__g")
-        .applyInPandas(kernel, _ALS_SCHEMA)
-        .localCheckpoint()
-    )
-
-
-def _als_integral_keys(r: DataFrame) -> bool:
-    kinds = {f.name: f.dataType.typeName() for f in r.schema.fields}
-    return all(
-        kinds[k] in ("long", "integer", "short", "byte")
-        for k in ("__u", "__i")
+def _als_batch_out(
+    r: DataFrame, batch_finish: int, kernel
+) -> DataFrame | None:
+    """The tagged ``(side, key, f1, f2, b)`` factors of one batch kernel
+    run in the driver on the ratings (``util.driver_finish``), or None
+    above the bound, for non-integral keys, or for no ratings at all."""
+    if not int_columns(r, "__u", "__i"):
+        return None
+    return driver_finish(
+        batch_finish,
+        lambda pdf: None if pdf.empty else kernel(pdf),
+        _ALS_SCHEMA,
+        r,
     )
 
 
 def _bias_batch_kernel(iterations: int, reg: float):
-    """Biased rank-2 ALS alternation in one Arrow batch — the identical
+    """Biased rank-2 ALS alternation in the driver — the identical
     ug/ub/vg/vb closed forms in the identical order."""
 
     def kern(pdf):
@@ -180,7 +182,7 @@ def _bias_batch_kernel(iterations: int, reg: float):
 
 
 def _implicit_batch_kernel(iterations: int, reg: float, alpha: float):
-    """Implicit-feedback rank-2 ALS in one Arrow batch — the identical
+    """Implicit-feedback rank-2 ALS in the driver — the identical
     global-Gram + sparse-correction closed forms."""
 
     def kern(pdf):
@@ -261,13 +263,9 @@ def als_bias_rank2(
         F.col(user_col).alias("__u"),
         F.col(item_col).alias("__i"),
         F.col(rating_col).cast("double").alias("__r"),
-    ).localCheckpoint()
-    if (
-        batch_finish
-        and _als_integral_keys(r)
-        and 0 < r.count() <= batch_finish
-    ):
-        out = _als_batch_out(r, _bias_batch_kernel(iterations, reg))
+    )
+    out = _als_batch_out(r, batch_finish, _bias_batch_kernel(iterations, reg))
+    if out is not None:
         return (
             out.filter(F.col("side") == 0).select(
                 F.col("key").alias(user_col),
@@ -282,6 +280,7 @@ def als_bias_rank2(
                 F.col("b").alias("bi"),
             ),
         )
+    r = r.localCheckpoint()
     # two pre-partitioned copies of the (only) big operand, the Pregel
     # edges_by_src/dst trick: each step's join against a factor table
     # then shuffles only the |users|/|items|-sized side, never the
@@ -464,15 +463,11 @@ def als_implicit_rank2(
         F.col(user_col).alias("__u"),
         F.col(item_col).alias("__i"),
         F.col(rating_col).cast("double").alias("__r"),
-    ).localCheckpoint()
-    if (
-        batch_finish
-        and _als_integral_keys(r)
-        and 0 < r.count() <= batch_finish
-    ):
-        out = _als_batch_out(
-            r, _implicit_batch_kernel(iterations, reg, alpha)
-        )
+    )
+    out = _als_batch_out(
+        r, batch_finish, _implicit_batch_kernel(iterations, reg, alpha)
+    )
+    if out is not None:
         return (
             out.filter(F.col("side") == 0).select(
                 F.col("key").alias(user_col),
@@ -485,6 +480,7 @@ def als_implicit_rank2(
                 F.col("f2").alias("v2"),
             ),
         )
+    r = r.localCheckpoint()
     r_by_i = r.repartition("__i").localCheckpoint()
     r_by_u = r.repartition("__u").localCheckpoint()
     items = r.select("__i").distinct().select(

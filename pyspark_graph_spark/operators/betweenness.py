@@ -30,14 +30,18 @@ from pyspark.sql import functions as F
 
 from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
-from pyspark_graph_spark.util import checkpoint_observed
+from pyspark_graph_spark.util import (
+    checkpoint_observed,
+    driver_finish,
+    int_columns,
+)
 
 BETWEENNESS = "betweenness"
 
 
 def _batch_brandes(sources: list[int], max_depth: int):
-    """Landmark-sampled Brandes in one Arrow batch (round 12, guide
-    §2.4) — the same forward sigma sums (exact: integer path counts in
+    """Landmark-sampled Brandes in the driver (``util.driver_finish``) —
+    the same forward sigma sums (exact: integer path counts in
     doubles), the same per-level backward dependency accumulation
     (sigma_v/sigma_w)*(1+delta_w), the same depth budget. The BFS runs
     over ALL edge endpoints (the distributed sweeps never intersect
@@ -46,7 +50,7 @@ def _batch_brandes(sources: list[int], max_depth: int):
     as the SVD kernels: per-sum accumulation order is the only
     divergence channel, the class of noise Spark's own shuffles carry."""
 
-    def kern(_key, v_pdf, e_pdf):
+    def kern(v_pdf, e_pdf):
         import numpy as np
         import pandas as pd
 
@@ -92,9 +96,7 @@ def _batch_brandes(sources: list[int], max_depth: int):
                 )
             delta[s_slot] = 0.0  # the s != v filter
             score = score + delta
-        out = np.zeros(len(vids), dtype=np.float64)
-        v_slot = np.searchsorted(uni, vids)
-        out = score[v_slot]
+        out = score[np.searchsorted(uni, vids)]
         return pd.DataFrame({ID: vids, BETWEENNESS: out})
 
     return kern
@@ -111,9 +113,9 @@ class BetweennessCentrality:
         self.max_depth = max_depth
         # the kernel's rows are two int64 columns (the SYMMETRIC pair
         # list — the operator doubles an undirected input mechanically),
-        # so 2M rows ≈ 32 MB in one Arrow task — the same per-task byte
-        # budget as the 1M-row partition/matching kernels whose rows are
-        # twice as wide. Distributed sweeps above the bound; 0 disables.
+        # so 2M rows ≈ 32 MB fetched to the driver — the same byte budget
+        # as the 1M-row partition/matching kernels whose rows are twice
+        # as wide. Distributed sweeps above the bound; 0 disables.
         self.batch_finish = batch_finish
 
     def _source_df(self, g: Graph) -> DataFrame:
@@ -142,32 +144,22 @@ class BetweennessCentrality:
             if isinstance(self.sources, DataFrame)
             else [int(x) for x in self.sources]
         )
-        vk = {f.name: f.dataType.typeName() for f in g.vertices.schema.fields}
-        ek = {f.name: f.dataType.typeName() for f in edges.schema.fields}
-        ints = ("long", "integer", "short", "byte")
         if (
-            self.batch_finish
-            and src_list is not None
+            src_list is not None
             and len(set(src_list)) == len(src_list)
-            and vk.get(ID) in ints
-            and ek.get(SRC) in ints
-            and ek.get(DST) in ints
+            and (me["__n"] or 0) <= self.batch_finish
+            and int_columns(g.vertices, ID)
+            and int_columns(edges, SRC, DST)
         ):
-            # a plain count probe: above the bound a vertex checkpoint
-            # would be a wasted full write
-            vv = g.vertices.select(ID)
-            if 0 < (me["__n"] or 0) + vv.count() <= self.batch_finish:
-                return (
-                    vv.withColumn("__g", F.lit(0))
-                    .groupBy("__g")
-                    .cogroup(
-                        edges.withColumn("__g", F.lit(0)).groupBy("__g")
-                    )
-                    .applyInPandas(
-                        _batch_brandes(src_list, self.max_depth),
-                        f"{ID} long, {BETWEENNESS} double",
-                    )
-                )
+            out = driver_finish(
+                self.batch_finish,
+                _batch_brandes(src_list, self.max_depth),
+                f"{ID} long, {BETWEENNESS} double",
+                g.vertices.select(ID),
+                edges,
+            )
+            if out is not None:
+                return out
         sources = self._source_df(g).localCheckpoint()
 
         # ---- forward sweep: (s, v, depth, sigma) ----

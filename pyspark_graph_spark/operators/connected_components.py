@@ -46,13 +46,13 @@ from pyspark_graph_spark.util import (
 COMPONENT = "component"
 
 
-def _min_label_kernel(ids, src, dst, budget0: int, hard_max: int, auto_extend: bool):
+def _min_label_kernel(ids, src, dst, max_iterations: int):
     """Min-label propagation replayed in the driver: per round every
     vertex takes the min of its own label and its neighbors' (full
     messaging is value-identical to the Pregel's frontier messaging — a
     sender's label was already delivered in the round after it last
-    changed), with the same round budget, the same auto_extend doubling,
-    and the same stop-on-no-change probe. Labels are exact integers, so
+    changed), with the same round budget and the same stop-on-no-change
+    probe. Labels are exact integers, so
     batch == Pregel bit for bit, INCLUDING truncated labellings when the
     budget runs out. Edges with an endpoint outside the vertex table
     relay nothing, exactly like the Pregel state join. Returns
@@ -66,9 +66,8 @@ def _min_label_kernel(ids, src, dst, budget0: int, hard_max: int, auto_extend: b
     s_idx, d_idx = s_idx[ok], d_idx[ok]
     label = ids.copy()
     rounds = 0
-    budget = budget0
     converged = False
-    while rounds < budget:
+    while rounds < max_iterations:
         new = label.copy()
         np.minimum.at(new, d_idx, label[s_idx])
         np.minimum.at(new, s_idx, label[d_idx])
@@ -77,8 +76,6 @@ def _min_label_kernel(ids, src, dst, budget0: int, hard_max: int, auto_extend: b
             converged = True
             break
         label = new
-        if rounds == budget and auto_extend and budget < hard_max:
-            budget = min(2 * budget, hard_max)
     return ids, label, rounds, converged
 
 
@@ -104,13 +101,6 @@ class ConnectedComponents:
     :class:`AlternatingConnectedComponents`, whose O(log n) fixpoint is
     diameter-independent.
 
-    ``auto_extend`` (r10 verdict #5): opt-in resumable budget — when the
-    min-label flood is still moving at ``max_iterations``, Pregel
-    continues from the checkpointed frontier with a doubled budget
-    (bounded by ``hard_max_iterations``, default 8x) instead of forcing
-    a full restart; the truncation error below still fires if even the
-    hard cap is not enough.
-
     ``batch_finish``: while vertices + edges fit this many rows, both are
     fetched in one limited Arrow collect and the same rounds replay in
     numpy in the driver (``_min_label_kernel``); 0 disables."""
@@ -120,15 +110,11 @@ class ConnectedComponents:
         max_iterations: int = 20,
         salt_buckets: int | None = None,
         require_convergence: bool = True,
-        auto_extend: bool = False,
-        hard_max_iterations: int | None = None,
         batch_finish: int = 1_000_000,
     ):
         self.max_iterations = max_iterations
         self.salt_buckets = salt_buckets
         self.require_convergence = require_convergence
-        self.auto_extend = auto_extend
-        self.hard_max_iterations = hard_max_iterations
         self.batch_finish = batch_finish
 
     def _run_batch(self, g: Graph):
@@ -151,17 +137,8 @@ class ConnectedComponents:
         v = arrays(t[1], **{ID: np.int64})
         if e is None or v is None:
             return None
-        hard = (
-            self.hard_max_iterations
-            if self.hard_max_iterations is not None
-            else (
-                8 * self.max_iterations
-                if self.auto_extend
-                else self.max_iterations
-            )
-        )
         ids, labels, self.rounds_run, converged = _min_label_kernel(
-            v[ID], e[SRC], e[DST], self.max_iterations, hard, self.auto_extend
+            v[ID], e[SRC], e[DST], self.max_iterations
         )
         self._check_converged(converged)
         return _local_components(g.vertices.sparkSession, ids, labels)
@@ -172,9 +149,7 @@ class ConnectedComponents:
                 "ConnectedComponents hit max_iterations="
                 f"{self.max_iterations} before the min-label fixpoint — "
                 "a component with diameter beyond the budget would get "
-                "silently split labels. Raise max_iterations, pass "
-                "auto_extend=True (resumes the checkpointed frontier with "
-                "a doubled budget, bounded by hard_max_iterations), use "
+                "silently split labels. Raise max_iterations, use "
                 "AlternatingConnectedComponents (diameter-independent), "
                 "or pass require_convergence=False to accept truncation."
             )
@@ -200,8 +175,6 @@ class ConnectedComponents:
             update_expr=F.least(F.col(STATE), F.col(MSG)),
             max_iterations=self.max_iterations,
             salt_buckets=self.salt_buckets,
-            auto_extend=self.auto_extend,
-            hard_max_iterations=self.hard_max_iterations,
         )
         out = pregel.run(slim).select(ID, F.col(STATE).alias(COMPONENT))
         self.rounds_run = pregel.rounds_run
@@ -284,9 +257,9 @@ def _with_unlabelled(verts: DataFrame, membership: DataFrame) -> DataFrame:
     return membership.unionByName(roots_and_isolated)
 
 
-def _batch_union_find(pdf):
-    """(src, dst) pairs -> (id, component) with component = min member id
-    for every vertex in the pairs' support.
+def _batch_union_find(src, dst):
+    """``(ids, component)`` int64 arrays from the (src, dst) pair arrays:
+    component = min member id for every vertex in the pairs' support.
 
     Union-by-min, vectorized: every round hooks the larger root of each
     edge under the smaller one, then pointer-jumps every vertex to its
@@ -294,13 +267,10 @@ def _batch_union_find(pdf):
     points at a smaller id in its own component, so each root is its
     component's minimum id — exactly the representative the
     large-star/small-star fixpoint converges to (Kiveris et al.: stars
-    point at component minima). Runs on one bounded batch; shared by
-    AlternatingCC's driver finish and BoruvkaMST's contraction."""
+    point at component minima). Shared by AlternatingCC's driver finish
+    and BoruvkaMST's contraction."""
     import numpy as np
-    import pandas as pd
 
-    src = pdf[SRC].to_numpy(dtype=np.int64)
-    dst = pdf[DST].to_numpy(dtype=np.int64)
     ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
     s, d = inv[: len(src)], inv[len(src):]
     root = np.arange(len(ids))
@@ -314,7 +284,7 @@ def _batch_union_find(pdf):
                 break
             root = up
         if np.array_equal(root[s], root[d]):
-            return pd.DataFrame({ID: ids, COMPONENT: ids[root]})
+            return ids, ids[root]
 
 
 class AlternatingConnectedComponents:
@@ -340,22 +310,9 @@ class AlternatingConnectedComponents:
         max_iterations: int = 20,
         batch_finish: int = 1_000_000,
         require_convergence: bool = True,
-        auto_extend: bool = False,
-        hard_max_iterations: int | None = None,
     ):
         self.max_iterations = max_iterations
         self.batch_finish = batch_finish
-        # r10 verdict #5: same resumable-budget contract as Pregel —
-        # the edge list is checkpointed per round, so doubling the
-        # budget continues from the live star-contraction state
-        self.auto_extend = auto_extend
-        if hard_max_iterations is not None and hard_max_iterations < max_iterations:
-            raise ValueError("hard_max_iterations must be >= max_iterations")
-        self.hard_max_iterations = (
-            hard_max_iterations
-            if hard_max_iterations is not None
-            else (8 * max_iterations if auto_extend else max_iterations)
-        )
         # post-fixpoint the edge list is a star forest; reading it as a
         # membership table BEFORE the fixpoint is reached returns garbage
         # labels, not merely coarse ones — so truncation must be loud,
@@ -373,10 +330,10 @@ class AlternatingConnectedComponents:
         against a local membership table."""
         import numpy as np
 
-        mem = _batch_union_find(pairs.to_pandas())
-        mem = mem[mem[ID] != mem[COMPONENT]]
-        ids = mem[ID].to_numpy(dtype=np.int64)
-        comp = mem[COMPONENT].to_numpy(dtype=np.int64)
+        t = arrays(pairs, **{SRC: np.int64, DST: np.int64})
+        ids, comp = _batch_union_find(t[SRC], t[DST])
+        labelled = ids != comp
+        ids, comp = ids[labelled], comp[labelled]
         spark = g.vertices.sparkSession
         v = None if verts is None else arrays(verts, **{ID: np.int64})
         if v is None:
@@ -424,8 +381,7 @@ class AlternatingConnectedComponents:
         handoff = False
         converged = False
         rounds = 0
-        budget = self.max_iterations
-        while not handoff and rounds < budget:
+        while not handoff and rounds < self.max_iterations:
             edges, m = checkpoint_observed(
                 _small_star(_large_star(edges)), **_fingerprint()
             )
@@ -438,12 +394,6 @@ class AlternatingConnectedComponents:
                 break
             fingerprint = new_fingerprint
             handoff = tail_fits(m)
-            if (
-                rounds == budget
-                and self.auto_extend
-                and budget < self.hard_max_iterations
-            ):
-                budget = min(2 * budget, self.hard_max_iterations)
         self.rounds_run = rounds
         if handoff:
             tail = fetch_bounded_all(self.batch_finish, edges, *extra)
@@ -454,10 +404,8 @@ class AlternatingConnectedComponents:
                 f"{self.max_iterations} before the star fixpoint — the "
                 "edge list is not yet a star forest and reading it as a "
                 "membership table would return wrong labels. Raise "
-                "max_iterations (rounds are O(log n)), pass "
-                "auto_extend=True (resumes the checkpointed contraction "
-                "with a doubled budget, bounded by hard_max_iterations), "
-                "or pass require_convergence=False to accept truncation."
+                "max_iterations (rounds are O(log n)), or pass "
+                "require_convergence=False to accept truncation."
             )
         # post-fixpoint the edge list is a star forest pointing at roots
         return _with_unlabelled(

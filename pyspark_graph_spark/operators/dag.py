@@ -24,20 +24,25 @@ from pyspark.sql import functions as F
 
 from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
-from pyspark_graph_spark.util import checkpoint_observed, positions
+from pyspark_graph_spark.util import (
+    checkpoint_observed,
+    driver_finish,
+    int_columns,
+    positions,
+)
 
 LAYER = "layer"
 
 
 def _batch_kahn(max_iterations: int):
-    """Level-synchronous Kahn peel in one Arrow batch (round 12, guide
-    §2.4): pure set/integer arithmetic, so batch == distributed by
+    """Level-synchronous Kahn peel in the driver (``util.driver_finish``):
+    pure set/integer arithmetic, so batch == distributed by
     construction — including the round budget (cycle vertices and
     everything the budget strands keep layer NULL) and edges whose
     source is outside the vertex table (they block their destination
     forever in both paths)."""
 
-    def kern(_key, v_pdf, e_pdf):
+    def kern(v_pdf, e_pdf):
         import pandas as pd
 
         verts = [int(x) for x in v_pdf[ID]]
@@ -65,40 +70,26 @@ def _batch_kahn(max_iterations: int):
 class TopologicalLayers:
     """Longest-path depth per vertex of a DAG; NULL layer marks cycles.
 
-    ``batch_finish``: below the bound the whole peel runs in one Arrow
-    batch (_batch_kahn); the per-round anti-join plan stays the only
-    path above it. 0 disables."""
+    ``batch_finish``: while vertices + edges fit the bound, one Arrow
+    fetch carries both and the whole peel runs in the driver
+    (_batch_kahn); the per-round anti-join plan stays the only path above
+    it. 0 disables."""
 
     def __init__(self, max_iterations: int = 30, batch_finish: int = 1_000_000):
         self.max_iterations = max_iterations
         self.batch_finish = batch_finish
 
     def run(self, g: Graph) -> DataFrame:
-        vk = {f.name: f.dataType.typeName() for f in g.vertices.schema.fields}
-        ek = {f.name: f.dataType.typeName() for f in g.edges.schema.fields}
-        ints = ("long", "integer", "short", "byte")
-        if (
-            self.batch_finish
-            and vk.get(ID) in ints
-            and ek.get(SRC) in ints
-            and ek.get(DST) in ints
-        ):
-            # plain count probes (no extra materialization above the
-            # bound — the distributed body checkpoints its own frames)
-            verts = g.vertices.select(ID)
-            edges0 = g.edges.select(SRC, DST)
-            if 0 < verts.count() + edges0.count() <= self.batch_finish:
-                return (
-                    verts.withColumn("__g", F.lit(0))
-                    .groupBy("__g")
-                    .cogroup(
-                        edges0.withColumn("__g", F.lit(0)).groupBy("__g")
-                    )
-                    .applyInPandas(
-                        _batch_kahn(self.max_iterations),
-                        f"{ID} long, {LAYER} int",
-                    )
-                )
+        if int_columns(g.vertices, ID) and int_columns(g.edges, SRC, DST):
+            out = driver_finish(
+                self.batch_finish,
+                _batch_kahn(self.max_iterations),
+                f"{ID} long, {LAYER} int",
+                g.vertices.select(ID),
+                g.edges.select(SRC, DST),
+            )
+            if out is not None:
+                return out
         edges = (
             g.edges.select(SRC, DST)
             .filter(F.col(SRC) != F.col(DST))
@@ -153,17 +144,22 @@ class TopologicalLayers:
 
 
 DIST = "critical_path"
+_NOT_CONVERGED = (
+    "CriticalPath did not converge within max_iterations — "
+    "cyclic input or depth budget too small"
+)
 
 
 def _batch_critical_path(max_iterations: int):
-    """Max-plus relaxation in one Arrow batch: per round each vertex
+    """Max-plus relaxation in the driver: per round each vertex
     takes max(old, max over in-edges (dist[src] + w)). No accumulation
     anywhere (only max over exact per-pair additions), so batch ==
     distributed bit for bit; the changed probe, the round budget, and
-    the loud non-convergence ValueError replay exactly. NaN weights
-    defer (Spark compares NaN==NaN as true; IEEE does not)."""
+    the loud non-convergence ValueError replay exactly, raised at the
+    call. NaN weights defer: the kernel returns None (Spark compares
+    NaN==NaN as true; IEEE does not)."""
 
-    def kern(_key, v_pdf, e_pdf):
+    def kern(v_pdf, e_pdf):
         import numpy as np
         import pandas as pd
 
@@ -172,7 +168,7 @@ def _batch_critical_path(max_iterations: int):
         dst = e_pdf["dst"].to_numpy(dtype=np.int64)
         w = e_pdf["__w"].to_numpy(dtype=np.float64)
         if np.any(np.isnan(w)):
-            raise RuntimeError("__CP_BATCH_DEGENERATE__")
+            return None
         s_idx, s_ok = positions(ids, src)
         d_idx, d_ok = positions(ids, dst)
         ok = s_ok & d_ok
@@ -184,7 +180,7 @@ def _batch_critical_path(max_iterations: int):
             if np.array_equal(new, dist):
                 return pd.DataFrame({ID: ids, DIST: new})
             dist = new
-        raise ValueError("__CP_BATCH_VALUEERROR__")
+        raise ValueError(_NOT_CONVERGED)
 
     return kern
 
@@ -202,7 +198,10 @@ class CriticalPath:
     budget is the guard, and a non-converged run raises.
 
     Scale: one edge join + one map-side-combinable max aggregation per
-    round over V rows of state; rounds = DAG depth.
+    round over V rows of state; rounds = DAG depth. ``batch_finish``:
+    while vertices + edges fit the bound, the checkpointed edges and the
+    vertex ids come back in one Arrow fetch and the relaxation runs in
+    the driver (_batch_critical_path); 0 disables.
     """
 
     def __init__(
@@ -225,46 +224,20 @@ class CriticalPath:
             .filter(F.col(SRC) != F.col(DST)),
             __n=F.count(F.lit(1)),
         )
-        vk = {f.name: f.dataType.typeName() for f in g.vertices.schema.fields}
-        ek = {f.name: f.dataType.typeName() for f in g.edges.schema.fields}
-        ints = ("long", "integer", "short", "byte")
         if (
-            self.batch_finish
-            and vk.get(ID) in ints
-            and ek.get(SRC) in ints
-            and ek.get(DST) in ints
+            (me["__n"] or 0) <= self.batch_finish
+            and int_columns(g.vertices, ID)
+            and int_columns(g.edges, SRC, DST)
         ):
-            # a plain count probe: above the bound a vertex checkpoint
-            # would be a wasted full write
-            verts = g.vertices.select(ID)
-            if 0 < verts.count() + (me["__n"] or 0) <= self.batch_finish:
-                out = (
-                    verts.withColumn("__g", F.lit(0))
-                    .groupBy("__g")
-                    .cogroup(
-                        edges.withColumn("__g", F.lit(0)).groupBy("__g")
-                    )
-                    .applyInPandas(
-                        _batch_critical_path(self.max_iterations),
-                        f"{ID} long, {DIST} double",
-                    )
-                )
-                try:
-                    # eager: the non-convergence ValueError must surface
-                    # at the call, and NaN weights defer to the
-                    # distributed plan (Spark's NaN==NaN comparison
-                    # semantics differ from IEEE)
-                    return out.localCheckpoint()
-                except Exception as e:
-                    msg = str(e)
-                    if "__CP_BATCH_VALUEERROR__" in msg:
-                        raise ValueError(
-                            "CriticalPath did not converge within "
-                            "max_iterations — cyclic input or depth "
-                            "budget too small"
-                        ) from None
-                    if "__CP_BATCH_DEGENERATE__" not in msg:
-                        raise
+            out = driver_finish(
+                self.batch_finish,
+                _batch_critical_path(self.max_iterations),
+                f"{ID} long, {DIST} double",
+                g.vertices.select(ID),
+                edges,
+            )
+            if out is not None:
+                return out
         dist = g.vertices.select(
             ID, F.lit(0.0).alias(DIST)
         ).localCheckpoint()
@@ -306,7 +279,4 @@ class CriticalPath:
             dist = new.drop("__chg")
             if not m["__changed"]:
                 return dist
-        raise ValueError(
-            "CriticalPath did not converge within max_iterations — "
-            "cyclic input or depth budget too small"
-        )
+        raise ValueError(_NOT_CONVERGED)

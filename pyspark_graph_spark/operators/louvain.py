@@ -41,7 +41,12 @@ from pyspark.sql import functions as F
 
 from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
-from pyspark_graph_spark.util import checkpoint_observed
+from pyspark_graph_spark.util import (
+    checkpoint_observed,
+    driver_finish,
+    int_columns,
+    positions,
+)
 
 COMMUNITY = "community"
 
@@ -129,27 +134,43 @@ def modularity(
 
 
 def _batch_louvain_moving(fixed_rounds, max_rounds):
-    """Single-level synchronous local moving in one Arrow batch
-    (round 12, guide §2.4): the move scores are EXACT INTEGER
+    """Single-level synchronous local moving in the driver
+    (``util.driver_finish``): the move scores are EXACT INTEGER
     arithmetic (module docstring), the tie-break is the same
     (score, stay-put, smallest community) struct order, and the
     id-parity move gate replays per round — so batch == distributed
     bit for bit, including early convergence when probing. Emits the
     final (id, community) labeling (community = min member id)."""
 
-    def kern(_key, v_pdf, e_pdf):
+    def kern(v_pdf, e_pdf):
         import numpy as np
         import pandas as pd
 
+        if e_pdf.isna().any(axis=None) or v_pdf.isna().any(axis=None):
+            return None
         ids = np.sort(v_pdf["v"].to_numpy(dtype=np.int64))
-        a = e_pdf["a"].to_numpy(dtype=np.int64)
-        b = e_pdf["b"].to_numpy(dtype=np.int64)
-        w = e_pdf["w"].to_numpy(dtype=np.int64)
-        eorder = np.lexsort((b, a))
-        a, b, w = a[eorder], b[eorder], w[eorder]
+        # canonical_undirected over the raw edges: one (a <= b) row per
+        # unordered pair, weights summed, ordered by (a, b)
+        s = e_pdf[SRC].to_numpy(dtype=np.int64)
+        d = e_pdf[DST].to_numpy(dtype=np.int64)
+        w0 = e_pdf["w"].to_numpy(dtype=np.int64)
+        if np.abs(w0.astype(np.float64)).sum() > 2**61:
+            return None  # the summed weights could wrap
+        pairs, inv = np.unique(
+            np.stack([np.minimum(s, d), np.maximum(s, d)], axis=1),
+            axis=0,
+            return_inverse=True,
+        )
+        a, b = pairs[:, 0].copy(), pairs[:, 1].copy()
+        w = np.zeros(len(pairs), dtype=np.int64)
+        np.add.at(w, inv.reshape(-1), w0)
         n = len(ids)
-        a_idx = np.searchsorted(ids, a)
-        b_idx = np.searchsorted(ids, b)
+        a_idx, a_ok = positions(ids, a)
+        b_idx, b_ok = positions(ids, b)
+        if not (a_ok.all() and b_ok.all()):
+            # an endpoint outside the vertex table: the distributed joins
+            # drop it from some sums and not others
+            return None
         # weighted degrees: self-loops count twice
         deg = np.zeros(n, dtype=np.int64)
         selfloop = a == b
@@ -200,7 +221,7 @@ def _batch_louvain_moving(fixed_rounds, max_rounds):
                 or int(deg.max(initial=0)) * max(int(tot.max(initial=0)), 1)
                 > 2**61
             ):
-                raise RuntimeError("__LOUVAIN_BATCH_DEGENERATE__")
+                return None
             score = m2 * allk - du * (ctot - np.where(stay, du, 0))
             # argmax per u by (score, stay, smaller community label);
             # community order is by LABEL (= ids[slot], monotone in slot)
@@ -240,10 +261,10 @@ class Louvain:
     gate unrolls in SQL); otherwise rounds stop early when no vertex moves
     (one small count action per round, standard fixpoint probing).
 
-    ``batch_finish``: single-level (levels=1) runs whose canonical edge
-    list + vertex set fit the bound execute in one Arrow batch
-    (_batch_louvain_moving); multi-level runs and larger graphs keep the
-    per-round distributed plan. 0 disables.
+    ``batch_finish``: single-level (levels=1) runs whose edge list +
+    vertex set fit the bound come back in one Arrow fetch and run in the
+    driver (_batch_louvain_moving); multi-level runs and larger graphs
+    keep the per-round distributed plan. 0 disables.
     """
 
     def __init__(
@@ -396,43 +417,23 @@ class Louvain:
 
     def run(self, g: Graph) -> DataFrame:
         und = canonical_undirected(g.edges, self.weight_col)
-        vk = {f.name: f.dataType.typeName() for f in g.vertices.schema.fields}
-        ek = {f.name: f.dataType.typeName() for f in g.edges.schema.fields}
-        ints = ("long", "integer", "short", "byte")
         if (
             self.levels == 1
-            and self.batch_finish
-            and vk.get(ID) in ints
-            and ek.get(SRC) in ints
-            and ek.get(DST) in ints
+            and int_columns(g.vertices, ID)
+            and int_columns(g.edges, SRC, DST)
         ):
-            # gate probe on the RAW edge count (>= the canonical row
-            # count, so the bound stays conservative): counting `und`
-            # would recompute the canonical groupBy just to decide, and
-            # a checkpoint would be a wasted full write above the bound
-            # (sf1-real A/B); the raw edge frame is typically the
-            # persisted shared graph, so its count is a cache scan
-            verts = g.vertices.select(F.col(ID).alias("v"))
-            if 0 < g.edges.count() + verts.count() <= self.batch_finish:
-                out = (
-                    verts.withColumn("__g", F.lit(0))
-                    .groupBy("__g")
-                    .cogroup(
-                        und.withColumn("__g", F.lit(0)).groupBy("__g")
-                    )
-                    .applyInPandas(
-                        _batch_louvain_moving(
-                            self.fixed_rounds, self.max_rounds
-                        ),
-                        f"{ID} long, {COMMUNITY} long",
-                    )
-                )
-                try:
-                    # eager so the int64-magnitude deferral surfaces here
-                    return out.localCheckpoint()
-                except Exception as e:
-                    if "__LOUVAIN_BATCH_DEGENERATE__" not in str(e):
-                        raise
+            # the raw edges, canonicalised in the kernel: fetching `und`
+            # would add its aggregate's shuffle job to the fetch
+            w = F.col(self.weight_col) if self.weight_col else F.lit(1)
+            out = driver_finish(
+                self.batch_finish,
+                _batch_louvain_moving(self.fixed_rounds, self.max_rounds),
+                f"{ID} long, {COMMUNITY} long",
+                g.vertices.select(F.col(ID).alias("v")),
+                g.edges.select(SRC, DST, w.cast("long").alias("w")),
+            )
+            if out is not None:
+                return out
         # mapping: original vertex id -> current-level community
         mapping = self._local_moving(
             und, g.vertices.select(F.col(ID).alias("v"))

@@ -17,9 +17,10 @@ Per round: one incident-edge min aggregation (one shuffle keyed on
 vertex), one broadcast-sized winner filter, two anti-joins on the
 shrinking checkpointed edge list — the same peel-and-repeat shape as
 MIS/k-core, with edge granularity. Once the residual edge list fits
-``batch_finish`` rows, the greedy finishes sequentially inside one
-bounded Arrow batch (the same bounded-batch finish as the multilevel
-partitioner's coarsest-level assignment): the tail rounds of the peel
+``batch_finish`` rows, one Arrow fetch brings it to the driver and the
+greedy finishes there sequentially (util.driver_finish, the same
+bounded-batch finish as the multilevel partitioner's coarsest-level
+assignment): the tail rounds of the peel
 each decide a handful of edges yet cost three fixed-overhead jobs, and
 the equivalence theorem makes the batch continuation bit-identical to
 running the peel to fixpoint. Maximal matching is the standard
@@ -34,7 +35,7 @@ from pyspark.sql import functions as F
 
 from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
-from pyspark_graph_spark.util import checkpoint_observed
+from pyspark_graph_spark.util import checkpoint_observed, driver_finish
 from pyspark_graph_spark.session import (
     default_parallelism as _default_parallelism,
 )
@@ -71,10 +72,10 @@ class MaximalMatching:
         # docstring). graph_coarsen's mapping-level gate oracle uses it.
         self.priority = priority
         # once the residual edge list fits this bound, finish the greedy
-        # sequentially inside ONE Arrow batch instead of paying 3 fixed-
-        # overhead Spark jobs per peeling round for a dwindling tail.
-        # 400k rows x ~32 B = ~13 MB on one executor (measured: 12.8 MB
-        # frame, +33 MB RSS — far inside any executor's memory), and the
+        # sequentially in the driver instead of paying 3 fixed-overhead
+        # Spark jobs per peeling round for a dwindling tail.
+        # 400k rows x ~32 B = ~13 MB fetched (measured: 12.8 MB
+        # frame, +33 MB RSS), and the
         # sequential continuation is an O(n log n) sort + linear scan
         # (measured 2.6 s at the FULL bound; it usually fires well below
         # it), so the bound trades 2-3 whole peel rounds (each a
@@ -104,10 +105,7 @@ class MaximalMatching:
     def run(self, g: Graph) -> DataFrame:
         w = self.weight_col
         base = g.edges.select(SRC, DST, *([w] if w else []))
-        # the per-round residual size probe rides each checkpoint job
-        # (round 12, checkpoint_observed) — previously one count action
-        # per peel round on the frame just materialized
-        edges, m = checkpoint_observed(
+        edges = (
             base.unionByName(
                 base.select(
                     F.col(DST).alias(SRC),
@@ -116,13 +114,11 @@ class MaximalMatching:
                 )
             )
             .filter(F.col(SRC) < F.col(DST))
-            .distinct()
             .withColumn("__p", self._priority_col())
             .withColumn(
                 "__np",
                 -F.col(w).cast("double") if w else F.lit(0.0),
-            ),
-            __n=F.count(F.lit(1)),
+            )
         )
         spark = edges.sparkSession
         # per-round winner frames, unioned ONCE after the loop — a running
@@ -150,17 +146,37 @@ class MaximalMatching:
 
             return pd.DataFrame(out, columns=[SRC, DST])
 
+        # the whole edge list fits the bound: the sequential greedy in the
+        # driver, deduplicated there (__p and __np are functions of the
+        # deduplicated columns)
+        out = driver_finish(
+            self.batch_finish,
+            lambda pdf: _batch_greedy(pdf.drop_duplicates()),
+            f"{SRC} long, {DST} long",
+            edges,
+        )
+        if out is not None:
+            return out
+        # the per-round residual size probe rides each checkpoint job
+        # (checkpoint_observed)
+        edges, m = checkpoint_observed(
+            edges.distinct(), __n=F.count(F.lit(1))
+        )
         for _ in range(self.max_iterations):
             n_edges = m["__n"] or 0
             if n_edges == 0:
                 return _merged()
-            if self.batch_finish and n_edges <= self.batch_finish:
-                tail = (
-                    edges.select(SRC, DST, "__p", "__np")
-                    .withColumn("__g", F.lit(0))
-                    .groupBy("__g")
-                    .applyInPandas(_batch_greedy, f"{SRC} long, {DST} long")
+            tail = (
+                driver_finish(
+                    self.batch_finish,
+                    _batch_greedy,
+                    f"{SRC} long, {DST} long",
+                    edges.select(SRC, DST, "__p", "__np"),
                 )
+                if n_edges <= self.batch_finish
+                else None
+            )
+            if tail is not None:
                 rounds.append(tail)
                 return _merged()
             key = F.struct(

@@ -22,7 +22,11 @@ from pyspark.sql import functions as F
 
 from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
-from pyspark_graph_spark.util import checkpoint_observed
+from pyspark_graph_spark.util import (
+    checkpoint_observed,
+    driver_finish,
+    positions,
+)
 
 
 class MaximalIndependentSet:
@@ -42,23 +46,22 @@ class MaximalIndependentSet:
         # removes redundant jobs from per-round callers.
         self.edges_symmetric = edges_symmetric
         # once BOTH the undecided vertex list and the residual edge list
-        # fit this bound, the remaining Luby rounds run inside one
-        # cogrouped Arrow batch — BIT-IDENTICAL to the distributed
-        # continuation because the batch consumes the same Spark-computed
-        # xxhash64(id, seed, round) priorities (shipped as columns) and
-        # applies the same strict-majority rule per round. The peel's
-        # tail rounds each decide a handful of vertices yet cost several
-        # fixed-overhead jobs. 0 disables the batch finish. 1M rows is
-        # ~16 MB of (id, hash) / (src, dst) columns in one Arrow batch on
-        # one executor — bounded by construction; dense graphs (where
-        # Luby finishes in O(1) rounds anyway) skip the distributed peel
-        # entirely below the bound, sparse billion-edge graphs still
-        # take the distributed path.
+        # fit this bound, the remaining Luby rounds run in the driver on
+        # one Arrow fetch of both (_batch_rounds) — BIT-IDENTICAL to the
+        # distributed continuation because the kernel computes the same
+        # xxhash64(id, seed, round) priorities and applies the same
+        # strict-majority rule per round. The peel's tail rounds each
+        # decide a handful of vertices yet cost several fixed-overhead
+        # jobs. 0 disables the batch finish. 1M rows is ~16 MB of
+        # (src, dst) columns fetched; dense graphs (where Luby finishes
+        # in O(1) rounds anyway) skip the distributed peel entirely below
+        # the bound, sparse billion-edge graphs still take the
+        # distributed path.
         self.batch_finish = batch_finish
 
-    # how many rounds one batch simulates before handing leftovers back
-    # to the distributed loop (Luby clears a 100k residual in well under
-    # this w.h.p.; leftovers are correct, just slower)
+    # the driver finishes charge the round budget in whole blocks of this
+    # many rounds (_batch_rounds, _batch_color), so max_iterations binds
+    # the batch as it binds the distributed loop up to one block
     _LOCAL_ROUNDS = 32
 
     def run(self, g: Graph) -> DataFrame:
@@ -89,7 +92,7 @@ class MaximalIndependentSet:
         )
         n_und = mu["__n"] or 0
         edges = sym
-        n_edges = None  # lazily counted once, then tracked per round
+        n_edges = None  # unknown until a round observes it
         spark = undecided.sparkSession
         chosen = spark.createDataFrame([], f"{ID} long")
 
@@ -97,41 +100,12 @@ class MaximalIndependentSet:
         while rnd < self.max_iterations:
             if n_und == 0:
                 break
-            if n_edges is None:
-                n_edges = edges.count()
-            if (
-                self.batch_finish
-                and n_und <= self.batch_finish
-                and n_edges <= self.batch_finish
+            if n_und <= self.batch_finish and (
+                n_edges is None or n_edges <= self.batch_finish
             ):
                 res = self._batch_rounds(undecided, edges, rnd)
-                chosen = chosen.unionByName(
-                    res.filter(F.col("chosen")).select(ID)
-                ).localCheckpoint()
-                undecided, mu = checkpoint_observed(
-                    res.filter(~F.col("chosen")).select(ID),
-                    __n=F.count(F.lit(1)),
-                )
-                n_und = mu["__n"] or 0
-                rnd += self._LOCAL_ROUNDS
-                if n_und == 0:
-                    break
-                edges, me = checkpoint_observed(
-                    edges.join(
-                        undecided.withColumnRenamed(ID, SRC),
-                        on=SRC,
-                        how="semi",
-                    )
-                    .join(
-                        undecided.withColumnRenamed(ID, DST),
-                        on=DST,
-                        how="semi",
-                    )
-                    .select(SRC, DST),
-                    __n=F.count(F.lit(1)),
-                )
-                n_edges = me["__n"] or 0
-                continue
+                if res is not None:
+                    return chosen.unionByName(res)
             pri = undecided.withColumn(
                 "__p", F.xxhash64(F.col(ID), F.lit(self.seed), F.lit(rnd))
             )
@@ -179,33 +153,34 @@ class MaximalIndependentSet:
         # rather than hand back a set that violates the documented
         # maximality invariant.
         if n_und != 0:
-            raise ValueError(
-                "MaximalIndependentSet did not decide every vertex within "
-                f"max_iterations={self.max_iterations}; Luby rounds are "
-                "O(log n) w.h.p. — raise the budget for adversarial graphs"
-            )
+            raise ValueError(self._undecided())
         return chosen
+
+    def _undecided(self) -> str:
+        return (
+            "MaximalIndependentSet did not decide every vertex within "
+            f"max_iterations={self.max_iterations}; Luby rounds are "
+            "O(log n) w.h.p. — raise the budget for adversarial graphs"
+        )
 
     def _batch_rounds(
         self, undecided: DataFrame, edges: DataFrame, rnd: int
-    ) -> DataFrame:
-        """Simulate up to ``_LOCAL_ROUNDS`` Luby rounds in one cogrouped
-        Arrow batch. Priorities are the SAME values the distributed
-        rounds would use — xxhash64(id, seed, round) — computed inside
-        the batch by the NumPy replica of Spark's xxhash64
+    ) -> DataFrame | None:
+        """The remaining Luby rounds in the driver (``util.driver_finish``)
+        once the undecided vertices and the residual edges each fit
+        ``batch_finish`` rows: the chosen ids, or None above the bound or
+        when an edge endpoint is not an undecided vertex. Priorities are
+        the SAME values the distributed rounds use — xxhash64(id, seed,
+        round) — computed by the NumPy replica of Spark's xxhash64
         (functions/xxh64_np.py, pinned bit-for-bit by
-        tests/test_xxh64_np.py), so the result stays bit-identical to
-        continuing the loop while the batch input shrinks from
-        ``_LOCAL_ROUNDS``+1 columns to one (r11: the 32 projected hash
-        columns were ~1/3 of the batch job's wall at the 1M bound).
-        Returns (id, chosen) covering chosen winners AND any vertices
-        still undecided after the local budget (handed back to the
-        distributed loop)."""
-        n_rounds = self._LOCAL_ROUNDS
+        tests/test_xxh64_np.py), so the result is bit-identical to
+        continuing the loop. The budget is charged in whole
+        ``_LOCAL_ROUNDS`` blocks, as ``_batch_color`` charges it; vertices
+        still undecided after it raise the loop's ValueError."""
+        bound = self.batch_finish
+        blocks = -(-(self.max_iterations - rnd) // self._LOCAL_ROUNDS)
+        n_rounds = blocks * self._LOCAL_ROUNDS
         seed = self.seed
-
-        vb = undecided.select(ID).withColumn("__g", F.lit(0))
-        eb = edges.select(SRC, DST).withColumn("__g", F.lit(0))
 
         def local_luby(vp, ep):
             import numpy as np
@@ -215,15 +190,14 @@ class MaximalIndependentSet:
                 xxhash64_long_int_int,
             )
 
-            ids = vp[ID].to_numpy()
+            if len(vp) > bound or len(ep) > bound:
+                return None
+            ids = np.sort(vp[ID].to_numpy(dtype=np.int64))
             n = len(ids)
-            idx = {v: i for i, v in enumerate(ids)}
-            s = np.fromiter(
-                (idx[v] for v in ep[SRC]), dtype=np.int64, count=len(ep)
-            )
-            d = np.fromiter(
-                (idx[v] for v in ep[DST]), dtype=np.int64, count=len(ep)
-            )
+            s, s_ok = positions(ids, ep[SRC].to_numpy(dtype=np.int64))
+            d, d_ok = positions(ids, ep[DST].to_numpy(dtype=np.int64))
+            if not (s_ok.all() and d_ok.all()):
+                return None
             alive = np.ones(n, dtype=bool)
             chosen = np.zeros(n, dtype=bool)
             for j in range(n_rounds):
@@ -248,26 +222,17 @@ class MaximalIndependentSet:
                 alive &= ~dead
                 keep = alive[s] & alive[d]
                 s, d = s[keep], d[keep]
-            return pd.DataFrame(
-                {
-                    ID: np.concatenate([ids[chosen], ids[alive]]),
-                    "chosen": np.concatenate(
-                        [
-                            np.ones(int(chosen.sum()), dtype=bool),
-                            np.zeros(int(alive.sum()), dtype=bool),
-                        ]
-                    ),
-                }
-            )
+            if alive.any():
+                raise ValueError(self._undecided())
+            return pd.DataFrame({ID: ids[chosen]})
 
-        def wrapped(key, vp, ep):
-            return local_luby(vp, ep)
-
-        return (
-            vb.groupBy("__g")
-            .cogroup(eb.groupBy("__g"))
-            .applyInPandas(wrapped, f"{ID} long, chosen boolean")
-            .localCheckpoint()
+        # each list is bounded on its own: the kernel checks the split
+        return driver_finish(
+            2 * bound,
+            local_luby,
+            f"{ID} long",
+            undecided.select(ID),
+            edges.select(SRC, DST),
         )
 
 
@@ -278,29 +243,30 @@ def _batch_color(
     max_colors: int,
     mis_budget: int,
     local_rounds: int,
-) -> DataFrame:
-    """Finish the WHOLE Luby-MIS coloring inside one cogrouped Arrow
-    batch: for each color c the kernel replays exactly the rounds the
-    per-color ``MaximalIndependentSet(seed=c)`` run would execute —
+    bound: int,
+) -> DataFrame | None:
+    """Finish the WHOLE Luby-MIS coloring in the driver once the
+    remaining vertex and edge lists each fit ``bound`` rows
+    (``util.driver_finish``; None above it, or when an edge endpoint is
+    not a remaining vertex): for each color c the kernel replays exactly
+    the rounds the per-color ``MaximalIndependentSet(seed=c)`` run would
+    execute —
     same xxhash64(id, c, round) priorities (NumPy replica, pinned
     bit-for-bit by tests/test_xxh64_np.py), same strict-majority win
     rule, same all-tie-continue, same round budget — so the coloring is
     bit-identical to the per-color distributed loop while the per-color
     fixed-overhead jobs (MIS batch + 4 bookkeeping checkpoints, ~7 jobs
-    × n_colors) collapse into ONE job. Returns (id, color) for every
-    input vertex; color -1 = uncolored within max_colors (caller raises
-    the same RuntimeError the loop would), -2 = a color's MIS failed to
-    decide every vertex within its budget (caller raises ValueError,
-    matching MaximalIndependentSet's loud contract)."""
+    × n_colors) collapse into one fetch. Returns (id, color) for every
+    input vertex. A color whose MIS leaves vertices undecided within its
+    budget raises ValueError (MaximalIndependentSet's loud contract);
+    vertices left uncolored after max_colors raise the loop's
+    RuntimeError."""
     # budget bookkeeping copied from MaximalIndependentSet.run: each
     # batch call charges _LOCAL_ROUNDS, and the loop re-enters while
     # rnd < max_iterations — so a color may run ceil(budget/rounds)
     # batches of local_rounds rounds each
     n_batches = -(-mis_budget // local_rounds)  # ceil
     rounds_per_color = n_batches * local_rounds
-
-    vb = remaining_v.select(ID).withColumn("__g", F.lit(0))
-    eb = remaining_e.select(SRC, DST).withColumn("__g", F.lit(0))
 
     def local_color(vp, ep):
         import numpy as np
@@ -310,15 +276,14 @@ def _batch_color(
             xxhash64_long_int_int,
         )
 
-        ids = vp[ID].to_numpy()
+        if len(vp) > bound or len(ep) > bound:
+            return None
+        ids = np.sort(vp[ID].to_numpy(dtype=np.int64))
         n = len(ids)
-        idx = {v: i for i, v in enumerate(ids)}
-        s = np.fromiter(
-            (idx[v] for v in ep[SRC]), dtype=np.int64, count=len(ep)
-        )
-        d = np.fromiter(
-            (idx[v] for v in ep[DST]), dtype=np.int64, count=len(ep)
-        )
+        s, s_ok = positions(ids, ep[SRC].to_numpy(dtype=np.int64))
+        d, d_ok = positions(ids, ep[DST].to_numpy(dtype=np.int64))
+        if not (s_ok.all() and d_ok.all()):
+            return None
         color = np.full(n, -1, dtype=np.int32)
         uncolored = np.ones(n, dtype=bool)
         for c in range(first_color, max_colors):
@@ -350,23 +315,28 @@ def _batch_color(
             if alive.any():
                 # MIS budget exhausted mid-color: loud, like the
                 # distributed MaximalIndependentSet contract
-                color[alive] = -2
-                uncolored &= ~alive
+                raise ValueError(
+                    "MaximalIndependentSet did not decide every vertex "
+                    "within its round budget during batched coloring; "
+                    "Luby rounds are O(log n) w.h.p. — raise the budget "
+                    "for adversarial graphs"
+                )
             color[chosen] = c
             uncolored &= ~chosen
             # next color's subgraph: only still-uncolored vertices
             keep = uncolored[s] & uncolored[d]
             s, d = s[keep], d[keep]
+        if uncolored.any():
+            raise RuntimeError(f"graph not colored within {max_colors} colors")
         return pd.DataFrame({ID: ids, "color": color})
 
-    def wrapped(key, vp, ep):
-        return local_color(vp, ep)
-
-    return (
-        vb.groupBy("__g")
-        .cogroup(eb.groupBy("__g"))
-        .applyInPandas(wrapped, f"{ID} long, color int")
-        .localCheckpoint()
+    # each list is bounded on its own: the kernel checks the split
+    return driver_finish(
+        2 * bound,
+        local_color,
+        f"{ID} long, color int",
+        remaining_v.select(ID),
+        remaining_e.select(SRC, DST),
     )
 
 
@@ -379,10 +349,10 @@ def greedy_coloring(
 
     Proper by construction: each color class is an independent set.
 
-    Once the remaining vertex AND edge lists fit ``batch_finish`` rows
-    (the MIS operator's bounded-batch class — ~16 MB of id/edge columns
-    on one executor), the rest of the coloring runs inside one cogrouped
-    Arrow batch, BIT-IDENTICAL to the per-color loop because the kernel
+    Once the remaining vertex AND edge lists each fit ``batch_finish``
+    rows (the MIS operator's bounded-batch class — ~16 MB of id/edge
+    columns), the rest of the coloring runs in the driver on one Arrow
+    fetch, BIT-IDENTICAL to the per-color loop because the kernel
     consumes the same xxhash64 priorities and round budgets
     (``_batch_color``). The per-color distributed peel remains the path
     for graphs above the bound; 0 disables the batch."""
@@ -400,35 +370,19 @@ def greedy_coloring(
     parts: list[DataFrame] = []
     color = 0
     while color < max_colors:
+        colored = _batch_color(
+            remaining_v,
+            remaining_e,
+            first_color=color,
+            max_colors=max_colors,
+            mis_budget=MaximalIndependentSet().max_iterations,
+            local_rounds=MaximalIndependentSet._LOCAL_ROUNDS,
+            bound=batch_finish,
+        )
+        if colored is not None:
+            parts.append(colored)
+            break  # the batch colors every remaining vertex
         if remaining_v.isEmpty():
-            break
-        if (
-            batch_finish
-            and remaining_v.count() <= batch_finish
-            and remaining_e.count() <= batch_finish
-        ):
-            colored = _batch_color(
-                remaining_v,
-                remaining_e,
-                first_color=color,
-                max_colors=max_colors,
-                mis_budget=MaximalIndependentSet().max_iterations,
-                local_rounds=MaximalIndependentSet._LOCAL_ROUNDS,
-            )
-            if not colored.filter(F.col("color") == -2).isEmpty():
-                raise ValueError(
-                    "MaximalIndependentSet did not decide every vertex "
-                    "within its round budget during batched coloring; "
-                    "Luby rounds are O(log n) w.h.p. — raise the budget "
-                    "for adversarial graphs"
-                )
-            if not colored.filter(F.col("color") == -1).isEmpty():
-                raise RuntimeError(
-                    f"graph not colored within {max_colors} colors"
-                )
-            parts.append(colored.select(ID, "color"))
-            color = max_colors  # batch finishes the job
-            remaining_v = None
             break
         sub = Graph(remaining_v, remaining_e, directed=True, indexed=True)
         # remaining_e is maintained symmetric/distinct/checkpointed by

@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 
 from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
-from pyspark_graph_spark.util import checkpoint_observed
+from pyspark_graph_spark.util import checkpoint_observed, driver_finish
 from pyspark_graph_spark.operators.connected_components import (
     COMPONENT,
     AlternatingConnectedComponents,
@@ -88,6 +88,23 @@ def _batch_kruskal(pdf):
     return pd.DataFrame(out, columns=[SRC, DST, WEIGHT])
 
 
+def _kruskal_raw(pdf):
+    """``_batch_kruskal`` over raw (src, dst, weight) rows, canonicalised as
+    ``run`` does in Spark: (least, greatest) endpoints, loops dropped (a
+    null endpoint makes one), the lightest copy of each pair kept —
+    Kruskal meets it first, so the heavier copies are rejected as cycles.
+    None on a null weight, which the distributed minima skip."""
+    import numpy as np
+
+    if pdf[WEIGHT].isna().any():
+        return None
+    pdf = pdf.dropna(subset=[SRC, DST])
+    s = pdf[SRC].to_numpy(dtype=np.int64)
+    d = pdf[DST].to_numpy(dtype=np.int64)
+    pdf = pdf.assign(**{SRC: np.minimum(s, d), DST: np.maximum(s, d)})
+    return _batch_kruskal(pdf[s != d])
+
+
 class BoruvkaMST:
     """Minimum spanning forest of an undirected weighted graph.
 
@@ -107,44 +124,56 @@ class BoruvkaMST:
         self.max_iterations = max_iterations
         # the contraction graph has <= #components rows (halving per
         # round); once it fits this bound, label it with a union-find in
-        # ONE bounded Arrow batch instead of a full AlternatingCC
+        # the driver (one Arrow fetch) instead of a full AlternatingCC
         # fixpoint (each inner CC run is itself O(log n) rounds of fixed-
         # overhead jobs — the dominant cost of Boruvka at gate scale,
         # same adjudicated bounded-batch-finish contract as matching/MIS/
-        # multilevel partition). 1M rows x 16 B ≈ 16 MB on one executor.
+        # multilevel partition). 1M rows x 16 B ≈ 16 MB in the driver.
         # 0 disables (pure distributed contraction — the asymptotic path
         # for the first rounds of a billion-vertex forest).
         self.batch_cc = batch_cc
 
+    def _contract(self, cverts, cedges):
+        """Component relabelling of one Borůvka round by the driver
+        union-find, or None when the components exceed ``batch_cc``."""
+        import numpy as np
+        import pandas as pd
+
+        if len(cverts) > self.batch_cc:
+            return None
+        c = cverts[ID].to_numpy(dtype=np.int64)
+        ids, comp = _batch_union_find(
+            np.concatenate([c, cedges[SRC].to_numpy(dtype=np.int64)]),
+            np.concatenate([c, cedges[DST].to_numpy(dtype=np.int64)]),
+        )
+        return pd.DataFrame({ID: ids, COMPONENT: comp})
+
     def run(self, g: Graph) -> DataFrame:
         w = F.col(self.weight).alias(WEIGHT)
-        # batch-bound probe rides the materializing checkpoint
-        # (round 12, checkpoint_observed)
-        edges, m0 = checkpoint_observed(
-            g.edges.select(
+        raw = g.edges.select(SRC, DST, w)
+        # the whole edge list fits the bound: the unique MSF in the driver
+        # (Kruskal over the same total order) instead of log(V) rounds of
+        # ~8 fixed-overhead jobs each — weight dtype is preserved from the
+        # input schema
+        out = driver_finish(
+            self.batch_cc,
+            _kruskal_raw,
+            f"{SRC} long, {DST} long, {WEIGHT} {dict(raw.dtypes)[WEIGHT]}",
+            raw,
+        )
+        if out is not None:
+            return out
+        edges = (
+            raw.select(
                 F.least(SRC, DST).alias(SRC),
                 F.greatest(SRC, DST).alias(DST),
-                w,
+                WEIGHT,
             )
             .filter(F.col(SRC) != F.col(DST))
             .groupBy(SRC, DST)
-            .agg(F.min(WEIGHT).alias(WEIGHT)),
-            __n=F.count(F.lit(1)),
+            .agg(F.min(WEIGHT).alias(WEIGHT))
+            .localCheckpoint()
         )
-        if self.batch_cc and (m0["__n"] or 0) <= self.batch_cc:
-            # the whole deduped edge list fits the bound: the unique MSF
-            # in ONE Arrow batch (Kruskal over the same total order)
-            # instead of log(V) rounds of ~8 fixed-overhead jobs each —
-            # weight dtype is preserved from the input schema
-            wtype = dict(edges.dtypes)[WEIGHT]
-            return (
-                edges.withColumn("__g", F.lit(0))
-                .groupBy("__g")
-                .applyInPandas(
-                    _batch_kruskal,
-                    f"{SRC} long, {DST} long, {WEIGHT} {wtype}",
-                )
-            )
 
         # component label per edge-incident vertex (isolated vertices can
         # never gain a forest edge, so they are not tracked)
@@ -209,24 +238,20 @@ class BoruvkaMST:
             cedges = chosen.select(
                 F.col("__cs").alias(SRC), F.col("__cd").alias(DST)
             )
-            if self.batch_cc and cverts.count() <= self.batch_cc:
-                # bounded batch: union-find over (self-loops ∪ picked
-                # edges) in one Arrow group — singleton components keep
-                # their label via the self-loop, union-by-min makes every
-                # root the component's min id (the same representative
-                # AlternatingCC converges to)
-                pairs = cverts.select(
-                    F.col(ID).alias(SRC), F.col(ID).alias(DST)
-                ).unionByName(cedges)
-                mapping = (
-                    pairs.withColumn("__g", F.lit(0))
-                    .groupBy("__g")
-                    .applyInPandas(
-                        _batch_union_find,
-                        f"{ID} long, {COMPONENT} long",
-                    )
-                )
-            else:
+            # union-find over (self-loops ∪ picked edges) in the driver
+            # once the component graph fits: singleton components keep
+            # their label via the self-loop, union-by-min makes every root
+            # the component's min id (the same representative
+            # AlternatingCC converges to); each component picks at most
+            # one edge, so the fetch holds at most 2 x batch_cc rows
+            mapping = driver_finish(
+                2 * self.batch_cc,
+                self._contract,
+                f"{ID} long, {COMPONENT} long",
+                cverts,
+                cedges,
+            )
+            if mapping is None:
                 cgraph = Graph(
                     cverts,
                     cedges,

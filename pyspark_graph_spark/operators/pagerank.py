@@ -44,8 +44,8 @@ from pyspark_graph_spark.util import (
 
 PAGERANK = "pagerank"
 
-# Bounded-batch finish: same contract and ulp story as the SVD/ALS
-# kernels (operators/svd.py module note). While vertices + symmetric
+# Bounded-batch finish, the one every bounded-batch operator runs (ulp
+# story as in operators/svd.py's module note). While vertices + symmetric
 # edges fit batch_finish, the driver fetches both in one limited Arrow
 # collect (util.fetch_bounded_all): (src, dst), the weight only when
 # weighted, and the vertex ids; unit weights and the reset vector are

@@ -2,15 +2,15 @@
 
 The METIS recipe (Karypis & Kumar, SIAM J. Sci. Comput. 1998) on
 DataFrames: repeatedly contract a maximal matching (operators/matching.py
-``coarsen``) until the supervertex graph fits one Arrow batch, assign the
+``coarsen``) until the supervertex graph fits one driver fetch, assign the
 coarsest supervertices to k parts by greedy least-loaded bin packing
 weighted by how many fine vertices each supervertex carries, then project
 the labels back down through the composed contraction mappings.
 
 Scale shape: every level is the matching peel (shuffles keyed on vertex)
 plus two hash joins; the only non-distributed step is the final
-assignment, which by construction runs on <= ``max_coarse`` rows inside a
-single ``applyInPandas`` group — a bounded batch, not a driver collect.
+assignment, which by construction runs on <= ``max_batch`` rows fetched
+to the driver in one bounded Arrow collect (``util.driver_finish``).
 The greedy least-loaded rule carries Graham's list-scheduling bound:
 max part load <= (total/k) + max item, which ``run`` exposes as an
 exactly checkable invariant (the gate oracle pins its violation count to
@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
 from pyspark_graph_spark.operators.matching import MaximalMatching, coarsen
+from pyspark_graph_spark.util import driver_finish, positions
 
 
 def two_hop_pairs(g: Graph, matching: DataFrame) -> DataFrame:
@@ -108,8 +109,8 @@ class MultilevelPartition:
     [0, k); ``super`` is the coarsest supervertex the vertex contracted
     into (exposed for audits and locality-aware placement).
 
-    ``max_coarse`` bounds the coarsest level (and therefore the single
-    Arrow batch the bin packing runs on). Coarsening stops early when a
+    ``max_coarse`` bounds the coarsest level (and therefore the rows the
+    bin packing fetches to the driver). Coarsening stops early when a
     level yields no matching (isolated-vertex-only residue); if the
     graph still exceeds ``max_batch`` supervertices at that point, run
     raises rather than silently shipping an unbounded batch.
@@ -118,8 +119,8 @@ class MultilevelPartition:
     (the same bounded-batch class as MaximalMatching's tail finish and
     greedy_coloring's ``_batch_color``), the REST of the multilevel
     recipe — every remaining match/contract level, the 2-hop pairing,
-    and the final greedy bin packing — runs inside one cogrouped Arrow
-    batch, bit-identical to the distributed loop: matchings replay the
+    and the final greedy bin packing — runs in the driver on one Arrow
+    fetch, bit-identical to the distributed loop: matchings replay the
     sequential greedy the peel provably converges to (module docstring
     of operators/matching.py) over the same xxhash64(src, dst, seed+lvl)
     priorities (NumPy replica, pinned by tests/test_xxh64_np.py), the
@@ -184,12 +185,10 @@ class MultilevelPartition:
             n_v = cur.vertices.count()
             if n_v <= self.max_coarse:
                 break
-            if (
-                self.batch_finish
-                and n_v <= self.batch_finish
-                and cur.edges.count() <= self.batch_finish
-            ):
-                return self._finish_batched(cur, comp, lvl, prev_n)
+            if n_v <= self.batch_finish:
+                out = self._finish_batched(cur, comp, lvl, prev_n)
+                if out is not None:
+                    return out
             if prev_n is not None:
                 hub_starved = n_v > 0.7 * prev_n
             prev_n = n_v
@@ -224,16 +223,15 @@ class MultilevelPartition:
             )
 
         sizes = comp.groupBy("super").agg(F.count(F.lit(1)).alias("size"))
-        n_coarse = sizes.count()
-        if n_coarse > self.max_batch:
-            raise ValueError(
-                f"coarsening stalled at {n_coarse} supervertices "
-                f"(> max_batch={self.max_batch}); the residue has no "
-                "matchable edges — partition components separately or "
-                "raise max_batch"
-            )
-
         return self._pack_and_project(comp, sizes)
+
+    def _stalled(self, n_coarse: int) -> ValueError:
+        return ValueError(
+            f"coarsening stalled at {n_coarse} supervertices "
+            f"(> max_batch={self.max_batch}); the residue has no "
+            "matchable edges — partition components separately or "
+            "raise max_batch"
+        )
 
     def _finish_batched(
         self,
@@ -242,13 +240,13 @@ class MultilevelPartition:
         lvl: int,
         prev_n: int | None,
     ) -> DataFrame:
-        """Run the remaining levels + packing inside one cogrouped Arrow
-        batch (docstring of the class). ``cur`` fits ``batch_finish``
-        rows on both frames; ``comp`` maps fine ids to ``cur``'s
-        vertices. The kernel's output is one row per current-level
-        vertex: its coarsest supervertex and part; ``part = -1`` rows
-        signal the coarsening-stalled overflow the distributed loop
-        raises on."""
+        """Run the remaining levels + packing in the driver (docstring of
+        the class), or return None when ``cur``'s edge list exceeds
+        ``batch_finish`` rows (its vertex count is known to fit). ``comp``
+        maps fine ids to ``cur``'s vertices. The kernel's output is one
+        row per current-level vertex: its coarsest supervertex and part;
+        a coarsest level above ``max_batch`` raises the distributed
+        loop's coarsening-stalled ValueError."""
         if lvl == 0:
             vsz = cur.vertices.select(
                 F.col(ID).alias("v"), F.lit(1).cast("long").alias("size")
@@ -267,10 +265,8 @@ class MultilevelPartition:
                     "__m", F.lit(1)
                 )
             )
-        vb = vsz.withColumn("__g", F.lit(0))
-        eb = e.withColumn("__g", F.lit(0))
-
         k = self.k
+        bound = self.batch_finish
         max_coarse = self.max_coarse
         max_levels = self.max_levels
         max_batch = self.max_batch
@@ -326,9 +322,11 @@ class MultilevelPartition:
                 has_next[:-1] = first[:-1] & (gidx[1:] == gidx[:-1])
                 return u_o[has_next], u_o[np.flatnonzero(has_next) + 1]
 
+            em = ep["__m"].to_numpy()
+            if (em == 0).sum() > bound:
+                return None
             entry = vp["v"].to_numpy().astype(np.int64, copy=True)
             vs_size = vp["size"].to_numpy().astype(np.int64, copy=True)
-            em = ep["__m"].to_numpy()
             s_all = ep[SRC].to_numpy().astype(np.int64, copy=False)
             d_all = ep[DST].to_numpy().astype(np.int64, copy=False)
             s = s_all[em == 0].copy()
@@ -422,13 +420,7 @@ class MultilevelPartition:
                 lvl_cur += 1
 
             if len(vs_ids) > max_batch:
-                return pd.DataFrame(
-                    {
-                        "v": entry,
-                        "final": sup_of_entry,
-                        "part": np.full(len(entry), -1, dtype=np.int32),
-                    }
-                )
+                raise self._stalled(len(np.unique(sup_of_entry)))
 
             # greedy least-loaded packing, size desc / super asc — the
             # same heap loop `assign` runs in the distributed path
@@ -449,23 +441,13 @@ class MultilevelPartition:
                 {"v": entry, "final": sup_of_entry, "part": parts}
             )
 
-        def wrapped(key, vp, ep):
-            return local_finish(vp, ep)
-
-        out = (
-            vb.groupBy("__g")
-            .cogroup(eb.groupBy("__g"))
-            .applyInPandas(wrapped, "v long, final long, part int")
-            .localCheckpoint()
+        # vertices and edges each fit the bound, plus a first matching of
+        # at most half the vertices: the kernel checks the edges
+        out = driver_finish(
+            3 * bound, local_finish, "v long, final long, part int", vsz, e
         )
-        if not out.filter(F.col("part") < 0).isEmpty():
-            n_coarse = out.select("final").distinct().count()
-            raise ValueError(
-                f"coarsening stalled at {n_coarse} supervertices "
-                f"(> max_batch={self.max_batch}); the residue has no "
-                "matchable edges — partition components separately or "
-                "raise max_batch"
-            )
+        if out is None:
+            return None
         return comp.join(
             F.broadcast(out.withColumnRenamed("v", "super")), on="super"
         ).select(ID, "part", F.col("final").alias("super"))
@@ -473,10 +455,10 @@ class MultilevelPartition:
     def _pack_and_project(
         self, comp: DataFrame, sizes: DataFrame
     ) -> DataFrame:
-        """Greedy least-loaded bin packing of the coarsest level in one
-        bounded Arrow batch, then label projection — the distributed
-        path's tail (the batched path replays the identical heap loop
-        inside its kernel)."""
+        """Greedy least-loaded bin packing of the coarsest level in the
+        driver, then label projection — the distributed path's tail (the
+        batched path replays the identical heap loop inside its kernel).
+        A coarsest level above ``max_batch`` rows raises."""
         k = self.k
 
         def assign(pdf):
@@ -495,11 +477,11 @@ class MultilevelPartition:
             pdf["part"] = parts
             return pdf[["super", "part"]]
 
-        assigned = (
-            sizes.withColumn("__g", F.lit(0))
-            .groupBy("__g")
-            .applyInPandas(assign, "super long, part int")
+        assigned = driver_finish(
+            self.max_batch, assign, "super long, part int", sizes
         )
+        if assigned is None:
+            raise self._stalled(sizes.count())
         return comp.join(F.broadcast(assigned), on="super").select(
             ID, "part", "super"
         )
@@ -513,10 +495,12 @@ def _refine_batched(
     cap_const: "int | None",
     rounds: int,
     seed: int,
-) -> DataFrame:
-    """Whole-refinement Arrow batch below ``refine``'s ``batch_finish``
-    bound: every round's neighbor-weight scoring, best-part selection,
-    Luby independence thinning and per-part intake capping replays the
+    bound: int,
+) -> DataFrame | None:
+    """The whole refinement in the driver while the assignment and the
+    edge list each fit ``bound`` rows (None above it): every round's
+    neighbor-weight scoring, best-part selection, Luby independence
+    thinning and per-part intake capping replays the
     distributed arithmetic bit for bit — the same
     ``xxhash64(id, seed+round)`` priorities (NumPy replica, pinned by
     tests/test_xxh64_np.py), the same (gain, hash, id) domination key,
@@ -532,49 +516,37 @@ def _refine_batched(
         )
     part_type = cur.schema["part"].dataType.simpleString()
     vrows = verts.select(
-        F.col(ID).alias("a"),
-        F.lit(0).cast("long").alias("b"),
+        F.col(ID).cast("long").alias(ID),
         F.col("part").cast("long").alias("part"),
         F.col("__cap").alias("__cap"),
-        F.lit(1).alias("__m"),
     )
     erows = g.edges.select(
-        F.col(SRC).cast("long").alias("a"),
-        F.col(DST).cast("long").alias("b"),
-        F.lit(0).cast("long").alias("part"),
-        F.lit(0.0).cast("double").alias("__cap"),
-        F.lit(0).alias("__m"),
+        F.col(SRC).cast("long").alias(SRC),
+        F.col(DST).cast("long").alias(DST),
     )
 
-    def kernel(pdf):
+    def kernel(vp, ep):
         import numpy as np
         import pandas as pd
 
         from pyspark_graph_spark.functions.xxh64_np import xxhash64_long_int
 
-        m = pdf["__m"].to_numpy()
-        a = pdf["a"].to_numpy().astype(np.int64, copy=False)
-        b = pdf["b"].to_numpy().astype(np.int64, copy=False)
-        vids = a[m == 1].copy()
-        part = pdf["part"].to_numpy().astype(np.int64, copy=False)[
-            m == 1
-        ].copy()
-        caps = pdf["__cap"].to_numpy()[m == 1]
+        if len(vp) > bound or len(ep) > bound:
+            return None
+        vids = vp[ID].to_numpy().astype(np.int64, copy=True)
+        part = vp["part"].to_numpy().astype(np.int64, copy=True)
+        caps = vp["__cap"].to_numpy()
         cap_val = float(caps[0]) if len(caps) else 0.0
-        es_raw, ed_raw = a[m == 0], b[m == 0]
+        es_raw = ep[SRC].to_numpy().astype(np.int64, copy=False)
+        ed_raw = ep[DST].to_numpy().astype(np.int64, copy=False)
 
         order = np.argsort(vids, kind="stable")
         vids_s = vids[order]
         part_s = part[order]
         n = len(vids_s)
 
-        def to_idx(x):
-            i = np.searchsorted(vids_s, x)
-            ok = (i < n) & (vids_s[np.minimum(i, max(n - 1, 0))] == x)
-            return i, ok
-
-        si, sok = to_idx(es_raw)
-        di, dok = to_idx(ed_raw)
+        si, sok = positions(vids_s, es_raw)
+        di, dok = positions(vids_s, ed_raw)
         keep = sok & dok  # edges with a foreign endpoint never reach a
         # join with `cur` in the distributed shape — drop identically
         es, ed = si[keep], di[keep]
@@ -635,13 +607,13 @@ def _refine_batched(
             part_s[movers] = to[movers]
         return pd.DataFrame({ID: vids_s, "part": part_s})
 
-    return (
-        vrows.unionByName(erows)
-        .withColumn("__g", F.lit(0))
-        .groupBy("__g")
-        .applyInPandas(kernel, f"{ID} long, part long")
-        .select(ID, F.col("part").cast(part_type).alias("part"))
+    # each frame is bounded on its own: the kernel checks the split
+    out = driver_finish(
+        2 * bound, kernel, f"{ID} long, part long", vrows, erows
     )
+    if out is None:
+        return None
+    return out.select(ID, F.col("part").cast(part_type).alias("part"))
 
 
 def refine(
@@ -679,10 +651,9 @@ def refine(
     it scans materialized rows instead of re-executing the caller's
     (possibly expensive, unpersisted) partitioning lineage twice.
 
-    ``batch_finish`` (round 12, guide §2.4): when both the assignment
-    and the edge list fit the bound (two count probes on checkpointed /
-    caller frames), ALL rounds run inside one cogrouped Arrow batch
-    (``_refine_batched``) that replays the distributed arithmetic bit
+    ``batch_finish``: when both the assignment and the edge list fit the
+    bound, one Arrow fetch brings them to the driver and ALL rounds run
+    there (``_refine_batched``), replaying the distributed arithmetic bit
     for bit — at gate scale the distributed shape cost ~2 checkpoints +
     1 probe + a windowed rank per round in fixed-overhead jobs. The
     distributed loop remains the only path above the bound (0 disables).
@@ -724,13 +695,8 @@ def refine(
             "parts carries duplicate vertex ids — the assignment must "
             "have exactly one row per vertex"
         )
-    if (
-        batch_finish
-        and -(2**31) <= seed <= 2**31 - 1 - rounds  # int-literal hash replica
-        and cur.count() <= batch_finish
-        and g.edges.count() <= batch_finish
-    ):
-        return _refine_batched(
+    if -(2**31) <= seed <= 2**31 - 1 - rounds:  # int-literal hash replica
+        out = _refine_batched(
             g,
             cur,
             k,
@@ -738,7 +704,10 @@ def refine(
             None if cap_df is not None else cap,
             rounds,
             seed,
+            batch_finish,
         )
+        if out is not None:
+            return out
     for r in range(rounds):
         nw = (
             sym.join(

@@ -99,8 +99,6 @@ class Pregel:
         max_iterations: int = 10,
         carry_columns: list[str] | None = None,
         salt_buckets: int | None = None,
-        auto_extend: bool = False,
-        hard_max_iterations: int | None = None,
     ):
         if msg_to_dst is None and msg_to_src is None:
             raise ValueError("at least one of msg_to_dst/msg_to_src required")
@@ -119,22 +117,6 @@ class Pregel:
         if salt_buckets is not None and salt_buckets < 2:
             raise ValueError("salt_buckets must be >= 2 (or None)")
         self.salt_buckets = salt_buckets
-        # Opt-in resumable budget (r10 verdict #5): when the frontier is
-        # still non-empty at max_iterations, CONTINUE from the
-        # checkpointed state with a doubled budget instead of forcing the
-        # caller into a full restart (state is checkpointed per round, so
-        # a diameter-25 graph under max_iterations=20 costs ~25 rounds of
-        # work, not 20 + 45). Still bounded: the loop hard-stops at
-        # hard_max_iterations (default 8x the initial budget) and leaves
-        # self.converged False, so require_convergence callers stay loud.
-        self.auto_extend = auto_extend
-        if hard_max_iterations is not None and hard_max_iterations < max_iterations:
-            raise ValueError("hard_max_iterations must be >= max_iterations")
-        self.hard_max_iterations = (
-            hard_max_iterations
-            if hard_max_iterations is not None
-            else (8 * max_iterations if auto_extend else max_iterations)
-        )
 
     # -- messaging ----------------------------------------------------------
 
@@ -237,8 +219,7 @@ class Pregel:
         # floods) must check this.
         self.converged = False
         self.rounds_run = 0
-        budget = self.max_iterations
-        while self.rounds_run < budget:
+        while self.rounds_run < self.max_iterations:
             agg = self._aggregate(
                 self._messages(edges_by_src, edges_by_dst, changed, n_changed)
             )
@@ -291,12 +272,4 @@ class Pregel:
             if not n_changed:
                 self.converged = True
                 break
-            if (
-                self.rounds_run == budget
-                and self.auto_extend
-                and budget < self.hard_max_iterations
-            ):
-                # continuation, not restart: state/changed are already
-                # checkpointed, the next round picks up the live frontier
-                budget = min(2 * budget, self.hard_max_iterations)
         return state

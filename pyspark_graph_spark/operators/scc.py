@@ -32,9 +32,17 @@ from pyspark.sql import functions as F
 from pyspark_graph_spark.constants import DST, ID, MSG, SRC, STATE
 from pyspark_graph_spark.graph import Graph
 from pyspark_graph_spark.operators.pregel import Pregel
-from pyspark_graph_spark.util import checkpoint_observed
+from pyspark_graph_spark.util import (
+    checkpoint_observed,
+    driver_finish,
+    int_columns,
+)
 
 COMPONENT = "component"
+_REACHABLE_NOT_CONVERGED = (
+    "reachable_set did not converge within max_rounds — raise the "
+    "budget toward the graph diameter"
+)
 
 
 def _batch_tarjan(pdf):
@@ -43,9 +51,8 @@ def _batch_tarjan(pdf):
     the label the FW-BW coloring converges to (the root r of an emitted
     SCC satisfies color(r) = r, and any larger member would out-color
     it, so r is the SCC maximum; equality pinned by test). Iterative
-    Tarjan (explicit stack, no recursion limit) inside one bounded Arrow
-    batch — the same adjudicated bounded-batch-finish contract as the
-    CC/MST/matching batches."""
+    Tarjan (explicit stack, no recursion limit) in the driver — the same
+    bounded-batch-finish contract as the CC/MST/matching finishes."""
     import pandas as pd
 
     adj: dict[int, list[int]] = {}
@@ -119,13 +126,29 @@ class StronglyConnectedComponents:
     ):
         self.max_outer_iterations = max_outer_iterations
         self.max_flood_iterations = max_flood_iterations
-        # once the deduped edge list fits this bound, compute all SCCs
-        # with one Arrow-batch iterative Tarjan instead of the
+        # once the loop-free edge list fits this bound, compute all SCCs
+        # with an iterative Tarjan in the driver instead of the
         # trim/color/backward-mark rounds (each a Pregel flood of
         # fixed-overhead supersteps). Labels identical by construction
         # (max member id); the distributed FW-BW remains the only path
         # above the bound. 0 disables.
         self.batch_finish = batch_finish
+
+    def _tarjan_finish(self, v_pdf, e_pdf):
+        """(id, component) of every vertex from the driver Tarjan, with
+        the vertices no edge touches as singletons; None when the
+        loop-free edge list exceeds the bound or an edge endpoint is not
+        a vertex (the floods only carry state for vertices)."""
+        import pandas as pd
+
+        if len(e_pdf) > self.batch_finish:
+            return None
+        ids = v_pdf[ID]
+        if not (e_pdf[SRC].isin(ids).all() and e_pdf[DST].isin(ids).all()):
+            return None
+        mem = _batch_tarjan(e_pdf)
+        rest = ids[~ids.isin(mem[ID])]
+        return pd.concat([mem, pd.DataFrame({ID: rest, COMPONENT: rest})])
 
     def _max_color_flood(self, verts: DataFrame, edges: DataFrame) -> DataFrame:
         """(id, color): max id that reaches each vertex along out-edges."""
@@ -214,6 +237,18 @@ class StronglyConnectedComponents:
 
     def run(self, g: Graph) -> DataFrame:
         """Returns ``(id, component)`` — component = max vertex id in the SCC."""
+        if int_columns(g.vertices, ID) and int_columns(g.edges, SRC, DST):
+            # each list is bounded on its own: _tarjan_finish checks the
+            # edges, so a vertex table above the bound runs the rounds
+            out = driver_finish(
+                2 * self.batch_finish,
+                self._tarjan_finish,
+                f"{ID} long, {COMPONENT} long",
+                g.vertices.select(ID),
+                g.edges.select(SRC, DST).filter(F.col(SRC) != F.col(DST)),
+            )
+            if out is not None:
+                return out
         verts = g.vertices.select(ID).localCheckpoint()
         edges = (
             g.edges.select(SRC, DST)
@@ -222,19 +257,6 @@ class StronglyConnectedComponents:
             .localCheckpoint()
         )
         spark = verts.sparkSession
-        if self.batch_finish and edges.count() <= self.batch_finish:
-            membership = (
-                edges.withColumn("__g", F.lit(0))
-                .groupBy("__g")
-                .applyInPandas(
-                    _batch_tarjan, f"{ID} long, {COMPONENT} long"
-                )
-            )
-            singletons = (
-                verts.join(membership.select(ID), ID, "anti")
-                .withColumn(COMPONENT, F.col(ID))
-            )
-            return membership.unionByName(singletons)
         done = spark.createDataFrame([], f"{ID} long, {COMPONENT} long")
 
         for _ in range(self.max_outer_iterations):
@@ -260,25 +282,24 @@ class StronglyConnectedComponents:
         return done
 
 
-def _batch_reachable(max_rounds: int):
-    """Kernel factory for the bounded-batch reachable_set finish: one
-    Arrow batch holds the (already direction-oriented) edge list plus
-    the seed ids, and the BFS closure replays the distributed loop's
-    round structure exactly — up to ``max_rounds`` frontier expansions,
-    early return on an empty frontier, and the SAME loud failure when
-    the budget is exhausted before the fixpoint (ValueError text
-    identical; it surfaces through the task failure)."""
+def _batch_reachable(max_rounds: int, bound: int):
+    """Kernel of the bounded-batch reachable_set finish: the (already
+    direction-oriented) edge list and the seed ids, fetched together,
+    and a BFS closure that replays the distributed loop's round
+    structure exactly — up to ``max_rounds`` frontier expansions, early
+    return on an empty frontier, and the SAME loud ValueError when the
+    budget is exhausted before the fixpoint. None when the edge list
+    exceeds ``bound``."""
 
-    def bfs(pdf):
+    def bfs(e_pdf, s_pdf):
         import pandas as pd
 
-        m = pdf["__m"].to_numpy()
-        a = pdf["a"].to_numpy()
-        b = pdf["b"].to_numpy()
+        if len(e_pdf) > bound:
+            return None
         adj: dict[int, list[int]] = {}
-        for s, d in zip(a[m == 0], b[m == 0]):
+        for s, d in zip(e_pdf["a"], e_pdf["b"]):
             adj.setdefault(int(s), []).append(int(d))
-        visited = {int(v) for v in a[m == 1]}
+        visited = {int(v) for v in s_pdf["a"]}
         frontier = visited
         for _ in range(max_rounds):
             nxt = {
@@ -291,10 +312,7 @@ def _batch_reachable(max_rounds: int):
                 return pd.DataFrame({ID: sorted(visited)})
             visited |= nxt
             frontier = nxt
-        raise ValueError(
-            "reachable_set did not converge within max_rounds — raise "
-            "the budget toward the graph diameter"
-        )
+        raise ValueError(_REACHABLE_NOT_CONVERGED)
 
     return bfs
 
@@ -319,50 +337,33 @@ def reachable_set(
     larger wavefront falls back to the shuffle join. The per-round
     count() doubles as convergence probe and plan selector.
 
-    ``batch_finish`` (round 12, guide §2.4): once the edge list fits the
-    bound (one count probe), the whole closure runs as ONE cogrouped
-    Arrow BFS instead of 2-3 fixed-overhead jobs per frontier round —
-    the same bounded-batch-finish contract as the SCC/matching/partition
-    kernels, replaying the identical round budget and loud
-    non-convergence failure. The set of returned ids is identical by
-    construction (reachability is order-free). 0 disables; the
-    distributed loop remains the only path above the bound."""
+    ``batch_finish``: once the edge list fits the bound, one Arrow fetch
+    brings it and the seeds to the driver and the whole closure runs
+    there (util.driver_finish) instead of 2-3 fixed-overhead jobs per
+    frontier round — the same bounded-batch finish as the SCC/matching/
+    partition kernels, replaying the identical round budget and raising
+    the same non-convergence ValueError at the call. The set of returned
+    ids is identical by construction (reachability is order-free). 0
+    disables; the distributed loop remains the only path above the bound
+    (and for more than ``batch_finish`` seeds)."""
     if direction not in ("forward", "backward"):
         raise ValueError("direction must be 'forward' or 'backward'")
     out_col, in_col = (
         (SRC, DST) if direction == "forward" else (DST, SRC)
     )
-    if batch_finish and edges.count() <= batch_finish:
-        oriented = edges.select(
+    # each list is bounded on its own: the kernel checks the edges
+    out = driver_finish(
+        2 * batch_finish,
+        _batch_reachable(max_rounds, batch_finish),
+        f"{ID} long",
+        edges.select(
             F.col(out_col).cast("long").alias("a"),
             F.col(in_col).cast("long").alias("b"),
-        ).withColumn("__m", F.lit(0))
-        seed_rows = (
-            seeds.select(
-                F.col(seeds.columns[0]).cast("long").alias("a")
-            )
-            .distinct()
-            .select("a", F.lit(0).cast("long").alias("b"))
-            .withColumn("__m", F.lit(1))
-        )
-        batched = (
-            oriented.unionByName(seed_rows)
-            .withColumn("__g", F.lit(0))
-            .groupBy("__g")
-            .applyInPandas(_batch_reachable(max_rounds), f"{ID} long")
-        )
-        try:
-            # eager like the distributed loop: the non-convergence
-            # failure must surface as a ValueError AT THE CALL, not as a
-            # lazy task failure in whatever action touches the frame next
-            return batched.localCheckpoint()
-        except Exception as e:  # translate the task-wrapped kernel error
-            if "did not converge within max_rounds" in str(e):
-                raise ValueError(
-                    "reachable_set did not converge within max_rounds — "
-                    "raise the budget toward the graph diameter"
-                ) from None
-            raise
+        ),
+        seeds.select(F.col(seeds.columns[0]).cast("long").alias("a")),
+    )
+    if out is not None:
+        return out
     # size probes ride the materializing jobs (round 12,
     # checkpoint_observed): the loop paid a count action per round on
     # top of each checkpoint, and re-materialized the visited union
@@ -392,7 +393,4 @@ def reachable_set(
             return visited
         visited = visited.unionByName(new_frontier)
         frontier = new_frontier
-    raise ValueError(
-        "reachable_set did not converge within max_rounds — raise the "
-        "budget toward the graph diameter"
-    )
+    raise ValueError(_REACHABLE_NOT_CONVERGED)

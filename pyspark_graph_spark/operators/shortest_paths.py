@@ -25,9 +25,10 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pyspark_graph_spark.constants import ID, MSG, STATE
+from pyspark_graph_spark.constants import DST, ID, MSG, SRC, STATE
 from pyspark_graph_spark.graph import Graph
 from pyspark_graph_spark.operators.pregel import Pregel
+from pyspark_graph_spark.util import driver_finish, int_columns
 
 DISTANCES = "distances"
 LANDMARK = "landmark"
@@ -53,8 +54,8 @@ def _maps_differ(old: Column, new: Column) -> Column:
 def _batch_landmark_bfs(
     landmarks: list[int], max_iterations: int, directed: bool
 ):
-    """Multi-landmark hop-distance BFS in one Arrow batch (round 12,
-    guide §2.4 — the bounded-batch-finish contract of the CC/SCC/
+    """Multi-landmark hop-distance BFS in the driver
+    (``util.driver_finish``, the bounded-batch finish of the CC/SCC/
     reachable kernels). Hop distances are the unique integer BFS
     fixpoint, so the batch equals the distributed Pregel BY
     CONSTRUCTION, including the budget truncation: the Pregel delivers
@@ -63,7 +64,7 @@ def _batch_landmark_bfs(
     vertices — edges with an endpoint outside the vertex table relay
     nothing, exactly like the Pregel's state join."""
 
-    def kern(_key, v_pdf, e_pdf):
+    def kern(v_pdf, e_pdf):
         import pandas as pd
 
         verts = [int(x) for x in v_pdf[ID]]
@@ -113,7 +114,7 @@ class ShortestPaths:
     returns ``(id, landmark, distance)`` rows (SQL/oracle-friendly).
 
     ``batch_finish``: once vertices + edges fit the bound, the whole
-    multi-landmark BFS runs in one cogrouped Arrow batch (see
+    multi-landmark BFS runs in the driver on one Arrow fetch of both (see
     _batch_landmark_bfs); the per-round Pregel stays the only path above
     the bound and for DataFrame-valued landmark sets. 0 disables.
     """
@@ -139,44 +140,24 @@ class ShortestPaths:
         )
 
     def run(self, g: Graph) -> DataFrame:
-        if self.batch_finish and not isinstance(self.landmarks, DataFrame):
-            vkinds = {
-                f.name: f.dataType.typeName() for f in g.vertices.schema.fields
-            }
-            ekinds = {
-                f.name: f.dataType.typeName() for f in g.edges.schema.fields
-            }
-            integral = vkinds.get(ID) in (
-                "long",
-                "integer",
-                "short",
-                "byte",
-            ) and all(
-                ekinds.get(c) in ("long", "integer", "short", "byte")
-                for c in ("src", "dst")
+        if (
+            not isinstance(self.landmarks, DataFrame)
+            and int_columns(g.vertices, ID)
+            and int_columns(g.edges, SRC, DST)
+        ):
+            out = driver_finish(
+                self.batch_finish,
+                _batch_landmark_bfs(
+                    [int(x) for x in self.landmarks],
+                    self.max_iterations,
+                    g.directed,
+                ),
+                f"{ID} long, {DISTANCES} map<bigint,int>",
+                g.vertices.select(ID),
+                g.edges.select(SRC, DST),
             )
-            if (
-                integral
-                and g.vertices.count() + g.edges.count()
-                <= self.batch_finish
-            ):
-                verts = g.vertices.select(ID)
-                edges = g.edges.select("src", "dst")
-                return (
-                    verts.withColumn("__g", F.lit(0))
-                    .groupBy("__g")
-                    .cogroup(
-                        edges.withColumn("__g", F.lit(0)).groupBy("__g")
-                    )
-                    .applyInPandas(
-                        _batch_landmark_bfs(
-                            [int(x) for x in self.landmarks],
-                            self.max_iterations,
-                            g.directed,
-                        ),
-                        f"{ID} long, {DISTANCES} map<bigint,int>",
-                    )
-                )
+            if out is not None:
+                return out
         lm = F.broadcast(self._landmark_df(g))
         seeded = g.vertices.select(ID).join(
             lm, on=F.col(ID) == F.col("__lm"), how="left"

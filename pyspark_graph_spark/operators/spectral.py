@@ -24,24 +24,27 @@ from pyspark.sql import functions as F
 
 from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
-from pyspark_graph_spark.util import checkpoint_observed, positions
+from pyspark_graph_spark.util import (
+    checkpoint_observed,
+    driver_finish,
+    int_columns,
+    positions,
+)
 
-# Bounded-batch finish (round 12, guide §2.4): same contract and ulp
-# story as the SVD/ALS/PageRank kernels (operators/svd.py module note).
-# Both spectral iterations are fully guarded (`when(norm > 0)`), so no
-# degenerate deferral is needed — the kernels replay the zero-norm
-# branch exactly.
+# Bounded-batch finish: same contract and ulp story as the SVD/ALS/
+# PageRank kernels (operators/svd.py module note); the kernels run in the
+# driver on one Arrow fetch of the vertex ids and edges
+# (util.driver_finish). Both spectral iterations are fully guarded
+# (`when(norm > 0)`), so no degenerate deferral is needed — the kernels
+# replay the zero-norm branch exactly.
 
 
 def _integral_graph(g: Graph) -> bool:
-    vk = {f.name: f.dataType.typeName() for f in g.vertices.schema.fields}
-    ek = {f.name: f.dataType.typeName() for f in g.edges.schema.fields}
-    ints = ("long", "integer", "short", "byte")
-    return vk.get(ID) in ints and ek.get(SRC) in ints and ek.get(DST) in ints
+    return int_columns(g.vertices, ID) and int_columns(g.edges, SRC, DST)
 
 
 def _eigen_batch_kernel(iterations: int):
-    def kern(_key, v_pdf, e_pdf):
+    def kern(v_pdf, e_pdf):
         import numpy as np
         import pandas as pd
 
@@ -74,7 +77,7 @@ def _hits_batch_kernel(iterations: int):
     only from vertex-table sources (only they hold hub rows), hub reads
     auth at any destination, and the output projects the vertex slots."""
 
-    def kern(_key, v_pdf, e_pdf):
+    def kern(v_pdf, e_pdf):
         import numpy as np
         import pandas as pd
 
@@ -112,20 +115,6 @@ def _hits_batch_kernel(iterations: int):
     return kern
 
 
-def _cogroup_graph(
-    verts: DataFrame, edges: DataFrame, kernel, schema: str
-) -> DataFrame:
-    return (
-        verts.select(ID)
-        .withColumn("__g", F.lit(0))
-        .groupBy("__g")
-        .cogroup(
-            edges.select(SRC, DST).withColumn("__g", F.lit(0)).groupBy("__g")
-        )
-        .applyInPandas(kernel, schema)
-    )
-
-
 def _l2_normalize(scores: DataFrame, col: str) -> DataFrame:
     """Divide ``col`` by its global L2 norm (broadcast 1-row join)."""
     norm = scores.agg(
@@ -158,19 +147,18 @@ class EigenvectorCentrality:
         verts, mv = checkpoint_observed(
             g.vertices.select(ID), __n=F.count(F.lit(1))
         )
-        if (
-            self.batch_finish
-            and _integral_graph(g)
-            and 0
-            < (me["__n"] or 0) + (mv["__n"] or 0)
-            <= self.batch_finish
+        if (me["__n"] or 0) + (mv["__n"] or 0) <= self.batch_finish and (
+            _integral_graph(g)
         ):
-            return _cogroup_graph(
-                verts,
-                edges,
+            out = driver_finish(
+                self.batch_finish,
                 _eigen_batch_kernel(self.iterations),
                 f"{ID} long, eigenvector double",
+                verts,
+                edges,
             )
+            if out is not None:
+                return out
         x = verts.select(ID, F.lit(1.0).alias("eigenvector"))
         for _ in range(self.iterations):
             summed = (
@@ -223,19 +211,18 @@ class HITS:
 
     def run(self, g: Graph) -> DataFrame:
         """Returns ``(id, hub, authority)`` for every vertex."""
-        if self.batch_finish and _integral_graph(g):
-            # plain count probes — above the bound the distributed body
-            # builds its own persisted by_dst/by_src frames, so a gate
-            # checkpoint would be a wasted full write at data scale
-            ev = g.edges.select(SRC, DST)
-            vv = g.vertices.select(ID)
-            if 0 < ev.count() + vv.count() <= self.batch_finish:
-                return _cogroup_graph(
-                    vv,
-                    ev,
-                    _hits_batch_kernel(self.iterations),
-                    f"{ID} long, hub double, authority double",
-                )
+        if _integral_graph(g):
+            # the fetch is the gate: above the bound the distributed body
+            # builds its own persisted by_dst/by_src frames
+            out = driver_finish(
+                self.batch_finish,
+                _hits_batch_kernel(self.iterations),
+                f"{ID} long, hub double, authority double",
+                g.vertices.select(ID),
+                g.edges.select(SRC, DST),
+            )
+            if out is not None:
+                return out
         # persist (NOT localCheckpoint) the static sides: a checkpointed
         # frame scans as a bare RDD with its outputPartitioning erased, so
         # every round would re-Exchange; the cache keeps the partitioning

@@ -33,23 +33,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyspark_graph_spark.util import driver_finish, int_columns
+
 # ---------------------------------------------------------------------------
-# Bounded-batch finish (round 12, guide §2.4): once the COO table fits
-# batch_finish rows (one count probe on the already-checkpointed frame),
-# the whole power-iteration trajectory runs inside ONE cogrouped Arrow
-# kernel instead of 2-5 fixed-overhead jobs per half-iteration — the
-# same bounded-batch-finish contract as the CC/SCC/matching/partition
-# kernels, with the distributed per-iteration plan unchanged above the
-# bound (it is the only 100 TB path; the bound only short-circuits
-# dimension-scale inputs). The kernel replays the identical IEEE-754
-# double algebra expression by expression (same matvec -> correction ->
-# normalize order, same null guards, same loud rank-exhaustion
-# ValueErrors). The one thing it cannot replay is the ORDER Spark's
-# parallel partial aggregates happen to merge per-key sums in — which
-# Spark itself does not pin run to run (shuffle fetch order) — so
-# per-sum results can differ from a distributed run in the last ulp,
-# exactly the noise class the engine's own reruns carry; the queries'
-# 6-decimal output rounding sits ~6 orders of magnitude above it.
+# Bounded-batch finish: while the COO table fits batch_finish rows, one
+# limited Arrow fetch (util.driver_finish) brings it to the driver and
+# the whole power-iteration trajectory runs there in numpy, instead of
+# 2-5 fixed-overhead jobs per half-iteration; the distributed
+# per-iteration plan is unchanged above the bound (it is the only 100 TB
+# path; the bound only short-circuits dimension-scale inputs). The
+# kernel replays the identical IEEE-754 double algebra expression by
+# expression (same matvec -> correction -> normalize order, same null
+# guards, and the same loud rank-exhaustion ValueErrors, raised with the
+# distributed path's text). An exactly-degenerate trajectory (a norm or
+# Cholesky pivot at 0.0/NaN, the plan's NULL-guard regime) makes the
+# kernel return None and the distributed plan runs. The one thing it
+# cannot replay is the ORDER Spark's parallel partial aggregates happen
+# to merge per-key sums in — which Spark itself does not pin run to run
+# (shuffle fetch order) — so per-sum results can differ from a
+# distributed run in the last ulp, exactly the noise class the engine's
+# own reruns carry; the queries' 6-decimal output rounding sits ~6
+# orders of magnitude above it.
 # Equality of both paths' gate outputs is pinned by
 # tests/test_svd_batch.py and the committed oracle sweeps.
 # ---------------------------------------------------------------------------
@@ -95,58 +99,40 @@ def _emit(parts):
     )
 
 
-def _batch_out(a: DataFrame, kernel) -> DataFrame | None:
-    """Run one SVD batch kernel over the checkpointed COO frame and
-    return the checkpointed tagged output. The localCheckpoint is eager,
-    so kernel ValueErrors surface AT THE CALL exactly like the
-    distributed path's driver-side sigma probes. Returns ``None`` when
-    the kernel reports an exactly-degenerate trajectory (a norm or
-    Cholesky pivot hit 0.0/NaN, where the plan's `when` guards start
-    producing NULL rows with null-skipping aggregate semantics): the
-    caller then runs the distributed plan, which IS those semantics —
-    the wasted kernel probe only costs on pathological inputs. Real
-    rank exhaustion (tiny-but-nonzero sigma, the r10 ADVICE #2 class)
-    raises inside the kernel with the distributed path's exact text."""
-    out = (
-        a.withColumn("__g", F.lit(0))
-        .groupBy("__g")
-        .applyInPandas(kernel, _BATCH_SCHEMA)
-    )
-    try:
-        return out.localCheckpoint()
-    except Exception as e:
-        msg = str(e)
-        if "__SVD_BATCH_DEGENERATE__" in msg:
-            return None
-        marker = "__SVD_BATCH_VALUEERROR__"
-        if marker in msg:
-            detail = msg.split(marker, 1)[1].split("\n", 1)[0].strip()
-            raise ValueError(detail) from None
-        raise
+class _Degenerate(Exception):
+    """A zero or non-finite norm or pivot: the distributed plan's
+    NULL-guard regime, which the kernels leave to it."""
 
 
 def _check_finite_norm(n: float) -> float:
-    """Zero or non-finite norms put the distributed plan into its
-    NULL-guard regime — defer those trajectories to it (see
-    _batch_out). Raises through the Arrow task as the degenerate
-    marker."""
     import math
 
     if n == 0.0 or not math.isfinite(n):
-        raise RuntimeError("__SVD_BATCH_DEGENERATE__")
+        raise _Degenerate
     return n
 
 
-def _integral_keys(a: DataFrame) -> bool:
-    kinds = {f.name: f.dataType.typeName() for f in a.schema.fields}
-    return all(
-        kinds[k] in ("long", "integer", "short", "byte")
-        for k in ("__r", "__c")
-    )
+def _batch_out(a: DataFrame, batch_finish: int, kernel) -> DataFrame | None:
+    """Run one SVD batch kernel in the driver on the COO frame when it
+    fits ``batch_finish`` rows (``util.driver_finish``): the tagged
+    ``(side, key, factor, x, sigma)`` output, or None above the bound or
+    when the trajectory is degenerate (``_Degenerate``) and the caller
+    runs the distributed plan. Rank exhaustion raises from the kernel
+    with the distributed path's exact text."""
+
+    def deferring(pdf):
+        try:
+            return kernel(pdf)
+        except _Degenerate:
+            return None
+
+    if not int_columns(a, "__r", "__c"):
+        return None
+    return driver_finish(batch_finish, deferring, _BATCH_SCHEMA, a)
 
 
 def _power_batch_kernel(iterations: int):
-    """Rank-1 alternating power iteration in one Arrow batch — the
+    """Rank-1 alternating power iteration in the driver — the
     identical u_k = A v / ||A v||, v_k = A^T u / ||A^T u|| recursion."""
 
     def kern(pdf):
@@ -178,7 +164,7 @@ def _power_batch_kernel(iterations: int):
 
 
 def _deflated_batch_kernel(k: int, iterations: int, rank_tolerance: float):
-    """Implicitly-deflated rank-k power iteration in one Arrow batch —
+    """Implicitly-deflated rank-k power iteration in the driver —
     the same matvec → per-prior-factor correction → normalize order and
     the same loud rank-exhaustion ValueErrors as the distributed plan.
     Exactly-degenerate trajectories (a norm hits 0.0/NaN — the plan's
@@ -192,7 +178,7 @@ def _deflated_batch_kernel(k: int, iterations: int, rank_tolerance: float):
 
         rows, cols, r_idx, c_idx, av = _coo_arrays(pdf)
         if len(rows) == 0:
-            raise RuntimeError("__SVD_BATCH_DEGENERATE__")
+            raise _Degenerate
         factors = []  # (u_vec, v_vec, sigma_float)
         for j in range(k):
             x = np.ones(len(cols), dtype=np.float64)
@@ -214,10 +200,10 @@ def _deflated_batch_kernel(k: int, iterations: int, rank_tolerance: float):
                 sigma = vn
             s_val = sigma
             if not math.isfinite(s_val):
-                raise RuntimeError("__SVD_BATCH_DEGENERATE__")
+                raise _Degenerate
             if factors and s_val < rank_tolerance * factors[0][2]:
                 raise ValueError(
-                    f"__SVD_BATCH_VALUEERROR__rank-{k} SVD failed at "
+                    f"rank-{k} SVD failed at "
                     f"factor {j}: sigma_{j} = {s_val:.3e} < "
                     f"rank_tolerance * sigma_0 = "
                     f"{rank_tolerance * factors[0][2]:.3e} — k exceeds "
@@ -240,7 +226,7 @@ def _deflated_batch_kernel(k: int, iterations: int, rank_tolerance: float):
 
 
 def _block_batch_kernel(k: int, iterations: int, rank_tolerance: float):
-    """Block power iteration with CholeskyQR in one Arrow batch — the
+    """Block power iteration with CholeskyQR in the driver — the
     exact expr-mode recursion (left-associated R subtraction chains, the
     same `when(> 0)` / `when(!= 0)` null guards as NaN) and the same
     loud rank-exhaustion ValueErrors. gram_mode only changes where the
@@ -256,7 +242,7 @@ def _block_batch_kernel(k: int, iterations: int, rank_tolerance: float):
 
         rows, cols, r_idx, c_idx, av = _coo_arrays(pdf)
         if len(rows) == 0:
-            raise RuntimeError("__SVD_BATCH_DEGENERATE__")
+            raise _Degenerate
 
         def chol_qr(mat):
             """mat: (n, k) input columns; returns (q (n,k), diag sigma
@@ -274,7 +260,7 @@ def _block_batch_kernel(k: int, iterations: int, rank_tolerance: float):
                         e = e - r[(i, p)] * r[(i, j2)]
                     if p == j2:
                         if not e > 0:
-                            raise RuntimeError("__SVD_BATCH_DEGENERATE__")
+                            raise _Degenerate
                         r[(p, j2)] = math.sqrt(e)
                     else:
                         r[(p, j2)] = e / _check_finite_norm(r[(p, p)])
@@ -304,10 +290,10 @@ def _block_batch_kernel(k: int, iterations: int, rank_tolerance: float):
         for j in range(k):
             s_val = sigs[j]
             if not math.isfinite(s_val):
-                raise RuntimeError("__SVD_BATCH_DEGENERATE__")
+                raise _Degenerate
             if j > 0 and s_val < rank_tolerance * sigs[0]:
                 raise ValueError(
-                    f"__SVD_BATCH_VALUEERROR__rank-{k} block SVD failed "
+                    f"rank-{k} block SVD failed "
                     f"at factor {j}: sigma_{j} = {s_val:.3e} < "
                     "rank_tolerance * sigma_0 — k exceeds the effective "
                     "rank of the matrix"
@@ -344,10 +330,10 @@ def power_iteration_svd(
     zeros). Signs follow the all-ones start vector (v_0 = 1), so the
     output is deterministic — no random init to pin down.
 
-    ``batch_finish`` (round 12, guide §2.4): once the COO table fits the
-    bound, the whole trajectory runs in one Arrow batch (see the module
-    note above). 0 disables; the two-shuffle-per-half-iteration plan is
-    the only path above the bound.
+    ``batch_finish``: once the COO table fits the bound, the whole
+    trajectory runs in the driver (see the module note above). 0
+    disables; the two-shuffle-per-half-iteration plan is the only path
+    above the bound.
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
@@ -355,23 +341,19 @@ def power_iteration_svd(
         F.col(row_col).alias("__r"),
         F.col(col_col).alias("__c"),
         F.col(val_col).cast("double").alias("__a"),
-    ).localCheckpoint()
-    if (
-        batch_finish
-        and _integral_keys(a)
-        and 0 < a.count() <= batch_finish
-    ):
-        out = _batch_out(a, _power_batch_kernel(iterations))
-        if out is not None:
-            u_out = out.filter(F.col("side") == 0).select(
-                F.col("key").alias(row_col), F.col("x").alias("u")
-            )
-            v_out = out.filter(F.col("side") == 1).select(
-                F.col("key").alias(col_col),
-                F.col("x").alias("v"),
-                F.col("sigma").alias("sigma"),
-            )
-            return u_out, v_out
+    )
+    out = _batch_out(a, batch_finish, _power_batch_kernel(iterations))
+    if out is not None:
+        u_out = out.filter(F.col("side") == 0).select(
+            F.col("key").alias(row_col), F.col("x").alias("u")
+        )
+        v_out = out.filter(F.col("side") == 1).select(
+            F.col("key").alias(col_col),
+            F.col("x").alias("v"),
+            F.col("sigma").alias("sigma"),
+        )
+        return u_out, v_out
+    a = a.localCheckpoint()
     v = a.select("__c").distinct().withColumn("__x", F.lit(1.0))
     u = None
     v_full = None
@@ -471,28 +453,24 @@ def deflated_power_iteration_svd(
         F.col(row_col).alias("__r"),
         F.col(col_col).alias("__c"),
         F.col(val_col).cast("double").alias("__a"),
-    ).localCheckpoint()
-    if (
-        batch_finish
-        and _integral_keys(a)
-        and 0 < a.count() <= batch_finish
-    ):
-        out = _batch_out(
-            a, _deflated_batch_kernel(k, iterations, rank_tolerance)
+    )
+    out = _batch_out(
+        a, batch_finish, _deflated_batch_kernel(k, iterations, rank_tolerance)
+    )
+    if out is not None:
+        u_out = out.filter(F.col("side") == 0).select(
+            F.col("key").alias(row_col),
+            F.col("factor").cast("int").alias("factor"),
+            F.col("x").alias("u"),
         )
-        if out is not None:
-            u_out = out.filter(F.col("side") == 0).select(
-                F.col("key").alias(row_col),
-                F.col("factor").cast("int").alias("factor"),
-                F.col("x").alias("u"),
-            )
-            v_out = out.filter(F.col("side") == 1).select(
-                F.col("key").alias(col_col),
-                F.col("factor").cast("int").alias("factor"),
-                F.col("x").alias("v"),
-                F.col("sigma").alias("sigma"),
-            )
-            return u_out, v_out
+        v_out = out.filter(F.col("side") == 1).select(
+            F.col("key").alias(col_col),
+            F.col("factor").cast("int").alias("factor"),
+            F.col("x").alias("v"),
+            F.col("sigma").alias("sigma"),
+        )
+        return u_out, v_out
+    a = a.localCheckpoint()
     all_cols = a.select("__c").distinct().localCheckpoint()
     # (u_df(__r,__x), v_df(__c,__x), sigma_scalar_df(__s)) per factor
     factors: list[tuple[DataFrame, DataFrame, DataFrame, float]] = []
@@ -710,32 +688,28 @@ def block_power_iteration_svd(
         F.col(row_col).alias("__r"),
         F.col(col_col).alias("__c"),
         F.col(val_col).cast("double").alias("__a"),
-    ).localCheckpoint()
+    )
     # the batch kernel replays expr mode's scalar order; gram_mode only
     # moves the k x k factorization's float ops (driver numpy vs
     # executor expressions — "same trajectory up to float-op ordering"),
     # so both modes batch through the same kernel
-    if (
-        batch_finish
-        and _integral_keys(a)
-        and 0 < a.count() <= batch_finish
-    ):
-        out = _batch_out(
-            a, _block_batch_kernel(k, iterations, rank_tolerance)
+    out = _batch_out(
+        a, batch_finish, _block_batch_kernel(k, iterations, rank_tolerance)
+    )
+    if out is not None:
+        u_out = out.filter(F.col("side") == 0).select(
+            F.col("key").alias(row_col),
+            F.col("factor").cast("int").alias("factor"),
+            F.col("x").alias("u"),
         )
-        if out is not None:
-            u_out = out.filter(F.col("side") == 0).select(
-                F.col("key").alias(row_col),
-                F.col("factor").cast("int").alias("factor"),
-                F.col("x").alias("u"),
-            )
-            v_out = out.filter(F.col("side") == 1).select(
-                F.col("key").alias(col_col),
-                F.col("factor").cast("int").alias("factor"),
-                F.col("x").alias("v"),
-                F.col("sigma").alias("sigma"),
-            )
-            return u_out, v_out
+        v_out = out.filter(F.col("side") == 1).select(
+            F.col("key").alias(col_col),
+            F.col("factor").cast("int").alias("factor"),
+            F.col("x").alias("v"),
+            F.col("sigma").alias("sigma"),
+        )
+        return u_out, v_out
+    a = a.localCheckpoint()
 
     def _chol_qr_driver(
         frame: DataFrame, key: str, in_prefix: str, out_prefix: str

@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark_graph_spark.util import checkpoint_observed
+from pyspark_graph_spark.util import checkpoint_observed, driver_finish
 
 
 def as_of_join(
@@ -263,7 +263,7 @@ def interval_overlap_join(
 
 
 def _batch_temporal_dijkstra(seeds_pdf, edges_pdf):
-    """Exact earliest arrival inside one bounded Arrow batch — temporal
+    """Exact earliest arrival in the driver — temporal
     Dijkstra (settle vertices in arrival order; relax only out-edges with
     ts >= arrival, found by bisect on the per-vertex time-sorted
     adjacency). The earliest-arrival function is the UNIQUE least
@@ -316,8 +316,6 @@ def earliest_arrival(
     max_rounds: int = 20,
     broadcast_threshold: int = 1_000_000,
     batch_finish: int = 2_000_000,
-    auto_extend: bool = False,
-    hard_max_rounds: int | None = None,
 ) -> DataFrame:
     """Time-respecting reachability (temporal BFS, Wu et al. 2014):
     earliest arrival time at every vertex reachable from the seeds along
@@ -340,25 +338,16 @@ def earliest_arrival(
     checkpointed frontier carries no partitioning stats, so Catalyst
     otherwise sort-merge-joins the full edge list every round); a frontier
     above the threshold falls back to the shuffle join, which is the
-    correct plan for wavefronts that no longer fit an executor. One
-    count() action per round doubles as the convergence probe and the
-    next round's plan choice.
+    correct plan for wavefronts that no longer fit an executor. The
+    improved-row count each round's checkpoint observes doubles as the
+    convergence probe and the next round's plan choice; a wavefront
+    still moving after ``max_rounds`` raises.
 
-    ``auto_extend`` (r10 verdict #5): opt-in resumable budget — state and
-    frontier are checkpointed per round, so when the wavefront is still
-    moving at ``max_rounds`` the loop continues with a doubled budget
-    (bounded by ``hard_max_rounds``, default 8x) instead of forcing a
-    full restart (the real-sf1 run in SCALE.md round 10 had to restart
-    from scratch at max_rounds=60 after the default-20 refusal); the
-    truncation error still fires at the hard cap.
+    ``batch_finish``: while the checkpointed edges and seeds fit the
+    bound together, they come back in one Arrow fetch and a temporal
+    Dijkstra in the driver returns the table (_batch_temporal_dijkstra);
+    0 disables.
     """
-    if hard_max_rounds is not None and hard_max_rounds < max_rounds:
-        raise ValueError("hard_max_rounds must be >= max_rounds")
-    hard_cap = (
-        hard_max_rounds
-        if hard_max_rounds is not None
-        else (8 * max_rounds if auto_extend else max_rounds)
-    )
     # size probes ride the materializing checkpoints themselves
     # (round 12, checkpoint_observed) — previously two extra count
     # actions before the first round and one per round
@@ -384,32 +373,26 @@ def earliest_arrival(
         ),
         __n=F.count(F.lit(1)),
     )
-    # the bound covers EVERYTHING funneled into the single Arrow task:
-    # edges AND the seed/state frame (n_front is state.count() here) — a
-    # huge seed set with a small edge list must take the distributed
-    # rounds, not land on one executor (r9 ADVICE #2)
-    if batch_finish and (me["__n"] or 0) + n_front <= batch_finish:
-        # bounded batch: the earliest-arrival table is a unique least
-        # fixpoint, so one Arrow temporal-Dijkstra equals the distributed
-        # rounds by definition (same adjudicated bounded-batch-finish
-        # contract as CC/SCC/MST); the label-correcting rounds below
-        # remain the only path above the bound. 2M rows x 24 B ≈ 48 MB
-        # on one executor; measured 3.1 s vs 10.8 s distributed on the
-        # 1.2M-edge sf0.1 contact graph (SCALE.md round 9)
-        return (
-            state.withColumn("__g", F.lit(0))
-            .groupBy("__g")
-            .cogroup(e.withColumn("__g", F.lit(0)).groupBy("__g"))
-            .applyInPandas(
-                lambda key, s_pdf, e_pdf: _batch_temporal_dijkstra(
-                    s_pdf, e_pdf
-                ),
-                "id long, arrival long",
-            )
+    # the bound covers EVERYTHING fetched to the driver: edges AND the
+    # seed/state frame (n_front is the state's row count here) — a huge
+    # seed set with a small edge list must take the distributed rounds
+    if (me["__n"] or 0) + n_front <= batch_finish:
+        # the earliest-arrival table is a unique least fixpoint, so the
+        # driver's temporal Dijkstra equals the distributed rounds by
+        # definition (same bounded-batch-finish contract as CC/SCC/MST);
+        # the label-correcting rounds below remain the only path above
+        # the bound. 2M rows x 24 B ≈ 48 MB fetched
+        out = driver_finish(
+            batch_finish,
+            _batch_temporal_dijkstra,
+            "id long, arrival long",
+            state,
+            e,
         )
+        if out is not None:
+            return out
     rounds = 0
-    budget = max_rounds
-    while rounds < budget:
+    while rounds < max_rounds:
         fr = (
             F.broadcast(frontier)
             if n_front <= broadcast_threshold
@@ -447,15 +430,10 @@ def earliest_arrival(
             .localCheckpoint()
         )
         frontier = improved
-        if rounds == budget and auto_extend and budget < hard_cap:
-            # continuation from the checkpointed frontier, not a restart
-            budget = min(2 * budget, hard_cap)
     # consistent with CriticalPath/TransitiveClosure: a silent truncated
     # state would hand callers wrong arrival times with no signal
     raise ValueError(
         "earliest_arrival did not converge within max_rounds="
         f"{max_rounds} (ran {rounds} rounds) — raise max_rounds (bounded "
-        "by the longest time-respecting path) or pass auto_extend=True "
-        "(resumes the checkpointed frontier with a doubled budget, "
-        "bounded by hard_max_rounds)"
+        "by the longest time-respecting path)"
     )

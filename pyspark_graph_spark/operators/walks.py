@@ -22,21 +22,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyspark_graph_spark.constants import ADJ, ID
+from pyspark_graph_spark.constants import ADJ, DST, ID, SRC
 from pyspark_graph_spark.functions.hashing import md5_hash60_concat
 from pyspark_graph_spark.graph import Graph
-from pyspark_graph_spark.util import checkpoint_observed
+from pyspark_graph_spark.util import (
+    checkpoint_observed,
+    driver_finish,
+    int_columns,
+)
 
 
 def _batch_walks_md5(length: int, walks_per_vertex: int, seed: int):
-    """The md5-mode walk loop in one Arrow batch (round 12, guide §2.4):
+    """The md5-mode walk loop in the driver (``util.driver_finish``):
     every step is a pure function of (graph, seed) via
     md5_hash60_concat — hashlib.md5 over the identical comma-joined
     string replays it bit for bit, the adjacency arrays are the same
     sorted distinct neighbor sets, and pmod of the 60-bit nonnegative
     hash equals Python %. Batch == distributed by construction."""
 
-    def kern(_key, v_pdf, e_pdf):
+    def kern(v_pdf, e_pdf):
         import hashlib
 
         import pandas as pd
@@ -90,7 +94,7 @@ class RandomWalks:
         # md5-60-bit variant so an external SQL oracle can replay the
         # exact same walks; xxhash64 stays the (faster) default.
         self.hash_mode = hash_mode
-        # md5-mode walks below the bound run in one Arrow batch
+        # md5-mode walks below the bound run in the driver
         # (_batch_walks_md5); xxhash64 mode and larger graphs keep the
         # per-step distributed loop. 0 disables.
         self.batch_finish = batch_finish
@@ -103,47 +107,24 @@ class RandomWalks:
 
     def run(self, g: Graph) -> DataFrame:
         """(walk_id, start, path array<long>) — one row per walk."""
-        if self.batch_finish and self.hash_mode == "md5":
-            vk = {
-                f.name: f.dataType.typeName()
-                for f in g.vertices.schema.fields
-            }
-            ek = {
-                f.name: f.dataType.typeName() for f in g.edges.schema.fields
-            }
-            ints = ("long", "integer", "short", "byte")
-            if (
-                vk.get(ID) in ints
-                and ek.get("src") in ints
-                and ek.get("dst") in ints
-            ):
-                # plain count probes (no materializing checkpoint — the
-                # distributed loop builds its own adjacency, so a gate
-                # checkpoint would be a wasted write above the bound;
-                # the count itself is a scan of the typically-persisted
-                # shared graph). NOTE: do NOT estimate this as
-                # 2x|edges| — symmetric_edges is an identity projection
-                # for graphs that already store both directions, and an
-                # overestimate silently disables the batch (caught when
-                # the walk_corpus family doubled in a bench pass).
-                pairs = g.symmetric_edges.select("src", "dst")
-                verts = g.vertices.select(ID)
-                if 0 < pairs.count() + verts.count() <= self.batch_finish:
-                    return (
-                        verts.withColumn("__g", F.lit(0))
-                        .groupBy("__g")
-                        .cogroup(
-                            pairs.withColumn("__g", F.lit(0)).groupBy("__g")
-                        )
-                        .applyInPandas(
-                            _batch_walks_md5(
-                                self.length,
-                                self.walks_per_vertex,
-                                self.seed,
-                            ),
-                            "walk_id long, start long, path array<long>",
-                        )
-                    )
+        if (
+            self.hash_mode == "md5"
+            and int_columns(g.vertices, ID)
+            and int_columns(g.edges, SRC, DST)
+        ):
+            # symmetric_edges, not 2 x |edges|: it is an identity
+            # projection for graphs that already store both directions
+            out = driver_finish(
+                self.batch_finish,
+                _batch_walks_md5(
+                    self.length, self.walks_per_vertex, self.seed
+                ),
+                "walk_id long, start long, path array<long>",
+                g.vertices.select(ID),
+                g.symmetric_edges.select(SRC, DST),
+            )
+            if out is not None:
+                return out
         adj = g.adjacency.filter(F.size(ADJ) > 0).localCheckpoint()
 
         starts = g.vertices.select(ID)

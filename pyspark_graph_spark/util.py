@@ -4,9 +4,10 @@ The join/union/motif helpers are pure plan builders — no actions, no
 caching. They compose with Catalyst optimization (join reordering,
 pushdown) because they only use the public DataFrame API. The
 bounded-batch helpers at the end (``checkpoint_observed``,
-``fetch_bounded``, ``fetch_bounded_all``, ``fetch_tagged``) are the
-actions the iterative operators share, and ``broadcast_if_small`` is how
-their loops decide which side of a join moves.
+``fetch_bounded``, ``fetch_bounded_all``, ``driver_finish``,
+``fetch_tagged``) are the actions the iterative operators share, and
+``broadcast_if_small`` is how their loops decide which side of a join
+moves.
 """
 
 from __future__ import annotations
@@ -158,6 +159,26 @@ def fetch_bounded_all(bound: int, *dfs: DataFrame):
     ``unionByName``, so a driver finish that needs several inputs still
     costs one collect. The tables carry each frame's own columns."""
     return fetch_tagged(bound, *dfs)[0]
+
+
+def driver_finish(bound: int, kernel, schema: str, *dfs: DataFrame):
+    """The bounded-batch finish of the operators whose kernels are pandas
+    functions: ``kernel(*frames)`` runs in the driver on the rows of
+    ``dfs`` as pandas frames, fetched in one ``fetch_bounded_all``
+    collect, and its pandas result comes back as a local DataFrame of the
+    DDL ``schema`` (columns matched by name). None when ``bound`` is 0,
+    when the frames hold more than ``bound`` rows together, or when the
+    kernel returns None because it cannot replay that input: the caller
+    then runs its distributed plan. A kernel's own error (a loud
+    non-convergence, say) propagates as raised."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    tables = fetch_bounded_all(bound, *dfs) if bound else None
+    out = None if tables is None else kernel(*(t.to_pandas() for t in tables))
+    if out is None:
+        return None
+    names = [f.name for f in _parse_datatype_string(schema).fields]
+    return dfs[0].sparkSession.createDataFrame(out[names], schema)
 
 
 def fetch_tagged(bound: int, *dfs: DataFrame):

@@ -1,8 +1,9 @@
 """Property tests for the bounded-batch kernels (round 9) — the pure
-pandas functions behind the CC/SCC/MST/temporal front-paths, validated
-against independent pure-Python references on randomized graphs. These
-run WITHOUT Spark (the kernels take pandas frames directly), so the
-property loop is cheap enough for many examples.
+numpy/pandas functions behind the CC/SCC/MST/temporal driver finishes,
+validated against independent pure-Python references on randomized
+graphs. These run WITHOUT Spark (the kernels take arrays or pandas
+frames directly), so the property loop is cheap enough for many
+examples.
 """
 
 from __future__ import annotations
@@ -10,6 +11,7 @@ from __future__ import annotations
 import heapq
 import random
 
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -30,10 +32,11 @@ def test_union_find_matches_bfs_components(trial):
     rng = random.Random(1000 + trial)
     n, m = rng.randrange(2, 40), rng.randrange(1, 80)
     edges = _rand_edges(rng, n, m)
-    out = _batch_union_find(
-        pd.DataFrame(edges, columns=["src", "dst"])
+    ids, comp = _batch_union_find(
+        np.array([s for s, _ in edges], dtype=np.int64),
+        np.array([d for _, d in edges], dtype=np.int64),
     )
-    got = dict(zip(out["id"], out["component"]))
+    got = dict(zip(ids.tolist(), comp.tolist()))
     # reference: BFS components labeled by min member
     adj = {}
     verts = set()

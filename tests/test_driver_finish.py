@@ -5,12 +5,17 @@ Below ``batch_finish`` these operators fetch their input with one limited
 Arrow collect (``util.fetch_bounded``, ``util.fetch_bounded_all``) and
 finish in numpy in the driver. Each must equal its distributed plan
 (``batch_finish=0``, or ``strategy="index"`` for similarity) on degenerate
-inputs too, and a small request must cost at most two Spark jobs. The
-applyInPandas kernels of CriticalPath and EigenvectorCentrality are held
-to the same empty-vertex-table equality.
+inputs too, and a small request must cost at most two Spark jobs — as must
+the pandas-kernel finishes (``util.driver_finish``) of the operators that
+need no checkpoint before their fetch. The pandas kernels of CriticalPath
+and EigenvectorCentrality are held to the same empty-vertex-table
+equality here; tests/test_driver_finish_degenerate.py covers the rest.
 """
 
 from __future__ import annotations
+
+import pathlib
+import re
 
 import pytest
 
@@ -21,15 +26,22 @@ from pyspark_graph_spark.operators.connected_components import (
     AlternatingConnectedComponents,
     ConnectedComponents,
 )
-from pyspark_graph_spark.operators.dag import CriticalPath
+from pyspark_graph_spark.operators.dag import CriticalPath, TopologicalLayers
+from pyspark_graph_spark.operators.louvain import Louvain
 from pyspark_graph_spark.operators.pagerank import PageRank
+from pyspark_graph_spark.operators.scc import (
+    StronglyConnectedComponents,
+    reachable_set,
+)
+from pyspark_graph_spark.operators.shortest_paths import ShortestPaths
 from pyspark_graph_spark.operators.similarity import (
     JaccardSimilarity,
     NeighborhoodContainment,
     OverlapCoefficient,
 )
-from pyspark_graph_spark.operators.spectral import EigenvectorCentrality
+from pyspark_graph_spark.operators.spectral import HITS, EigenvectorCentrality
 from pyspark_graph_spark.operators.triangle_count import TriangleCount
+from pyspark_graph_spark.operators.walks import RandomWalks
 from pyspark_graph_spark.session import supports_jvm_internals
 from pyspark_graph_spark.util import (
     fetch_bounded,
@@ -249,19 +261,30 @@ def _small_graph(spark):
     return _graph(spark, range(55), edges)
 
 
+class _ReachableSet:
+    def run(self, g):
+        seeds = g.vertices.sparkSession.createDataFrame([(0,)], f"{ID} long")
+        return reachable_set(g.edges, seeds)
+
+
 @pytest.mark.parametrize(
     "make",
     [PageRank, AlternatingConnectedComponents, TriangleCount,
-     ConnectedComponents, JaccardSimilarity],
+     ConnectedComponents, JaccardSimilarity, TopologicalLayers,
+     lambda: Louvain(levels=1), lambda: RandomWalks(hash_mode="md5"), HITS,
+     StronglyConnectedComponents, _ReachableSet,
+     lambda: ShortestPaths([0, 1])],
     ids=["pagerank", "alternating_cc", "triangle_count",
-         "connected_components", "jaccard"],
+         "connected_components", "jaccard", "topological_layers",
+         "louvain", "random_walks_md5", "hits", "scc", "reachable_set",
+         "shortest_paths"],
 )
-def test_small_request_runs_at_most_two_jobs(spark, make):
+def test_small_request_runs_at_most_two_jobs(spark, make, request):
     if not supports_jvm_internals(spark):
         pytest.skip("job groups need a classic session")
     g = _small_graph(spark)
     sc = spark.sparkContext
-    group = f"driver-finish-{make.__name__}"
+    group = f"driver-finish-{request.node.callspec.id}"
     sc.setJobGroup(group, group)
     try:
         out = make().run(g)
@@ -271,3 +294,25 @@ def test_small_request_runs_at_most_two_jobs(spark, make):
         sc.setJobGroup("", "")
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 1 <= len(jobs) <= 2, jobs
+
+
+# ---- one gate mechanism ------------------------------------------------------
+
+# a single-group pandas UDF keyed on a literal, or a fallback recognised by
+# the text of an exception
+_OLD_GATE = re.compile(
+    r'applyInPandas|\.cogroup\(|"__g"|in str\(e\)|in msg\b|_DEGENERATE__'
+)
+
+
+def test_operators_have_no_single_group_gate_or_exception_text_fallback():
+    ops = pathlib.Path(__file__).resolve().parents[1] / (
+        "pyspark_graph_spark/operators"
+    )
+    hits = [
+        f"{p.name}:{n}: {line.strip()}"
+        for p in sorted(ops.glob("*.py"))
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if _OLD_GATE.search(line)
+    ]
+    assert not hits, hits
