@@ -34,6 +34,7 @@ from pyspark_graph_spark.util import (
     checkpoint_observed,
     driver_finish,
     int_columns,
+    local_frame,
 )
 
 BETWEENNESS = "betweenness"
@@ -123,8 +124,8 @@ class BetweennessCentrality:
             return self.sources.select(
                 F.col(self.sources.columns[0]).cast("long").alias("s")
             )
-        return g.vertices.sparkSession.createDataFrame(
-            [(int(x),) for x in self.sources], "s long"
+        return local_frame(
+            g.vertices.sparkSession, "s long", [int(x) for x in self.sources]
         )
 
     def run(self, g: Graph) -> DataFrame:

@@ -88,9 +88,6 @@ def _local_components(spark, ids, labels) -> DataFrame:
 class ConnectedComponents:
     """Weakly connected components via Pregel min-label propagation.
 
-    ``salt_buckets`` passes through to Pregel's skew-salted message join
-    (use on power-law graphs where hub vertices dominate a partition).
-
     ``require_convergence`` (default True): min-label needs rounds
     proportional to component diameter, so a truncated run silently
     SPLITS any component whose diameter exceeds ``max_iterations`` —
@@ -108,12 +105,10 @@ class ConnectedComponents:
     def __init__(
         self,
         max_iterations: int = 20,
-        salt_buckets: int | None = None,
         require_convergence: bool = True,
         batch_finish: int = 1_000_000,
     ):
         self.max_iterations = max_iterations
-        self.salt_buckets = salt_buckets
         self.require_convergence = require_convergence
         self.batch_finish = batch_finish
 
@@ -174,7 +169,6 @@ class ConnectedComponents:
             msg_to_src=F.col(STATE),  # always both ways: weak components
             update_expr=F.least(F.col(STATE), F.col(MSG)),
             max_iterations=self.max_iterations,
-            salt_buckets=self.salt_buckets,
         )
         out = pregel.run(slim).select(ID, F.col(STATE).alias(COMPONENT))
         self.rounds_run = pregel.rounds_run

@@ -39,6 +39,7 @@ from pyspark_graph_spark.util import (
     fetch_bounded,
     fetch_bounded_all,
     int_columns,
+    local_frame,
     positions,
 )
 
@@ -363,8 +364,8 @@ def parallel_personalized_pagerank(
         return spark.createDataFrame(pa.table(out))
     w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
     edges = g.symmetric_edges.select(SRC, DST, w.alias("__w")).localCheckpoint()
-    restart = spark.createDataFrame(
-        [(s, s) for s in starts], f"{ID} long, source long"
+    restart = local_frame(
+        spark, f"{ID} long, source long", starts, starts
     ).localCheckpoint()
     deg = edges.groupBy(SRC).agg(F.sum("__w").alias("__deg")).localCheckpoint()
     ranks = restart.withColumn(PAGERANK, F.lit(1.0)).localCheckpoint()

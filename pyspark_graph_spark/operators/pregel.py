@@ -19,8 +19,8 @@ Physical redesign for scale (the reference's biggest flaw, SURVEY.md §3b):
 - **Vertex state moves to the edges** (GraphX, OSDI 2014). Both message
   directions scan one edge checkpoint; the changed senders, counted on
   the previous round's checkpoint, are broadcast to it while they fit
-  (util.broadcast_if_small). Salted runs keep one checkpoint per
-  direction, partitioned on key and salt.
+  (util.broadcast_if_small). Above the threshold the plain join runs,
+  and AQE's skew-join splitting spreads a hub's edge rows.
 - **``unionByName`` upsert** — the reference's positional union
   (pregel.py:68) silently depends on column order.
 
@@ -75,17 +75,9 @@ class Pregel:
     comparison : Callable[[Column, Column], Column]
         Change detector between old and new state; default null-safe ``!=``.
     max_iterations : int
-    include_all_in_first_round : bool
-        Seed the frontier with every vertex (reference behavior).
-    salt_buckets : int | None
-        Skew hardening for power-law graphs: a hub sender's edges all hash
-        to one partition of the per-superstep message join. With salting,
-        each edge carries a salt derived from its *other* endpoint and the
-        (small, changing) sender side explodes to every salt, so a hub's
-        edge rows spread across ``salt_buckets`` partitions. Messages are
-        unchanged (each edge still matches exactly one sender replica) —
-        property-tested. Cost: sender state replicated ``salt_buckets``×;
-        leave ``None`` unless the degree distribution is heavy-tailed.
+    carry_columns : list[str] | None
+        Vertex columns kept in the iterated state besides ``id`` and
+        ``state``; None keeps all. Every vertex sends in round 1.
     """
 
     def __init__(
@@ -98,7 +90,6 @@ class Pregel:
         comparison: Callable[[Column, Column], Column] = ne_null_safe,
         max_iterations: int = 10,
         carry_columns: list[str] | None = None,
-        salt_buckets: int | None = None,
     ):
         if msg_to_dst is None and msg_to_src is None:
             raise ValueError("at least one of msg_to_dst/msg_to_src required")
@@ -114,56 +105,29 @@ class Pregel:
         # initial_state should NOT ride through every per-round shuffle —
         # pass carry_columns=[] to shed them after initialization.
         self.carry_columns = carry_columns
-        if salt_buckets is not None and salt_buckets < 2:
-            raise ValueError("salt_buckets must be >= 2 (or None)")
-        self.salt_buckets = salt_buckets
 
     # -- messaging ----------------------------------------------------------
 
     def _messages(
-        self,
-        edges_by_src: DataFrame | None,
-        edges_by_dst: DataFrame | None,
-        senders: DataFrame,
-        n_senders: int,
+        self, edges: DataFrame, senders: DataFrame, n_senders: int
     ) -> DataFrame:
         """Build the (id, msg) frame for one superstep.
 
         ``senders`` is the changed-state frame (id, attrs..., state). Each
         directed edge whose sender endpoint changed emits the message
-        expression evaluated over edge ⋈ sender-state columns. Unsalted,
-        the senders (``n_senders`` rows) are broadcast to the edges while
-        they fit (module note), so the edge table does not move.
+        expression evaluated over edge ⋈ sender-state columns. The senders
+        (``n_senders`` rows) are broadcast to the edges while they fit
+        (module note), so the edge table does not move.
         """
-        if self.salt_buckets:
-            senders = senders.withColumn(
-                "__ssalt",
-                F.explode(
-                    F.sequence(F.lit(0), F.lit(self.salt_buckets - 1))
-                ),
-            )
-        else:
-            senders = broadcast_if_small(senders, n_senders)
-
-        def join_on(edges, key):
-            cond = edges[key] == senders[ID]
-            if self.salt_buckets:
-                return edges.join(
-                    senders,
-                    on=[cond, edges["__salt"] == senders["__ssalt"]],
-                )
-            return edges.join(senders, on=cond)
-
+        senders = broadcast_if_small(senders, n_senders)
         msgs = []
         if self.msg_to_dst is not None:
-            edges = edges_by_src
-            ctx = join_on(edges, SRC)
+            ctx = edges.join(senders, on=edges[SRC] == senders[ID])
             msgs.append(
                 ctx.select(edges[DST].alias(ID), self.msg_to_dst.alias(MSG))
             )
         if self.msg_to_src is not None:
-            edges = edges_by_dst
-            ctx = join_on(edges, DST)
+            ctx = edges.join(senders, on=edges[DST] == senders[ID])
             msgs.append(
                 ctx.select(edges[SRC].alias(ID), self.msg_to_src.alias(MSG))
             )
@@ -181,31 +145,9 @@ class Pregel:
 
     def run(self, g: Graph) -> DataFrame:
         """Returns the vertex table with a final ``state`` column."""
-        # the static edge side is materialized once and shared by both
-        # message directions. With salting, the salt (derived from the
-        # OTHER endpoint, so a hub's edges spread) joins the partitioning
-        # key, one checkpoint per direction.
-        def prep(key, other):
-            e = g.edges
-            if self.salt_buckets:
-                e = e.withColumn(
-                    "__salt",
-                    F.pmod(
-                        F.xxhash64(F.col(other)), F.lit(self.salt_buckets)
-                    ),
-                )
-                return e.repartition(
-                    F.col(key), F.col("__salt")
-                ).localCheckpoint()
-            return edges
-
-        edges = None if self.salt_buckets else g.edges.localCheckpoint()
-        edges_by_src = (
-            prep(SRC, DST) if self.msg_to_dst is not None else None
-        )
-        edges_by_dst = (
-            prep(DST, SRC) if self.msg_to_src is not None else None
-        )
+        # the static edge side is materialized once and scanned by both
+        # message directions
+        edges = g.edges.localCheckpoint()
         state = g.vertices.withColumn(STATE, self.initial_state)
         if self.carry_columns is not None:
             state = state.select(ID, *self.carry_columns, STATE)
@@ -221,7 +163,7 @@ class Pregel:
         self.rounds_run = 0
         while self.rounds_run < self.max_iterations:
             agg = self._aggregate(
-                self._messages(edges_by_src, edges_by_dst, changed, n_changed)
+                self._messages(edges, changed, n_changed)
             )
             # Fused upsert (round 11, guide §2.4): the previous shape was
             # an INNER join to compute updates, then an anti-join + union

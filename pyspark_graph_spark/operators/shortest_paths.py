@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark_graph_spark.constants import DST, ID, MSG, SRC, STATE
 from pyspark_graph_spark.graph import Graph
 from pyspark_graph_spark.operators.pregel import Pregel
-from pyspark_graph_spark.util import driver_finish, int_columns
+from pyspark_graph_spark.util import driver_finish, int_columns, local_frame
 
 DISTANCES = "distances"
 LANDMARK = "landmark"
@@ -134,9 +134,10 @@ class ShortestPaths:
             return self.landmarks.select(
                 F.col(self.landmarks.columns[0]).cast("long").alias("__lm")
             )
-        spark = g.vertices.sparkSession
-        return spark.createDataFrame(
-            [(int(x),) for x in self.landmarks], "__lm long"
+        return local_frame(
+            g.vertices.sparkSession,
+            "__lm long",
+            [int(x) for x in self.landmarks],
         )
 
     def run(self, g: Graph) -> DataFrame:

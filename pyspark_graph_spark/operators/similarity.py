@@ -32,16 +32,19 @@ filter run in numpy too, and the result is a local DataFrame of the final
 columns — one Spark job in, one Arrow collect out. The second bound is
 the candidate wedges Σ C(k, 2) over the neighbour groups, counted from the
 fetched arrays, so checking it costs no job. Over either bound, and for
-null endpoints or non-integral ids, ``auto`` takes the Spark plans below,
-and only then pays their vertex-count and distinct-edge probes.
+non-integral ids, ``auto`` takes a Spark plan, and only then pays the
+vertex-count and distinct-edge probes that choose it (``_choose_pairs``).
+
+Every plan ignores an edge with a null endpoint: a null is nobody's
+neighbour, and it counts toward no degree (SQL's ``COUNT(DISTINCT dst)``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyspark_graph_spark.constants import ADJ, DST, ID, SRC
+from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
 from pyspark_graph_spark.util import (
     arrays,
@@ -54,35 +57,6 @@ from pyspark_graph_spark.util import (
 # edge rows ``auto`` scores in the driver, and candidate wedges it may
 # expand there (the batch bound of PageRank, CC and TriangleCount)
 BATCH_ROWS = 1_000_000
-
-
-def _pair_common_counts_allpairs(g: Graph) -> DataFrame:
-    """Dense-graph path: all vertex pairs scored row-locally with
-    ``array_intersect`` over the (sorted) adjacency arrays.
-
-    Measured tradeoff (sf0.1 supplier graph, V=1000 near-complete): the
-    index path pushes Σ_w deg(w)² ≈ 1e9 rows through a codegen'd join in
-    ~36 s; this path's 500k ``array_intersect`` calls over ~1000-element
-    arrays took ~170 s — per-row hash-set construction loses to raw codegen
-    row throughput well before V² row counts win. So ``auto`` only picks
-    this path for very small V, where the broadcast no-shuffle plan wins
-    outright; it remains available explicitly for moderate-V sparse-ish
-    graphs with short adjacency arrays.
-    """
-    adj = g.adjacency.localCheckpoint()
-    a = adj.select(F.col(ID).alias(SRC), F.col(ADJ).alias("__aa"))
-    b = adj.select(F.col(ID).alias(DST), F.col(ADJ).alias("__ab"))
-    return (
-        a.join(F.broadcast(b), on=F.col(SRC) < F.col(DST))
-        .select(
-            SRC,
-            DST,
-            F.size(F.array_intersect("__aa", "__ab")).alias("common"),
-            F.size("__aa").alias("src_degree"),
-            F.size("__ab").alias("dst_degree"),
-        )
-        .filter(F.col("common") > 0)
-    )
 
 
 def _pair_common_counts_complement(g: Graph) -> DataFrame:
@@ -184,6 +158,7 @@ def _pair_common_counts(g: Graph, max_degree: int | None) -> DataFrame:
     """
     nbrs = (
         g.symmetric_edges.select(F.col(SRC).alias(ID), F.col(DST).alias("__nb"))
+        .dropna()
         .distinct()
         .localCheckpoint()  # feeds deg, both join sides
     )
@@ -215,37 +190,26 @@ def _pair_common_counts(g: Graph, max_degree: int | None) -> DataFrame:
     )
 
 
-_ALLPAIRS_MAX_VERTICES = 512  # V²/2 ≈ 130k row-local pairs
-
-
 def _choose_pairs(
     g: Graph, max_degree: int | None, strategy: str
 ) -> DataFrame:
     """Pick the candidate-pair plan.
 
-    ``index``: inverted-index join (sparse graphs — output Σ deg² bounded).
-    ``allpairs``: broadcast self-join + array_intersect (dense small-V).
-    ``auto`` (above the driver bounds): allpairs when the vertex count (one
-    cheap count) is small, complement on dense graphs, else index.
+    ``index``: inverted-index join (output Σ deg² over the neighbours).
+    ``complement``: the same counts from the missing edges (dense graphs).
+    ``auto`` (above the driver bounds): index under a degree cap, else
+    complement once the graph holds over half of all possible edges (the
+    rule of TriangleCount's ``auto``) and the V²/2 pair cross join stays
+    tractable, else index. Choosing costs a vertex and an edge count.
     """
     if strategy == "auto":
-        if max_degree is not None:
-            strategy = "index"
-        else:
+        strategy = "index"
+        if max_degree is None:
             n = g.vertices.count()
-            if n <= _ALLPAIRS_MAX_VERTICES:
-                strategy = "allpairs"
-            else:
-                # dense regime: complement beats the index once the graph
-                # holds a large fraction of all possible edges (and the V²/2
-                # pair cross-join stays tractable)
-                n_edges = g.symmetric_edges.select(SRC, DST).distinct().count()
-                density = n_edges / max(n * (n - 1), 1)
-                strategy = (
-                    "complement" if density > 0.25 and n <= 200_000 else "index"
-                )
-    if strategy == "allpairs":
-        return _pair_common_counts_allpairs(g)
+            n_edges = g.symmetric_edges.select(SRC, DST).distinct().count()
+            density = n_edges / max(n * (n - 1), 1)
+            if density > 0.5 and n <= 200_000:
+                strategy = "complement"
     if strategy == "complement":
         return _pair_common_counts_complement(g)
     if strategy == "index":
@@ -256,16 +220,15 @@ def _choose_pairs(
 def _driver_pair_counts(g: Graph, max_degree: int | None):
     """``(ids, src, dst, common, src_degree, dst_degree)``: the index
     plan's pair counts as numpy arrays, ``src``/``dst`` as indexes into
-    the sorted ``ids``, from one limited Arrow fetch of the edge pairs —
-    or None when the input is over either driver bound, has a null
-    endpoint (a null neighbour still counts toward the Spark plan's
-    degrees) or non-integral ids."""
+    the sorted ``ids``, from one limited Arrow fetch of the edge pairs
+    without a null endpoint — or None when the input is over either
+    driver bound or has non-integral ids."""
     import numpy as np
 
     pairs = g.edges.select(SRC, DST)
     if not int_columns(pairs, SRC, DST):
         return None
-    t = fetch_bounded(pairs, BATCH_ROWS)
+    t = fetch_bounded(pairs.dropna(), BATCH_ROWS)
     e = None if t is None else arrays(t, **{SRC: np.int64, DST: np.int64})
     if e is None:
         return None

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark_graph_spark.constants import ID, MSG, STATE
 from pyspark_graph_spark.graph import Graph
 from pyspark_graph_spark.operators.pregel import Pregel
+from pyspark_graph_spark.util import local_frame
 
 DISTANCE = "distance"
 LANDMARK = "landmark"
@@ -66,8 +67,10 @@ class WeightedShortestPaths:
             return self.landmarks.select(
                 F.col(self.landmarks.columns[0]).cast("long").alias("__lm")
             )
-        return g.vertices.sparkSession.createDataFrame(
-            [(int(x),) for x in self.landmarks], "__lm long"
+        return local_frame(
+            g.vertices.sparkSession,
+            "__lm long",
+            [int(x) for x in self.landmarks],
         )
 
     def run(self, g: Graph) -> DataFrame:

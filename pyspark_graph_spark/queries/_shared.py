@@ -232,11 +232,11 @@ def _trade_digraph(spark: SparkSession, sf_dir: str) -> "Graph":
     return shared
 
 
-# Shared exact triangle count of the supplier co-occurrence graph
-# (round 12): `triangle_count` and `transitivity` both ran the identical
-# complement inclusion-exclusion census over the same shared graph —
-# the single most CPU-expensive scalar in the suite, computed twice per
-# pass. The value is a driver int (the operator's return type), cached
+# Shared exact triangle count of the supplier co-occurrence graph:
+# `triangle_count` and `transitivity` both need it, and it was the most
+# CPU-expensive scalar in the suite when each computed it. Below the
+# batch bound (453,588 edge rows at sf0.1) TriangleCount's driver kernel
+# counts it. The value is a driver int (the operator's return type), cached
 # per (applicationId, sf_dir) with the same eviction/clearing contract
 # as every shared artifact; registered as bench family
 # "supplier_triangles" so first-consumer-pays stays attributable.

@@ -1500,15 +1500,14 @@ FROM tri, w
 )
 def q_transitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global clustering coefficient 3T/W of the supplier graph: triangle
-    count via the density-adaptive operator (complement inclusion-exclusion
-    on this dense graph), wedges from the degree aggregate; one exact
+    count from TriangleCount (its driver kernel: this dense graph is
+    below the batch bound), wedges from the degree aggregate; one exact
     integer division at the end (cross-engine deterministic)."""
     from pyspark_graph_spark.sources.tables import supplier_co_occurrence_graph
 
-    # round 12: the exact census comes from the shared per-application
-    # cache (_shared_triangle_count, bench family "supplier_triangles")
-    # — triangle_count runs the identical complement inclusion-exclusion
-    # on the identical shared graph
+    # the exact census comes from the shared per-application cache
+    # (_shared_triangle_count, bench family "supplier_triangles"), which
+    # triangle_count fills on the identical shared graph
     from pyspark_graph_spark.queries._shared import _shared_triangle_count
 
     g = _supplier_cooc_graph(spark, sf_dir)

@@ -249,11 +249,11 @@ JOIN supplier_edges e3 ON e1.src = e3.src AND e2.dst = e3.dst
 )
 def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangles in the supplier co-occurrence graph (single-row count).
-    Uses run(): on this dense graph the auto strategy counts via the
-    complement inclusion-exclusion instead of the wedge join."""
-    # round 12: shared per-application census (_shared_triangle_count,
-    # bench family "supplier_triangles") — transitivity replays the
-    # identical complement inclusion-exclusion on the identical graph
+    Uses run(): the graph is dense but below the 1M-row batch bound
+    (453,588 edge rows at sf0.1), so ``auto`` counts it with the numpy
+    driver kernel from one Arrow fetch."""
+    # shared per-application census (_shared_triangle_count, bench family
+    # "supplier_triangles"): transitivity needs the identical count
     from pyspark_graph_spark.queries._shared import _shared_triangle_count
 
     n = _shared_triangle_count(spark, sf_dir)

@@ -192,6 +192,7 @@ def _scores(df):
 
 
 _STAR = [(0, i) for i in range(1, 7)] + [(1, 2), (2, 3), (5, 6)]
+_NULL_ENDPOINT = [(0, 1), (1, 2), (2, 0), (0, None), (1, None), (3, 2)]
 
 
 @pytest.mark.parametrize("directed", [False, True], ids=["undirected", "directed"])
@@ -206,25 +207,38 @@ _STAR = [(0, i) for i in range(1, 7)] + [(1, 2), (2, 3), (5, 6)]
         ([], [(0, 1), (1, 2), (2, 0), (0, 3), (3, 2)], {}),
         (range(8), _STAR, {"max_degree": 3}),
         (range(8), _STAR, {"min_similarity": 0.5}),
+        (range(4), _NULL_ENDPOINT, {}),
     ],
     ids=["isolated", "self_loops", "duplicates", "no_edges", "no_vertices",
-         "hub", "min_similarity"],
+         "hub", "min_similarity", "null_endpoint"],
 )
 def test_similarity_driver_path_matches_index(spark, vertices, edges, kw, directed):
     g = _graph(spark, vertices, edges, directed=directed)
     assert similarity._driver_pair_counts(g, kw.get("max_degree")) is not None
+    # a null endpoint is nobody's neighbour on every plan, as in the
+    # oracles' COUNT(DISTINCT dst)
+    plans = ["index"] + (["complement"] if edges is _NULL_ENDPOINT else [])
     for op in SIMILARITIES:
         got = _scores(op(**kw).run(g))
-        assert got == _scores(op(strategy="index", **kw).run(g)), op.__name__
+        for plan in plans:
+            want = _scores(op(strategy=plan, **kw).run(g))
+            assert got == want, (op.__name__, plan)
+
+
+def test_similarity_null_endpoint_scores(spark):
+    # N(0) = {1, 2} and N(1) = {0, 2}: one common neighbour of two each
+    g = _graph(spark, range(4), _NULL_ENDPOINT)
+    for op, want in ((JaccardSimilarity, 1 / 3), (OverlapCoefficient, 1 / 2)):
+        got = {(r[0], r[1]): r[2] for r in op().run(g).collect()}
+        assert got[(0, 1)] == pytest.approx(want), op.__name__
 
 
 def _assert_similarity_defers(g):
-    # with a degree cap, the deferred ``auto`` plan is the index plan (the
-    # uncapped small-V one, allpairs, ignores null neighbours)
     assert similarity._driver_pair_counts(g, 10) is None
     for op in SIMILARITIES:
-        got = _scores(op(max_degree=10).run(g))
-        assert got == _scores(op(strategy="index", max_degree=10).run(g))
+        for kw in ({}, {"max_degree": 10}):
+            got = _scores(op(**kw).run(g))
+            assert got == _scores(op(strategy="index", **kw).run(g))
 
 
 def test_similarity_defers_string_ids(spark):
@@ -233,13 +247,6 @@ def test_similarity_defers_string_ids(spark):
         [("a", "b"), ("b", "c"), ("c", "a")], f"{SRC} string, {DST} string"
     )
     _assert_similarity_defers(Graph(v, e, directed=False, indexed=True))
-
-
-def test_similarity_defers_a_null_endpoint(spark):
-    # the null neighbour counts toward vertex 0's degree in the Spark plan
-    _assert_similarity_defers(
-        _graph(spark, range(3), [(0, 1), (1, 2), (2, 0), (0, None)])
-    )
 
 
 def test_similarity_defers_wedges_over_the_bound(spark, monkeypatch):

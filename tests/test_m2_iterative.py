@@ -44,36 +44,37 @@ def test_pregel_requires_message_expr(spark):
         Pregel(initial_state=F.col(ID), agg_expr=F.min(MSG))
 
 
-def test_pregel_salted_matches_unsalted(spark):
-    """Skew salting must be a pure physical rewrite: identical messages,
-    identical fixpoint, on a hub-shaped graph (vertex 0 sends to all)."""
+def test_pregel_hub_on_both_join_plans(spark):
+    """A hub (vertex 0 sends to all) takes the same labels and rounds
+    whether the changed senders are broadcast to the edges (default
+    threshold) or shuffled to meet them (threshold -1)."""
     v = spark.createDataFrame([(i,) for i in range(12)], "id long")
     hub = [(0, i) for i in range(1, 12)] + [(5, 6), (7, 8)]
     e = spark.createDataFrame(hub, "src long, dst long")
     g = Graph(v, e, directed=False, indexed=True)
 
-    def run(salt):
+    def run():
         p = Pregel(
             initial_state=F.col(ID),
             agg_expr=F.min(MSG),
             msg_to_dst=F.col(STATE),
             msg_to_src=F.col(STATE),
             update_expr=F.least(F.col(STATE), F.col(MSG)),
-            salt_buckets=salt,
         )
-        return {r[ID]: r[STATE] for r in p.run(g).collect()}
+        out = {r[ID]: r[STATE] for r in p.run(g).collect()}
+        return out, p.rounds_run, p.converged
 
-    assert run(None) == run(4)
-
-
-def test_pregel_salt_buckets_validation(spark):
-    with pytest.raises(ValueError):
-        Pregel(
-            initial_state=F.col(ID),
-            agg_expr=F.min(MSG),
-            msg_to_dst=F.col(STATE),
-            salt_buckets=1,
-        )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    try:
+        broadcast = run()
+        spark.conf.set(key, "-1")
+        shuffled = run()
+    finally:
+        spark.conf.set(key, before)
+    expected = ({i: 0 for i in range(12)}, 2, True)
+    assert broadcast == expected
+    assert shuffled == expected
 
 
 def test_pregel_max_iterations_caps_rounds(spark):

@@ -105,20 +105,6 @@ def test_triangle_count_matches_enumeration(spark, seed):
 
 
 @pytest.mark.parametrize("seed", SEEDS[:2])
-def test_jaccard_strategies_agree(spark, seed):
-    g, n, edges = random_graph(spark, seed, n=20, p=0.25)
-    index = sorted(
-        (r["src"], r["dst"], round(r["jaccard"], 9))
-        for r in JaccardSimilarity(strategy="index").run(g).collect()
-    )
-    allpairs = sorted(
-        (r["src"], r["dst"], round(r["jaccard"], 9))
-        for r in JaccardSimilarity(strategy="allpairs").run(g).collect()
-    )
-    assert index == allpairs
-
-
-@pytest.mark.parametrize("seed", SEEDS[:2])
 def test_pagerank_matches_python_power_iteration(spark, seed):
     g, n, edges = random_graph(spark, seed)
     dedup = sorted(set(edges))

@@ -20,8 +20,7 @@ graph-heavy set).
 
 Output: /root/repo/testdata_sf1_real/*.parquet (gitignored).
 Usage:  python tools/make_real_sf1.py
-Then:   SPARK_GRAFT_WS_BIG=/root/repo/testdata_sf1_real \\
-        python tools/weak_scale.py four_cycles bowtie_structure ...
+Then:   SPARK_GRAFT_SF_DIR=testdata_sf1_real python bench.py
 """
 
 from __future__ import annotations
