@@ -105,6 +105,28 @@ def test_triangle_count_matches_enumeration(spark, seed):
 
 
 @pytest.mark.parametrize("seed", SEEDS[:2])
+def test_jaccard_strategies_agree(spark, seed):
+    """Every plan (auto's driver kernel, index, complement) scores each
+    pair sharing an out-neighbour as the Python set formula does."""
+    g, n, edges = random_graph(spark, seed, n=20, p=0.25)
+    out = defaultdict(set)
+    for a, b in edges:
+        out[a].add(b)
+    expected = sorted(
+        (a, b, round(len(out[a] & out[b]) / len(out[a] | out[b]), 9))
+        for a in range(n)
+        for b in range(a + 1, n)
+        if out[a] & out[b]
+    )
+    for strategy in ("auto", "index", "complement"):
+        got = sorted(
+            (r["src"], r["dst"], round(r["jaccard"], 9))
+            for r in JaccardSimilarity(strategy=strategy).run(g).collect()
+        )
+        assert got == expected, strategy
+
+
+@pytest.mark.parametrize("seed", SEEDS[:2])
 def test_pagerank_matches_python_power_iteration(spark, seed):
     g, n, edges = random_graph(spark, seed)
     dedup = sorted(set(edges))
