@@ -64,13 +64,14 @@ def _pair_common_counts_complement(g: Graph) -> DataFrame:
     *missing* edges are the small object, so count shared NON-neighbors and
     invert with inclusion-exclusion:
 
-        |N(a)∩N(b)| = n − (|M(a)| + |M(b)| − |M(a)∩M(b)| + extra)
+        |N(a)∩N(b)| = n − |M(a)∪M(b)| = deg(a) + deg(b) − n + |M(a)∩M(b)|
 
-    where M(x) = non-neighbors of x (excluding x), |M(x)| = n−1−deg(x), and
-    ``extra`` counts the members of {a,b} not already inside M(a)∪M(b) —
-    2 when a,b are adjacent, 0 otherwise. |M(a)∩M(b)| comes from an
+    over the universe U of every edge endpoint (n = |U|), where M(x) =
+    U − N(x) — x itself included unless x has a self-loop, so a self-loop
+    counts as the index plan counts it, and an endpoint missing from the
+    vertex table is a vertex like any other. |M(a)∩M(b)| comes from an
     inverted-index join over the complement edge list, whose volume is
-    Σ_w (n−1−deg(w))² — negligible exactly when the graph is dense.
+    Σ_w (n−deg(w))² — negligible exactly when the graph is dense.
 
     Measured on the sf0.1 near-complete supplier graph (V=1000, ~500k
     edges): the direct index path pushes ~1e9 join rows (~40 s); here the
@@ -78,22 +79,26 @@ def _pair_common_counts_complement(g: Graph) -> DataFrame:
     cross join plus tiny joins (~3 s). Exact for ANY graph — only the cost
     profile is density-dependent.
     """
-    ids = g.vertices.select(ID).localCheckpoint()
-    n = ids.count()
     # neighbor sets follow the graph's own semantics: out-neighbors for
     # directed graphs, all neighbors for undirected (same as the index path)
     nbr = (
-        g.symmetric_edges.select(SRC, DST)
-        .filter(F.col(SRC) != F.col(DST))
+        g.symmetric_edges.select(SRC, DST).dropna().distinct().localCheckpoint()
+    )
+    ids = (
+        nbr.select(F.col(SRC).alias(ID))
+        .union(nbr.select(F.col(DST).alias(ID)))
         .distinct()
         .localCheckpoint()
     )
+    n = ids.count()
     deg = nbr.groupBy(SRC).agg(F.count(F.lit(1)).alias("__deg"))
     a = ids.select(F.col(ID).alias(SRC))
     b = ids.select(F.col(ID).alias(DST))
-    ordered = a.join(F.broadcast(b), on=F.col(SRC) != F.col(DST))
-    # directed complement: ordered pairs with no edge src->dst
-    comp = ordered.join(nbr, on=[SRC, DST], how="anti").localCheckpoint()
+    # directed complement: ordered pairs (the diagonal too) with no edge
+    comp = (
+        a.crossJoin(F.broadcast(b)).join(nbr, on=[SRC, DST], how="anti")
+        .localCheckpoint()
+    )
     ca = comp.alias("ca")
     cb = comp.alias("cb")
     mm = (
@@ -109,15 +114,9 @@ def _pair_common_counts_complement(g: Graph) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("__mm"))
     )
-    fwd = nbr.withColumn("__fwd", F.lit(1))
-    bwd = nbr.select(
-        F.col(DST).alias(SRC), F.col(SRC).alias(DST)
-    ).withColumn("__bwd", F.lit(1))
     pairs = a.join(F.broadcast(b), on=F.col(SRC) < F.col(DST))
     out = (
         pairs.join(mm, on=[SRC, DST], how="left")
-        .join(fwd, on=[SRC, DST], how="left")
-        .join(bwd, on=[SRC, DST], how="left")
         .join(
             deg.withColumnsRenamed({SRC: SRC, "__deg": "src_degree"}),
             on=SRC, how="left",
@@ -129,16 +128,9 @@ def _pair_common_counts_complement(g: Graph) -> DataFrame:
         .withColumn("src_degree", F.coalesce("src_degree", F.lit(0)))
         .withColumn("dst_degree", F.coalesce("dst_degree", F.lit(0)))
     )
-    m_a = F.lit(n - 1) - F.col("src_degree")
-    m_b = F.lit(n - 1) - F.col("dst_degree")
-    # a is outside M(a)∪M(b) iff edge b->a exists (mirror for b): those
-    # members of {a,b} must be added to the excluded-union size
-    extra = (
-        F.when(F.col("__bwd").isNotNull(), F.lit(1)).otherwise(F.lit(0))
-        + F.when(F.col("__fwd").isNotNull(), F.lit(1)).otherwise(F.lit(0))
-    )
     common = (
-        F.lit(n) - (m_a + m_b - F.coalesce("__mm", F.lit(0)) + extra)
+        F.col("src_degree") + F.col("dst_degree") - F.lit(n)
+        + F.coalesce("__mm", F.lit(0))
     )
     return out.select(
         SRC,

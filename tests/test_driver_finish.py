@@ -217,7 +217,8 @@ def test_similarity_driver_path_matches_index(spark, vertices, edges, kw, direct
     assert similarity._driver_pair_counts(g, kw.get("max_degree")) is not None
     # a null endpoint is nobody's neighbour on every plan, as in the
     # oracles' COUNT(DISTINCT dst)
-    plans = ["index"] + (["complement"] if edges is _NULL_ENDPOINT else [])
+    complement = edges is _NULL_ENDPOINT and not directed
+    plans = ["index"] + (["complement"] if complement else [])
     for op in SIMILARITIES:
         got = _scores(op(**kw).run(g))
         for plan in plans:
@@ -236,9 +237,11 @@ def test_similarity_null_endpoint_scores(spark):
 def _assert_similarity_defers(g):
     assert similarity._driver_pair_counts(g, 10) is None
     for op in SIMILARITIES:
-        for kw in ({}, {"max_degree": 10}):
-            got = _scores(op(**kw).run(g))
-            assert got == _scores(op(strategy="index", **kw).run(g))
+        got = _scores(op(max_degree=10).run(g))
+        assert got == _scores(op(strategy="index", max_degree=10).run(g))
+    # uncapped, the deferred ``auto`` chooses its plan by density
+    got = _scores(JaccardSimilarity().run(g))
+    assert got == _scores(JaccardSimilarity(strategy="index").run(g))
 
 
 def test_similarity_defers_string_ids(spark):
@@ -247,6 +250,28 @@ def test_similarity_defers_string_ids(spark):
         [("a", "b"), ("b", "c"), ("c", "a")], f"{SRC} string, {DST} string"
     )
     _assert_similarity_defers(Graph(v, e, directed=False, indexed=True))
+
+
+@pytest.mark.parametrize("directed", [False, True], ids=["undirected", "directed"])
+def test_similarity_dense_auto_takes_complement(spark, monkeypatch, directed):
+    # over the driver bounds and over half dense: self-loops at 0 and 4, a
+    # null endpoint, and vertex 6 outside the vertex table
+    edges = [(a, b) for a in range(7) for b in range(a + 1, 7)
+             if (a, b) not in ((0, 1), (2, 5), (3, 6))]
+    g = _graph(spark, range(6), edges + [(0, 0), (4, 4), (1, None)], directed)
+    monkeypatch.setattr(similarity, "BATCH_ROWS", 0)
+    taken = []
+    complement = similarity._pair_common_counts_complement
+    monkeypatch.setattr(
+        similarity, "_pair_common_counts_complement",
+        lambda g: taken.append(g) or complement(g),
+    )
+    # containment reads each side's degree, jaccard both at once
+    ops = (JaccardSimilarity, NeighborhoodContainment)
+    for op in ops:
+        got = _scores(op().run(g))
+        assert got == _scores(op(strategy="index").run(g)), op.__name__
+    assert len(taken) == len(ops)
 
 
 def test_similarity_defers_wedges_over_the_bound(spark, monkeypatch):
