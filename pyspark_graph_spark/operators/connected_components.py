@@ -33,13 +33,14 @@ from pyspark_graph_spark.constants import DST, ID, MSG, SRC, STATE
 from pyspark_graph_spark.graph import Graph
 from pyspark_graph_spark.operators.pregel import Pregel
 from pyspark_graph_spark.util import (
+    BATCH_ROWS,
     arrays,
     broadcast_if_small,
     checkpoint_observed,
+    fetch_arrays,
     fetch_bounded,
-    fetch_bounded_all,
-    fetch_tagged,
     int_columns,
+    local_frame,
     positions,
 )
 
@@ -80,9 +81,7 @@ def _min_label_kernel(ids, src, dst, max_iterations: int):
 
 
 def _local_components(spark, ids, labels) -> DataFrame:
-    import pyarrow as pa
-
-    return spark.createDataFrame(pa.table({ID: ids, COMPONENT: labels}))
+    return local_frame(spark, f"{ID} long, {COMPONENT} long", ids, labels)
 
 
 class ConnectedComponents:
@@ -106,7 +105,7 @@ class ConnectedComponents:
         self,
         max_iterations: int = 20,
         require_convergence: bool = True,
-        batch_finish: int = 1_000_000,
+        batch_finish: int = BATCH_ROWS,
     ):
         self.max_iterations = max_iterations
         self.require_convergence = require_convergence
@@ -115,23 +114,12 @@ class ConnectedComponents:
     def _run_batch(self, g: Graph):
         """The driver finish while vertices + edges fit ``batch_finish``;
         None above it."""
-        import numpy as np
-
-        verts = g.vertices.select(ID)
-        edges = g.edges.select(SRC, DST)
-        if not (
-            self.batch_finish
-            and int_columns(verts, ID)
-            and int_columns(edges, SRC, DST)
-        ):
-            return None
-        t = fetch_bounded_all(self.batch_finish, edges, verts)
+        t = fetch_arrays(
+            self.batch_finish, g.edges.select(SRC, DST), g.vertices.select(ID)
+        )
         if t is None:
             return None
-        e = arrays(t[0], **{SRC: np.int64, DST: np.int64})
-        v = arrays(t[1], **{ID: np.int64})
-        if e is None or v is None:
-            return None
+        e, v = t
         ids, labels, self.rounds_run, converged = _min_label_kernel(
             v[ID], e[SRC], e[DST], self.max_iterations
         )
@@ -288,21 +276,18 @@ class AlternatingConnectedComponents:
     driver fetches it with one limited Arrow collect and labels components
     with a union-find instead of the O(log n) alternating-star fixpoint —
     provably identical output (both paths label every component by its
-    minimum id; equality is pinned by test), and no ``rounds_run``. The
-    vertex table rides the same collect while edges + vertices fit;
-    otherwise, unless the pairs alone filled that collect, they are
-    fetched alone, and if they fit the unlabelled vertices come from a
-    Spark anti-join. Above the bound the distributed fixpoint runs, its
-    first round straight from the loop-free pairs, and after any round
-    whose live edge list fits the bound the driver union-find finishes
-    the contraction tail, fetched with the vertex table the same way. 1M
+    minimum id; equality is pinned by test), and no ``rounds_run``.
+    Above the bound the distributed fixpoint runs, its first round
+    straight from the loop-free pairs, and after any round whose live
+    edge list fits the bound the driver union-find finishes the
+    contraction tail. Both hand off the same way (``_handoff``). 1M
     edges x 16 B ≈ 16 MB in the driver. 0 disables; the distributed
     fixpoint remains the asymptotic path for billion-edge graphs."""
 
     def __init__(
         self,
         max_iterations: int = 20,
-        batch_finish: int = 1_000_000,
+        batch_finish: int = BATCH_ROWS,
         require_convergence: bool = True,
     ):
         self.max_iterations = max_iterations
@@ -315,21 +300,33 @@ class AlternatingConnectedComponents:
         # the guard exists for the day that stops being true.
         self.require_convergence = require_convergence
 
-    def _finish(self, g: Graph, pairs, verts=None):
-        """Labels from a fetched loop-free edge table by the driver
-        union-find. As in the distributed read, an edge vertex is labelled
-        by its component's minimum and every vertex no edge labels (roots,
+    def _handoff(self, g: Graph, edges: DataFrame, extra):
+        """Labels by the driver union-find from the loop-free ``edges``,
+        or None when they do not fit the bound. The vertex table
+        (``extra``, empty when the kernel cannot take it) rides the same
+        fetch while edges and vertices fit together; otherwise the edges
+        are fetched alone, unless they filled that fetch themselves. As
+        in the distributed read, an edge vertex is labelled by its
+        component's minimum and every vertex no edge labels (roots,
         isolated vertices) labels itself — in the driver when the vertex
-        table was fetched too (``verts``), else by a Spark anti-join
-        against a local membership table."""
+        table was fetched too, else by a Spark anti-join against a local
+        membership table."""
         import numpy as np
 
-        t = arrays(pairs, **{SRC: np.int64, DST: np.int64})
+        tables, seen = fetch_bounded(self.batch_finish, edges, *extra)
+        # the edges alone can fit only if the vertex table supplied some
+        # of the bound + 1 rows the joint fetch stopped at
+        if tables is None and extra and seen[0] <= self.batch_finish:
+            tables = fetch_bounded(self.batch_finish, edges)[0]
+        if tables is None:
+            return None
+        # loop-free edges hold no null: ``src != dst`` drops it
+        t = arrays(tables[0])
         ids, comp = _batch_union_find(t[SRC], t[DST])
         labelled = ids != comp
         ids, comp = ids[labelled], comp[labelled]
         spark = g.vertices.sparkSession
-        v = None if verts is None else arrays(verts, **{ID: np.int64})
+        v = arrays(tables[1]) if len(tables) > 1 else None
         if v is None:
             return _with_unlabelled(
                 g.vertices.select(ID), _local_components(spark, ids, comp)
@@ -346,17 +343,10 @@ class AlternatingConnectedComponents:
         # the vertex table rides each fetch when the kernel can take it
         extra = [verts] if int_columns(verts, ID) else []
         if batch:
-            # front path: pairs and vertices fit together in one fetch, so
-            # no round runs and no rounds_run is set; if only the pairs
-            # fit, the unlabelled vertices come from a Spark anti-join
-            front, seen = fetch_tagged(self.batch_finish, pairs, *extra)
-            # the pairs alone can fit only if the vertex table supplied
-            # some of the bound + 1 rows the joint fetch stopped at
-            if front is None and extra and seen[0] <= self.batch_finish:
-                front = fetch_bounded(pairs, self.batch_finish)
-                front = None if front is None else [front]
-            if front is not None:
-                return self._finish(g, *front)
+            # front path: no round runs, so no rounds_run is set
+            out = self._handoff(g, pairs, extra)
+            if out is not None:
+                return out
 
         def tail_fits(m) -> bool:
             # contraction tail: once the live edge list fits the bound, the
@@ -390,8 +380,8 @@ class AlternatingConnectedComponents:
             handoff = tail_fits(m)
         self.rounds_run = rounds
         if handoff:
-            tail = fetch_bounded_all(self.batch_finish, edges, *extra)
-            return self._finish(g, *(tail or [edges.toArrow()]))
+            # the live edge list fits, so the handoff cannot return None
+            return self._handoff(g, edges, extra)
         if self.require_convergence and not converged:
             raise RuntimeError(
                 "AlternatingConnectedComponents hit max_iterations="

@@ -33,12 +33,10 @@ from pyspark.sql import functions as F
 from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
 from pyspark_graph_spark.util import (
-    arrays,
+    BATCH_ROWS,
     broadcast_if_small,
     checkpoint_observed,
-    fetch_bounded,
-    fetch_bounded_all,
-    int_columns,
+    fetch_arrays,
     local_frame,
     positions,
 )
@@ -48,9 +46,9 @@ PAGERANK = "pagerank"
 # Bounded-batch finish, the one every bounded-batch operator runs (ulp
 # story as in operators/svd.py's module note). While vertices + symmetric
 # edges fit batch_finish, the driver fetches both in one limited Arrow
-# collect (util.fetch_bounded_all): (src, dst), the weight only when
-# weighted, and the vertex ids; unit weights and the reset vector are
-# built in numpy. The kernel replays the identical double
+# collect as numpy arrays (util.fetch_arrays): (src, dst), the weight
+# only when weighted, and the vertex ids; unit weights and the reset
+# vector are built in numpy. The kernel replays the identical double
 # algebra in numpy: per edge (pr(src) * w) / deg(src), per vertex
 # (1-α)·reset + α·(sum of contributions, 0 when none), the same
 # iteration count and the same optional L1-delta early stop. The result
@@ -62,26 +60,19 @@ PAGERANK = "pagerank"
 # unchanged and remains the only 100 TB path.
 
 
-def _edge_frame(g: Graph, weight_col) -> DataFrame | None:
-    """``(src, dst)`` of ``g.edges``, plus ``__w`` when weighted, or None
-    for non-integral ids, which the int64 kernels do not take."""
+def _edge_frame(g: Graph, weight_col) -> DataFrame:
+    """``(src, dst)`` of ``g.edges``, plus ``__w`` when weighted."""
     w = [F.col(weight_col).cast("double").alias("__w")] if weight_col else []
-    edges = g.edges.select(SRC, DST, *w)
-    return edges if int_columns(edges, SRC, DST) else None
+    return g.edges.select(SRC, DST, *w)
 
 
 def _edge_arrays(g: Graph, t):
-    """``(src, dst, w)`` arrays of ``g.symmetric_edges`` from a fetched
-    ``_edge_frame`` table, or None on a null; an unweighted table gets
-    the literal 1.0 weights here. An undirected graph is fetched once and
-    mirrored in numpy: the union's rows from one scan of the edge
-    table."""
+    """``(src, dst, w)`` arrays of ``g.symmetric_edges`` from the fetched
+    ``_edge_frame`` arrays ``t``; an unweighted fetch gets the literal
+    1.0 weights here. An undirected graph is fetched once and mirrored
+    in numpy: the union's rows from one scan of the edge table."""
     import numpy as np
 
-    cols = {SRC: np.int64, DST: np.int64, "__w": np.float64}
-    t = arrays(t, **{c: cols[c] for c in t.column_names})
-    if t is None:
-        return None
     src, dst = t[SRC], t[DST]
     wt = t.get("__w", np.ones(len(src), dtype=np.float64))
     if g.directed:
@@ -140,14 +131,15 @@ def _pagerank_kernel(
 
 
 def _ppr_multi_kernel(starts, src, dst, w, alpha: float, max_iterations: int):
-    """All-sources personalized PageRank in the driver: ``(id, source,
-    pagerank)`` columns, or None when the input must run the distributed
-    plan. Per source the recurrence runs dense over the edge-endpoint id
-    universe; the emitted row set equals the sparse plan's (restart ∪
-    reachable): every sparse row's value is strictly positive —
-    contributions are (positive pr · positive w / positive deg) sums — so
-    positive-mass entries ARE the sparse row set. Nonpositive weights
-    would break that equivalence; the kernel defers them."""
+    """All-sources personalized PageRank in the driver: the ``(id,
+    source, pagerank)`` column arrays, or None when the input must run
+    the distributed plan. Per source the recurrence runs dense over the
+    edge-endpoint id universe; the emitted row set equals the sparse
+    plan's (restart ∪ reachable): every sparse row's value is strictly
+    positive — contributions are (positive pr · positive w / positive
+    deg) sums — so positive-mass entries ARE the sparse row set.
+    Nonpositive weights would break that equivalence; the kernel defers
+    them."""
     import numpy as np
 
     if np.any(~(w > 0.0)):
@@ -174,11 +166,11 @@ def _ppr_multi_kernel(starts, src, dst, w, alpha: float, max_iterations: int):
         out_id.append(ids[mask])
         out_src.append(np.full(int(mask.sum()), start, dtype=np.int64))
         out_pr.append(pr[mask])
-    return {
-        ID: np.concatenate(out_id),
-        "source": np.concatenate(out_src),
-        PAGERANK: np.concatenate(out_pr),
-    }
+    return (
+        np.concatenate(out_id),
+        np.concatenate(out_src),
+        np.concatenate(out_pr),
+    )
 
 
 class PageRank:
@@ -189,7 +181,7 @@ class PageRank:
         tolerance: float | None = None,
         sources: list[int] | None = None,
         weight_col: str | None = None,
-        batch_finish: int = 1_000_000,
+        batch_finish: int = BATCH_ROWS,
     ):
         """``sources``: personalize — the (1-α) reset mass lands uniformly
         on these vertex ids instead of everywhere (random walk with restart
@@ -214,36 +206,30 @@ class PageRank:
         """The driver finish, or None when the input is above the bound or
         the kernel defers."""
         import numpy as np
-        import pyarrow as pa
 
-        edges = _edge_frame(g, self.weight_col)
         verts = g.vertices.select(ID)
-        if not (
-            self.batch_finish and edges is not None and int_columns(verts, ID)
-        ):
-            return None
-        t = fetch_bounded_all(self.batch_finish, edges, verts)
+        t = fetch_arrays(
+            self.batch_finish, _edge_frame(g, self.weight_col), verts
+        )
         if t is None:
             return None
         e, v = t
-        # the bound counts the symmetric edge rows the kernel iterates on
-        if (1 if g.directed else 2) * e.num_rows + v.num_rows > self.batch_finish:
-            return None
-        e = _edge_arrays(g, e)
-        v = arrays(v, **{ID: np.int64})
-        if e is None or v is None:
-            return None
         ids = v[ID]
+        # the bound counts the symmetric edge rows the kernel iterates on
+        rows = (1 if g.directed else 2) * len(e[SRC]) + len(ids)
+        if rows > self.batch_finish:
+            return None
         reset = np.ones(len(ids)) if self.sources is None else np.isin(
             ids, np.array([int(s) for s in self.sources], dtype=np.int64)
         ).astype(np.float64)
+        e = _edge_arrays(g, e)
         out = _pagerank_kernel(
             ids, reset, *e, self.alpha, self.max_iterations, self.tolerance
         )
         if out is None:
             return None
-        return verts.sparkSession.createDataFrame(
-            pa.table({ID: out[0], PAGERANK: out[1]})
+        return local_frame(
+            verts.sparkSession, f"{ID} long, {PAGERANK} double", *out
         )
 
     def run(self, g: Graph) -> DataFrame:
@@ -325,7 +311,7 @@ def parallel_personalized_pagerank(
     alpha: float = 0.85,
     max_iterations: int = 10,
     weight_col: str | None = None,
-    batch_finish: int = 1_000_000,
+    batch_finish: int = BATCH_ROWS,
 ) -> DataFrame:
     """Personalized PageRank from EVERY source at once — the reference
     README's one unsupported-matrix row with no counterpart here until
@@ -349,19 +335,20 @@ def parallel_personalized_pagerank(
     """
     if not sources:
         raise ValueError("sources must be non-empty")
-    import pyarrow as pa
-
     spark = g.edges.sparkSession
     starts = [int(s) for s in dict.fromkeys(sources)]
     # bounded-batch finish (module note); the sources count toward the bound
-    edges, e = _edge_frame(g, weight_col), None
-    if edges is not None and batch_finish >= len(sources):
-        bound = batch_finish - len(sources)
-        e = fetch_bounded(edges, bound if g.directed else bound // 2)
-        e = None if e is None else _edge_arrays(g, e)
-    out = None if e is None else _ppr_multi_kernel(starts, *e, alpha, max_iterations)
+    bound = max(batch_finish - len(sources), 0)
+    e = fetch_arrays(
+        bound if g.directed else bound // 2, _edge_frame(g, weight_col)
+    )
+    out = None if e is None else _ppr_multi_kernel(
+        starts, *_edge_arrays(g, e[0]), alpha, max_iterations
+    )
     if out is not None:
-        return spark.createDataFrame(pa.table(out))
+        return local_frame(
+            spark, f"{ID} long, source long, {PAGERANK} double", *out
+        )
     w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
     edges = g.symmetric_edges.select(SRC, DST, w.alias("__w")).localCheckpoint()
     restart = local_frame(

@@ -165,22 +165,14 @@ class Pregel:
             agg = self._aggregate(
                 self._messages(edges, changed, n_changed)
             )
-            # Fused upsert (round 11, guide §2.4): the previous shape was
-            # an INNER join to compute updates, then an anti-join + union
-            # to fold them back into `state` — two full-vertex shuffles
-            # and two localCheckpoint jobs per round. A single LEFT join
-            # computes the identical next state in one pass: vertices
-            # with no message keep their state (exactly the rows the
-            # inner join dropped and the anti-join kept), vertices with a
-            # message apply update_expr. `__has_msg` distinguishes "no
-            # message" from an aggregated NULL message, preserving the
-            # inner-join semantics bit for bit; the changed flag rides
-            # the same checkpointed frame, so one job per round replaces
-            # two and the anti+union shuffle disappears outright.
-            # the convergence probe rides the checkpoint job itself
-            # (round 12, guide §2.4 — checkpoint_observed): the previous
-            # shape paid one extra isEmpty action per round on the frame
-            # it had just materialized. Rows are byte-identical.
+            # One LEFT join computes the next state in one pass, one
+            # vertex shuffle and one checkpoint job per round: vertices
+            # with no message keep their state, vertices with a message
+            # apply update_expr. `__has_msg` tells "no message" from an
+            # aggregated NULL message, so an update applies exactly where
+            # an inner join with the messages would match. The changed
+            # flag rides the same checkpointed frame, and the convergence
+            # probe rides its checkpoint job (checkpoint_observed).
             updated, probe = checkpoint_observed(
                 state.join(
                     agg.withColumn("__has_msg", F.lit(True)),
@@ -194,8 +186,7 @@ class Pregel:
                     F.coalesce(F.col("__has_msg"), F.lit(False))
                     & self.comparison(F.col(OLD_STATE), F.col("__new_state")),
                 )
-                # a messaged-but-unchanged vertex KEEPS its old state row
-                # (the anti-join in the previous shape never replaced it),
+                # a messaged-but-unchanged vertex KEEPS its old state row,
                 # which matters when a lenient custom comparison deems two
                 # unequal values "unchanged"
                 .withColumn(

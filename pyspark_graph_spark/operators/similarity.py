@@ -23,13 +23,14 @@ graphs cap the hub fan-out with ``max_degree`` (drops hubs from the common-
 neighbor expansion — standard practice in MinHash/similarity pipelines) or
 rely on AQE skew splitting.
 
-Driver path: under ``strategy="auto"`` the edge pairs are fetched with one
-limited Arrow collect (``util.fetch_bounded``) while they fit ``BATCH_ROWS``
-rows, and the index plan is replayed in numpy: symmetrize (undirected),
-dedup (id, neighbour), drop hub neighbours, expand the pairs inside each
-neighbour group and count them. The score and the ``min_similarity``
-filter run in numpy too, and the result is a local DataFrame of the final
-columns — one Spark job in, one Arrow collect out. The second bound is
+Driver path: under ``strategy="auto"`` the edge pairs are fetched as numpy
+arrays with one limited Arrow collect (``util.fetch_arrays``) while they
+fit ``BATCH_ROWS`` rows, and the index plan is replayed in numpy:
+symmetrize (undirected), dedup (id, neighbour), drop hub neighbours,
+expand the pairs inside each neighbour group and count them. The score
+and the ``min_similarity`` filter run in numpy too, and the result is a
+local DataFrame of the final columns (``util.local_frame``) — one Spark
+job in, one Arrow collect out. The second bound is
 the candidate wedges Σ C(k, 2) over the neighbour groups, counted from the
 fetched arrays, so checking it costs no job. Over either bound, and for
 non-integral ids, ``auto`` takes a Spark plan, and only then pays the
@@ -47,16 +48,16 @@ from pyspark.sql import functions as F
 from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
 from pyspark_graph_spark.util import (
-    arrays,
+    BATCH_ROWS,
     dense_pairs,
-    fetch_bounded,
-    int_columns,
+    fetch_arrays,
     later_pairs,
+    local_frame,
 )
 
-# edge rows ``auto`` scores in the driver, and candidate wedges it may
-# expand there (the batch bound of PageRank, CC and TriangleCount)
-BATCH_ROWS = 1_000_000
+# ``BATCH_ROWS`` bounds both the edge rows ``auto`` scores in the driver
+# and the candidate wedges it may expand there, read as this module's
+# global so that it can be lowered here
 
 
 def _pair_common_counts_complement(g: Graph) -> DataFrame:
@@ -188,7 +189,8 @@ def _choose_pairs(
     """Pick the candidate-pair plan.
 
     ``index``: inverted-index join (output Σ deg² over the neighbours).
-    ``complement``: the same counts from the missing edges (dense graphs).
+    ``complement``: the same counts from the missing edges (dense graphs;
+    it takes no ``max_degree``).
     ``auto`` (above the driver bounds): index under a degree cap, else
     complement once the graph holds over half of all possible edges (the
     rule of TriangleCount's ``auto``) and the V²/2 pair cross join stays
@@ -217,14 +219,10 @@ def _driver_pair_counts(g: Graph, max_degree: int | None):
     driver bound or has non-integral ids."""
     import numpy as np
 
-    pairs = g.edges.select(SRC, DST)
-    if not int_columns(pairs, SRC, DST):
-        return None
-    t = fetch_bounded(pairs.dropna(), BATCH_ROWS)
-    e = None if t is None else arrays(t, **{SRC: np.int64, DST: np.int64})
+    e = fetch_arrays(BATCH_ROWS, g.edges.select(SRC, DST).dropna())
     if e is None:
         return None
-    src, dst = e[SRC], e[DST]
+    src, dst = e[0][SRC], e[0][DST]
     if not g.directed:
         src, dst = np.concatenate([src, dst]), np.concatenate([dst, src])
     # distinct (id, neighbour) rows
@@ -262,14 +260,15 @@ class _NeighborhoodScore:
         max_degree: int | None = None,
         strategy: str = "auto",
     ):
+        if strategy == "complement" and max_degree is not None:
+            # the complement counts every common neighbour, hubs included
+            raise ValueError("strategy='complement' takes no max_degree")
         self.min_similarity = min_similarity
         self.max_degree = max_degree
         self.strategy = strategy
 
     def _run_driver(self, g: Graph) -> DataFrame | None:
         import numpy as np
-        import pyarrow as pa
-        from pyspark.sql.types import DoubleType, StructField, StructType
 
         counts = _driver_pair_counts(g, self.max_degree)
         if counts is None:
@@ -282,15 +281,13 @@ class _NeighborhoodScore:
         score = self.score(common, sd, dd, np.minimum)
         keep = score >= self.min_similarity
         # ids typed as the Spark plan's, which reads them from symmetric_edges
-        id_type = g.symmetric_edges.schema[SRC].dataType
-        schema = StructType([
-            StructField(SRC, id_type),
-            StructField(DST, id_type),
-            StructField(self.column, DoubleType()),
-        ])
-        return g.edges.sparkSession.createDataFrame(
-            pa.table([ids[s[keep]], ids[d[keep]], score[keep]], names=schema.names),
-            schema,
+        id_type = g.symmetric_edges.schema[SRC].dataType.simpleString()
+        return local_frame(
+            g.edges.sparkSession,
+            f"{SRC} {id_type}, {DST} {id_type}, {self.column} double",
+            ids[s[keep]],
+            ids[d[keep]],
+            score[keep],
         )
 
     def run(self, g: Graph) -> DataFrame:

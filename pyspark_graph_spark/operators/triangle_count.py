@@ -21,19 +21,16 @@ from pyspark.sql import functions as F
 from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
 from pyspark_graph_spark.util import (
-    arrays,
+    BATCH_ROWS,
+    checkpoint_observed,
     dense_pairs,
-    fetch_bounded,
-    int_columns,
+    fetch_arrays,
     later_pairs,
     match_structure,
     order_edges,
 )
 
-# edge rows ``auto`` counts in the driver (the batch bound of PageRank and
-# connected components); wedges checked per numpy block, which bounds the
-# driver's working memory
-BATCH_ROWS = 1_000_000
+# wedges checked per numpy block, which bounds the driver's working memory
 _WEDGE_BLOCK = 1 << 22
 
 
@@ -90,8 +87,9 @@ class TriangleCount:
 
           T(G) = C(n,3) − |Ē|·(n−2) + Σ_v C(deḡ(v), 2) − T(Ḡ)
 
-      (triples minus triples containing ≥1 non-edge, corrected for pairs of
-      non-edges sharing a vertex and for complement triangles). Every term
+      over the n distinct endpoints of the loop-free edges (triples minus
+      triples containing ≥1 non-edge, corrected for pairs of non-edges
+      sharing a vertex and for complement triangles). Every term
       is an aggregate over the complement edge list, which is the *small*
       object exactly when the graph is dense and the motif join is at its
       worst. Above the batch bound ``auto`` switches between ``motif`` and
@@ -111,15 +109,24 @@ class TriangleCount:
         )
 
     def _count_complement(self, g: Graph) -> int:
-        ids = g.vertices.select(ID).localCheckpoint()
-        n = ids.count()
+        # the universe is the canonical edges' endpoints: a vertex on no
+        # edge closes no triangle, and an endpoint missing from the vertex
+        # table (or a vertex row repeated there) must not move n
         canon = order_edges(g.edges).localCheckpoint()
-        n_edges = canon.count()
+        ids, m = checkpoint_observed(
+            canon.select(F.col(SRC).alias(ID))
+            .union(canon.select(F.col(DST).alias(ID)))
+            .distinct(),
+            n=F.count(F.lit(1)),
+        )
+        n = m["n"]
         a = ids.select(F.col(ID).alias(SRC))
         b = ids.select(F.col(ID).alias(DST))
         pairs = a.join(F.broadcast(b), on=F.col(SRC) < F.col(DST))
-        comp = pairs.join(canon, on=[SRC, DST], how="anti").localCheckpoint()
-        comp_edges = comp.count()
+        comp, m = checkpoint_observed(
+            pairs.join(canon, on=[SRC, DST], how="anti"), n=F.count(F.lit(1))
+        )
+        comp_edges = m["n"]
         comp_deg = (
             comp.select(F.col(SRC).alias(ID))
             .unionByName(comp.select(F.col(DST).alias(ID)))
@@ -139,15 +146,9 @@ class TriangleCount:
     def _count_batch(self, g: Graph) -> int | None:
         """The driver count, or None above the bound (or for non-integral
         ids, which the int64 kernel does not take)."""
-        import numpy as np
-
-        pairs = g.edges.select(SRC, DST)
-        if not int_columns(pairs, SRC, DST):
-            return None
         # a null endpoint joins nothing in the motif plan
-        e = fetch_bounded(pairs.dropna(), BATCH_ROWS)
-        e = None if e is None else arrays(e, **{SRC: np.int64, DST: np.int64})
-        return None if e is None else _count_triangles(e[SRC], e[DST])
+        e = fetch_arrays(BATCH_ROWS, g.edges.select(SRC, DST).dropna())
+        return None if e is None else _count_triangles(e[0][SRC], e[0][DST])
 
     def run(self, g: Graph) -> int:
         strategy = self.strategy

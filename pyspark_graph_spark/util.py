@@ -4,22 +4,30 @@ The join/union/motif helpers are pure plan builders — no actions, no
 caching. They compose with Catalyst optimization (join reordering,
 pushdown) because they only use the public DataFrame API. The
 bounded-batch helpers at the end (``checkpoint_observed``,
-``fetch_bounded``, ``fetch_bounded_all``, ``driver_finish``,
-``fetch_tagged``) are the actions the iterative operators share,
+``fetch_bounded`` with its numpy gate ``fetch_arrays``, and
+``driver_finish``) are the actions the iterative operators share,
 ``broadcast_if_small`` is how their loops decide which side of a join
-moves, and ``local_frame`` builds the small frames they seed them with.
+moves, and ``local_frame`` builds the small frames they seed them with
+and return. ``BATCH_ROWS`` is the default bound of the core operators'
+driver finishes.
 """
 
 from __future__ import annotations
 
+import copy
 import re
-from functools import reduce
+from functools import lru_cache, reduce
 from typing import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pyspark_graph_spark.constants import DST, SRC
+from pyspark_graph_spark.constants import DST, ID, SRC
+
+# rows the core operators (PageRank, both connected components, triangle
+# count, similarity) take to the driver by default: 1M edges x 16 B is
+# ~16 MB there
+BATCH_ROWS = 1_000_000
 
 
 def common_columns(left: DataFrame, right: DataFrame) -> list[str]:
@@ -107,17 +115,16 @@ def checkpoint_observed(
     df: DataFrame, **metrics: Column
 ) -> tuple[DataFrame, dict]:
     """``localCheckpoint`` a frame and collect aggregate metrics about it
-    IN THE SAME JOB (round 12, guide §2.4).
+    IN THE SAME JOB.
 
-    Every iterative operator used to pay one extra action per round for
-    its convergence probe (``isEmpty``/``count``/fingerprint ``first``)
-    on the frame it had just checkpointed — at gate scale that is one
-    ~90 ms fixed-overhead job per round per operator, and at 100 TB one
-    full cluster job launch per round. ``DataFrame.observe`` attaches
-    the aggregates to the checkpoint's own materialization, so the probe
-    rides the job that must run anyway. The checkpointed ROWS are
-    byte-identical (observe is a pass-through metrics node); only the
-    probe's packaging changes.
+    An iterative operator's convergence probe (a row count, a changed
+    count, a fingerprint) on the frame it has just checkpointed would
+    otherwise cost one more action per round: one ~90 ms fixed-overhead
+    job per round per operator locally, one full cluster job launch per
+    round at scale. ``DataFrame.observe`` attaches the aggregates to the
+    checkpoint's own materialization, so the probe rides the job that
+    must run anyway. The checkpointed rows are those of ``df`` (observe
+    is a pass-through metrics node).
 
     Returns ``(checkpointed_df, {name: value})``. The metric values are
     what the same aggregate expressions would return over the frame
@@ -132,95 +139,104 @@ def checkpoint_observed(
     return out, obs.get
 
 
-def fetch_bounded(df: DataFrame, bound: int):
-    """The rows of ``df`` as a ``pyarrow.Table``, or None when it holds
-    more than ``bound`` rows — ONE limited collect, no count probe.
+def fetch_bounded(bound: int, *dfs: DataFrame):
+    """``(tables, seen)``: the rows of ``dfs``, one ``pyarrow.Table`` per
+    frame with that frame's columns, from ONE limited collect and no
+    count probe; ``tables`` is None when the frames hold more than
+    ``bound`` rows together. ``seen[i]`` counts the fetched rows of
+    ``dfs[i]``: above the bound the fetch stops at ``bound + 1`` rows,
+    so a frame that supplied all of them is over the bound on its own.
 
-    This is the bounded-batch gate: below the bound an operator finishes
-    in the driver on the fetched table and returns
-    ``createDataFrame(table)`` (a local relation or local Arrow batches,
-    so reading the result is one Arrow collect and no scan or shuffle).
-    Above it the probe costs one job that stops
-    at ``bound + 1`` rows, and the caller runs its distributed plan.
     ``coalesce(1)`` puts the limit in the scanning task itself: above the
-    bound the probe then reads up to ``bound + 1`` rows in one task and
-    stops, instead of shuffling every partition's first ``bound + 1`` rows
-    to one reducer (half the probe's time on a 1M-row edge table). Callers
+    bound the fetch reads up to ``bound + 1`` rows in one task and stops,
+    instead of shuffling every partition's first ``bound + 1`` rows to
+    one reducer (half the fetch's time on a 1M-row edge table). Callers
     pass scans and projections, so the one task loses no parallel work.
-    ``DataFrame.toArrow`` is public API (Spark >= 4.0), so the gate also
-    works under Spark Connect."""
-    table = df.coalesce(1).limit(bound + 1).toArrow()
-    return None if table.num_rows > bound else table
+    Several frames share one ``unionByName`` tagged with their position;
+    a single frame goes untagged. ``DataFrame.toArrow`` is public API
+    (Spark >= 4.0), so the gate also works under Spark Connect."""
+    import pyarrow.compute as pc
+
+    tagged = dfs[0] if len(dfs) == 1 else reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [df.withColumn("__fetch_tag", F.lit(i)) for i, df in enumerate(dfs)],
+    )
+    table = tagged.coalesce(1).limit(bound + 1).toArrow()
+    tag = None if len(dfs) == 1 else table.column("__fetch_tag")
+    tables = [table] if tag is None else [
+        table.filter(pc.equal(tag, i)).select(df.columns)
+        for i, df in enumerate(dfs)
+    ]
+    seen = [t.num_rows for t in tables]
+    return (None if table.num_rows > bound else tables), seen
 
 
-def fetch_bounded_all(bound: int, *dfs: DataFrame):
-    """``[pyarrow.Table]``, one per frame, or None when the frames hold
-    more than ``bound`` rows together — ``fetch_bounded`` over a tagged
-    ``unionByName``, so a driver finish that needs several inputs still
-    costs one collect. The tables carry each frame's own columns."""
-    return fetch_tagged(bound, *dfs)[0]
+def fetch_arrays(bound: int, *dfs: DataFrame):
+    """``[{column: numpy array}]``, one per frame, from one
+    ``fetch_bounded`` collect (``arrays``). None, and the caller runs its
+    distributed plan, when ``bound`` is 0, when a column does not fit
+    (an ``id``/``src``/``dst`` that is not integral, or another column
+    that is not numeric; checked on the schemas, before any job), when
+    the frames hold more than ``bound`` rows together, or when a fetched
+    column holds a null."""
+    if not bound or not all(
+        f.dataType.typeName() in (_INTEGRAL if f.name in _IDS else _NUMERIC)
+        for df in dfs
+        for f in df.schema.fields
+    ):
+        return None
+    tables = fetch_bounded(bound, *dfs)[0]
+    out = None if tables is None else [arrays(t) for t in tables]
+    return None if out is None or None in out else out
 
 
 def driver_finish(bound: int, kernel, schema: str, *dfs: DataFrame):
     """The bounded-batch finish of the operators whose kernels are pandas
     functions: ``kernel(*frames)`` runs in the driver on the rows of
-    ``dfs`` as pandas frames, fetched in one ``fetch_bounded_all``
-    collect, and its pandas result comes back as a local DataFrame of the
-    DDL ``schema`` (columns matched by name). None when ``bound`` is 0,
+    ``dfs`` as pandas frames, fetched in one ``fetch_bounded`` collect,
+    and its pandas result comes back as a local DataFrame of the DDL
+    ``schema`` (columns matched by name). None when ``bound`` is 0,
     when the frames hold more than ``bound`` rows together, or when the
     kernel returns None because it cannot replay that input: the caller
     then runs its distributed plan. A kernel's own error (a loud
     non-convergence, say) propagates as raised."""
-    from pyspark.sql.types import _parse_datatype_string
-
-    tables = fetch_bounded_all(bound, *dfs) if bound else None
+    tables = fetch_bounded(bound, *dfs)[0] if bound else None
     out = None if tables is None else kernel(*(t.to_pandas() for t in tables))
     if out is None:
         return None
-    names = [f.name for f in _parse_datatype_string(schema).fields]
-    return dfs[0].sparkSession.createDataFrame(out[names], schema)
+    struct = _struct(schema)
+    return dfs[0].sparkSession.createDataFrame(out[struct.names], struct)
 
 
 def local_frame(spark, schema: str, *columns) -> DataFrame:
-    """A small frame an operator builds itself (sources, landmarks):
-    ``columns`` hold the values of the DDL ``schema``'s fields, in order,
-    and go in as one ``pyarrow.Table``. Under the session's
-    ``localRelationThreshold`` (session.py) that is a LocalRelation,
-    which Spark scans in the JVM. A frame built from a list of rows is a
-    parallelized Python RDD, and each scan of it runs a Python worker: a
-    limited Arrow fetch of a 2-row frame took 370-610 ms that way and
-    50-90 ms this way (medians of 5, local[4])."""
+    """A small frame an operator builds itself (sources, landmarks, a
+    driver finish's result): ``columns`` hold the values of the DDL
+    ``schema``'s fields, in order, and go in as one ``pyarrow.Table``.
+    Under the session's ``localRelationThreshold`` (session.py) that is
+    a LocalRelation, which Spark scans in the JVM. A frame built from a
+    list of rows is a parallelized Python RDD, and each scan of it runs
+    a Python worker: a limited Arrow fetch of a 2-row frame took
+    370-610 ms that way and 50-90 ms this way (medians of 5, local[4])."""
     import pyarrow as pa
+
+    struct = _struct(schema)
+    table = pa.table(list(columns), names=struct.names)
+    return spark.createDataFrame(table, struct)
+
+
+def _struct(schema: str):
+    """The ``StructType`` of a DDL string, for ``createDataFrame``, which
+    would parse the string again. Spark parses DDL in the JVM (~5 ms a
+    call), so each string is parsed once per process; every caller gets
+    its own copy, as a frame's schema is a mutable object."""
+    return copy.deepcopy(_parsed(schema))
+
+
+@lru_cache(maxsize=None)
+def _parsed(schema: str):
     from pyspark.sql.types import _parse_datatype_string
 
-    names = [f.name for f in _parse_datatype_string(schema).fields]
-    return spark.createDataFrame(pa.table(list(columns), names=names), schema)
-
-
-def fetch_tagged(bound: int, *dfs: DataFrame):
-    """``(fetch_bounded_all(bound, *dfs), seen)``, where ``seen[i]`` is how
-    many of the fetched rows came from ``dfs[i]``. Above the bound the
-    fetch stops at ``bound + 1`` rows, so a frame that supplied all of
-    them holds more than ``bound`` rows on its own, in whatever order
-    the rows arrived."""
-    import pyarrow.compute as pc
-
-    tagged = [
-        df.withColumn("__fetch_tag", F.lit(i)) for i, df in enumerate(dfs)
-    ]
-    union = reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), tagged
-    )
-    # fetch_bounded's collect, keeping the table above the bound
-    table = union.coalesce(1).limit(bound + 1).toArrow()
-    tag = table.column("__fetch_tag")
-    seen = [pc.sum(pc.equal(tag, i)).as_py() or 0 for i in range(len(dfs))]
-    if table.num_rows > bound:
-        return None, seen
-    return [
-        table.filter(pc.equal(tag, i)).select(df.columns)
-        for i, df in enumerate(dfs)
-    ], seen
+    return _parse_datatype_string(schema)
 
 
 # Spark's per-column size estimates (DataType.defaultSize) by typeName; a
@@ -254,24 +270,32 @@ def broadcast_if_small(df: DataFrame, rows) -> DataFrame:
     return F.broadcast(df)
 
 
+_INTEGRAL = ("long", "integer", "short", "byte")
+_NUMERIC = _INTEGRAL + ("float", "double")
+_IDS = (ID, SRC, DST)
+
+
 def int_columns(df: DataFrame, *cols: str) -> bool:
     """True when every named column of ``df`` is an integral type — the
-    precondition of the int64 numpy kernels behind the batch finishes."""
+    precondition of the int64 kernels behind the batch finishes."""
     kinds = {f.name: f.dataType.typeName() for f in df.schema.fields}
-    return all(
-        kinds.get(c) in ("long", "integer", "short", "byte") for c in cols
-    )
+    return all(kinds.get(c) in _INTEGRAL for c in cols)
 
 
-def arrays(table, **dtypes):
-    """``{column: numpy array}`` of a fetched table cast to ``dtypes``, or
-    None when any of those columns holds a null: the numpy kernels assume
-    none, and the distributed plans define what a null id or weight does."""
-    if any(table.column(c).null_count for c in dtypes):
+def arrays(table):
+    """``{column: numpy array}`` of a fetched table, ``id``/``src``/``dst``
+    as int64 and any other column as float64, or None when a column
+    holds a null: the numpy kernels assume none, and the distributed
+    plans define what a null id or weight does."""
+    import numpy as np
+
+    if any(c.null_count for c in table.columns):
         return None
     return {
-        c: table.column(c).to_numpy().astype(dt, copy=False)
-        for c, dt in dtypes.items()
+        c: table.column(c).to_numpy().astype(
+            np.int64 if c in _IDS else np.float64, copy=False
+        )
+        for c in table.column_names
     }
 
 

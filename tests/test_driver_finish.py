@@ -1,15 +1,16 @@
 """Driver finishes of PageRank, connected components, triangle count and
 neighbourhood similarity.
 
-Below ``batch_finish`` these operators fetch their input with one limited
-Arrow collect (``util.fetch_bounded``, ``util.fetch_bounded_all``) and
-finish in numpy in the driver. Each must equal its distributed plan
-(``batch_finish=0``, or ``strategy="index"`` for similarity) on degenerate
-inputs too, and a small request must cost at most two Spark jobs — as must
-the pandas-kernel finishes (``util.driver_finish``) of the operators that
-need no checkpoint before their fetch. The pandas kernels of CriticalPath
-and EigenvectorCentrality are held to the same empty-vertex-table
-equality here; tests/test_driver_finish_degenerate.py covers the rest.
+Below ``batch_finish`` these operators fetch their input as numpy arrays
+with one limited Arrow collect (``util.fetch_arrays`` over
+``util.fetch_bounded``) and finish in numpy in the driver. Each must
+equal its distributed plan (``batch_finish=0``, or ``strategy="index"``
+for similarity) on degenerate inputs too, and a small request must cost
+at most two Spark jobs — as must the pandas-kernel finishes
+(``util.driver_finish``) of the operators that need no checkpoint before
+their fetch. The pandas kernels of CriticalPath and EigenvectorCentrality
+are held to the same empty-vertex-table equality here;
+tests/test_driver_finish_degenerate.py covers the rest.
 """
 
 from __future__ import annotations
@@ -18,6 +19,7 @@ import pathlib
 import re
 
 import pytest
+from pyspark.sql import functions as F
 
 from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
@@ -43,11 +45,7 @@ from pyspark_graph_spark.operators.spectral import HITS, EigenvectorCentrality
 from pyspark_graph_spark.operators.triangle_count import TriangleCount
 from pyspark_graph_spark.operators.walks import RandomWalks
 from pyspark_graph_spark.session import supports_jvm_internals
-from pyspark_graph_spark.util import (
-    fetch_bounded,
-    fetch_bounded_all,
-    fetch_tagged,
-)
+from pyspark_graph_spark.util import fetch_arrays, fetch_bounded
 
 SIMILARITIES = (JaccardSimilarity, OverlapCoefficient, NeighborhoodContainment)
 
@@ -62,30 +60,59 @@ def _rows(df, col):
     return sorted((r[ID], r[col]) for r in df.collect())
 
 
-def test_fetch_bounded_returns_none_above_the_bound(spark):
+def test_fetch_bounded_stops_at_the_bound_and_splits_each_frame(spark):
+    # one frame: no tag column, None above the bound
     df = spark.range(5)
-    assert fetch_bounded(df, 5).num_rows == 5
-    assert fetch_bounded(df, 4) is None
-    assert fetch_bounded(df.limit(0), 0).num_rows == 0
-
-
-def test_fetch_tagged_counts_each_frames_rows_above_the_bound(spark):
+    tables, seen = fetch_bounded(5, df)
+    assert [t.num_rows for t in tables] == seen == [5]
+    assert tables[0].column_names == ["id"]
+    assert fetch_bounded(4, df) == (None, [5])
+    assert fetch_bounded(2, df) == (None, [3])
+    assert fetch_bounded(0, df.limit(0))[0][0].num_rows == 0
+    # several frames: each frame's rows counted above the bound too
     a, b = spark.range(5), spark.range(3)
-    assert fetch_tagged(2, a) == (None, [3])
-    tables, seen = fetch_tagged(2, a, b)
+    tables, seen = fetch_bounded(2, a, b)
     assert tables is None and sum(seen) == 3
-    tables, seen = fetch_tagged(8, a, b)
+    tables, seen = fetch_bounded(8, a, b)
     assert seen == [5, 3] and [t.num_rows for t in tables] == [5, 3]
-
-
-def test_fetch_bounded_all_splits_one_collect_per_frame(spark):
+    # ... and split back into tables with each frame's own columns
     a = spark.range(3)
-    b = spark.createDataFrame([(7, "x"), (8, "y")], "k long, s string")
-    ta, tb = fetch_bounded_all(5, a, b)
+    k = F.col("id")
+    b = spark.range(7, 9).select(
+        k.alias("k"), F.when(k == 7, "x").otherwise("y").alias("s")
+    )
+    ta, tb = fetch_bounded(5, a, b)[0]
     assert ta.column_names == ["id"] and tb.column_names == ["k", "s"]
     assert ta.column("id").to_pylist() == [0, 1, 2]
     assert sorted(tb.column("s").to_pylist()) == ["x", "y"]
-    assert fetch_bounded_all(4, a, b) is None
+    assert fetch_bounded(4, a, b)[0] is None
+
+
+def test_fetch_arrays_takes_only_what_the_numpy_kernels_can(spark):
+    n = F.col("id")
+    e = spark.range(2).select(
+        n.cast("int").alias("src"),
+        (n + 1).alias("dst"),
+        (n * 1.5 + 2.5).cast("float").alias("w"),
+    )
+    (a,) = fetch_arrays(5, e)
+    assert {c: str(x.dtype) for c, x in a.items()} == {
+        "src": "int64", "dst": "int64", "w": "float64"
+    }
+    assert a["dst"].tolist() == [1, 2] and a["w"].tolist() == [2.5, 4.0]
+    a, v = fetch_arrays(5, e, spark.range(3))
+    assert len(a["src"]) == 2 and v["id"].tolist() == [0, 1, 2]
+    assert fetch_arrays(4, e, spark.range(3)) is None
+    nulls = spark.range(2).withColumn("x", F.when(n == 0, F.lit(1.0)))
+    assert fetch_arrays(5, nulls) is None
+    # bound 0 and a column that does not fit are refused from the schema:
+    # collecting ``boom`` would raise
+    boom = spark.range(3).select(
+        F.when(n >= 0, F.raise_error("collected")).otherwise(n).alias("id")
+    )
+    assert fetch_arrays(0, boom) is None
+    assert fetch_arrays(5, boom.select(F.col("id").cast("double"))) is None
+    assert fetch_arrays(5, boom, boom.withColumn("s", F.lit("x"))) is None
 
 
 # ---- empty vertex table with nonempty edges ---------------------------------
@@ -176,12 +203,21 @@ def test_alternating_cc_hands_the_contraction_tail_to_the_driver(spark):
                     (2, 3), (3, 0), (3, 0), (1, 3)]),
         # empty edge table
         (range(3), []),
+        # an endpoint outside the vertex table
+        ([0, 1], [(0, 1), (1, 2), (2, 0)]),
+        # a repeated vertex row
+        ([0, 1, 2, 2, 3], [(0, 1), (1, 2), (2, 0)]),
     ],
-    ids=["isolated", "self_loops", "duplicates", "no_edges"],
+    ids=["isolated", "self_loops", "duplicates", "no_edges",
+         "missing_vertex", "repeated_vertex"],
 )
 def test_triangle_count_driver_path_matches_motif(spark, vertices, edges):
     g = _graph(spark, vertices, edges)
-    assert TriangleCount().run(g) == TriangleCount(strategy="motif").run(g)
+    counts = {
+        s: TriangleCount(strategy=s).run(g)
+        for s in ("auto", "motif", "complement")
+    }
+    assert len(set(counts.values())) == 1, counts
 
 
 # ---- neighbourhood similarity: driver kernel == index plan -----------------
@@ -242,6 +278,13 @@ def _assert_similarity_defers(g):
     # uncapped, the deferred ``auto`` chooses its plan by density
     got = _scores(JaccardSimilarity().run(g))
     assert got == _scores(JaccardSimilarity(strategy="index").run(g))
+
+
+def test_similarity_complement_refuses_max_degree():
+    # the complement counts hub-mediated pairs that max_degree would drop
+    for op in SIMILARITIES:
+        with pytest.raises(ValueError, match="max_degree"):
+            op(strategy="complement", max_degree=2)
 
 
 def test_similarity_defers_string_ids(spark):
@@ -330,10 +373,12 @@ def test_small_request_runs_at_most_two_jobs(spark, make, request):
 
 # ---- one gate mechanism ------------------------------------------------------
 
-# a single-group pandas UDF keyed on a literal, or a fallback recognised by
-# the text of an exception
+# a single-group pandas UDF keyed on a literal, a fallback recognised by
+# the text of an exception, or a driver handoff outside util (an Arrow
+# collect, a hand-built Arrow result frame, the old tagged fetch)
 _OLD_GATE = re.compile(
     r'applyInPandas|\.cogroup\(|"__g"|in str\(e\)|in msg\b|_DEGENERATE__'
+    r'|\.toArrow\(|pa\.table\(|fetch_bounded_all'
 )
 
 
