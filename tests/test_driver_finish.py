@@ -60,22 +60,27 @@ def _rows(df, col):
     return sorted((r[ID], r[col]) for r in df.collect())
 
 
-def test_fetch_bounded_stops_at_the_bound_and_splits_each_frame(spark):
+def test_fetch_bounded_returns_none_above_the_bound(spark):
     # one frame: no tag column, None above the bound
     df = spark.range(5)
     tables, seen = fetch_bounded(5, df)
     assert [t.num_rows for t in tables] == seen == [5]
     assert tables[0].column_names == ["id"]
     assert fetch_bounded(4, df) == (None, [5])
-    assert fetch_bounded(2, df) == (None, [3])
     assert fetch_bounded(0, df.limit(0))[0][0].num_rows == 0
-    # several frames: each frame's rows counted above the bound too
+
+
+def test_fetch_tagged_counts_each_frames_rows_above_the_bound(spark):
     a, b = spark.range(5), spark.range(3)
+    assert fetch_bounded(2, a) == (None, [3])
     tables, seen = fetch_bounded(2, a, b)
     assert tables is None and sum(seen) == 3
     tables, seen = fetch_bounded(8, a, b)
     assert seen == [5, 3] and [t.num_rows for t in tables] == [5, 3]
-    # ... and split back into tables with each frame's own columns
+
+
+def test_fetch_bounded_all_splits_one_collect_per_frame(spark):
+    # several frames come back as tables with each frame's own columns
     a = spark.range(3)
     k = F.col("id")
     b = spark.range(7, 9).select(
