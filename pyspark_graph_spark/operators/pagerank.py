@@ -27,7 +27,7 @@ shuffles both sides; that is the path for vertex tables of any size.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pyspark_graph_spark.constants import DST, ID, SRC
@@ -39,6 +39,7 @@ from pyspark_graph_spark.util import (
     fetch_arrays,
     local_frame,
     positions,
+    round_zero,
 )
 
 PAGERANK = "pagerank"
@@ -255,25 +256,29 @@ class PageRank:
         deg = edges.groupBy(F.col(SRC).alias(ID)).agg(
             F.sum("__w").alias("__deg")
         )
-        state, m = checkpoint_observed(
-            g.vertices.select(ID)
-            .withColumn("__reset", reset)
-            .join(deg, on=ID, how="left")
-            .withColumn(PAGERANK, F.col("__reset")),
-            __n=F.count(F.lit(1)),
-        )
-        for _ in range(self.max_iterations):
+
+        def step(state, rows=None):
             ranks = broadcast_if_small(
-                state.select(ID, PAGERANK, "__deg"), m["__n"]
+                state.select(ID, PAGERANK, "__deg"), rows
             )
-            contribs = edges.join(ranks, on=F.col(SRC) == F.col(ID)).select(
-                F.col(DST).alias(ID),
-                (F.col(PAGERANK) * F.col("__w") / F.col("__deg")).alias("__c"),
+            contribs = (
+                edges.join(ranks, on=F.col(SRC) == F.col(ID))
+                .filter(F.col(DST).isNotNull())
+                .select(
+                    F.col(DST).alias(ID),
+                    (F.col(PAGERANK) * F.col("__w") / F.col("__deg")).alias(
+                        "__c"
+                    ),
+                )
             )
             # the state's own rows carry the static columns and the old
             # rank through the aggregate; a destination outside the vertex
-            # table has none and drops out, as in a left join from vertices
-            state, probe = checkpoint_observed(
+            # table has none and drops out, as in a left join from vertices.
+            # A null destination joins no vertex either; dropping it also
+            # keeps the state's own "id is not null" (when the vertex ids
+            # have it) from one iteration to the next, so Spark plans
+            # iteration 1, which reads the seed, as it plans the others
+            return (
                 contribs.unionByName(
                     state.select(
                         ID, "__reset", "__deg", F.col(PAGERANK).alias("__old")
@@ -295,7 +300,29 @@ class PageRank:
                         F.lit(1.0 - self.alpha) * F.col("__reset")
                         + F.lit(self.alpha) * F.coalesce("__sum", F.lit(0.0))
                     ).alias(PAGERANK),
-                ),
+                )
+            )
+
+        # pr_0 is the reset vector, with no old rank; typed as an
+        # iteration's state, so every iteration runs one plan
+        seed = (
+            g.vertices.select(ID)
+            .withColumn("__reset", reset)
+            .join(deg, on=ID, how="left")
+            .select(
+                ID,
+                "__reset",
+                "__deg",
+                F.lit(None).cast("double").alias("__old"),
+                F.col("__reset").alias(PAGERANK),
+            )
+        )
+        state, m = checkpoint_observed(
+            round_zero(seed, step), __n=F.count(F.lit(1))
+        )
+        for _ in range(self.max_iterations):
+            state, probe = checkpoint_observed(
+                step(state, m["__n"]),
                 __delta=F.sum(F.abs(F.col(PAGERANK) - F.col("__old"))),
             )
             delta = probe["__delta"]
@@ -350,13 +377,20 @@ def parallel_personalized_pagerank(
             spark, f"{ID} long, source long, {PAGERANK} double", *out
         )
     w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    edges = g.symmetric_edges.select(SRC, DST, w.alias("__w")).localCheckpoint()
+    # the static edge side, checkpointed once: each edge row carries its
+    # source's out-weight sum, summed over the source's rows. A window has
+    # one plan; a join of the edges with their sums lets AQE pick either
+    # side to broadcast, call by call
+    edges = (
+        g.symmetric_edges.select(SRC, DST, w.alias("__w"))
+        .withColumn("__deg", F.sum("__w").over(Window.partitionBy(SRC)))
+        .localCheckpoint()
+    )
     restart = local_frame(
         spark, f"{ID} long, source long", starts, starts
     ).localCheckpoint()
-    deg = edges.groupBy(SRC).agg(F.sum("__w").alias("__deg")).localCheckpoint()
-    ranks = restart.withColumn(PAGERANK, F.lit(1.0)).localCheckpoint()
-    for _ in range(max_iterations):
+
+    def step(ranks, rows=None):
         # alpha is applied ONCE after the aggregate — pr_{k+1} =
         # (1-α)·reset + α·Σ(pr·w/d) — the same arithmetic order as the
         # unrolled SQL oracle (0.15*reset + 0.85*SUM(pr/d)), so agreement
@@ -364,8 +398,9 @@ def parallel_personalized_pagerank(
         # Restart rows ride the same union with a flag instead of a
         # pre-scaled mass so neither term is folded into the sum.
         contribs = (
-            edges.join(deg, on=SRC)
-            .join(ranks, on=F.col(SRC) == F.col(ID))
+            edges.join(
+                broadcast_if_small(ranks, rows), on=F.col(SRC) == F.col(ID)
+            )
             .select(
                 F.col(DST).alias(ID),
                 "source",
@@ -373,7 +408,7 @@ def parallel_personalized_pagerank(
                 F.lit(0.0).alias("__reset"),
             )
         )
-        ranks = (
+        return (
             contribs.unionByName(
                 restart.select(
                     ID,
@@ -395,6 +430,17 @@ def parallel_personalized_pagerank(
                     + F.lit(alpha) * F.col("__sc")
                 ).alias(PAGERANK),
             )
-            .localCheckpoint()
+        )
+
+    # typed as an iteration's ranks, so every iteration runs one plan; the
+    # observed row count broadcasts the ranks in every iteration while they
+    # fit, where Spark's own estimate would stop doing so after a few
+    ranks, m = checkpoint_observed(
+        round_zero(restart.withColumn(PAGERANK, F.lit(1.0)), step),
+        n=F.count(F.lit(1)),
+    )
+    for _ in range(max_iterations):
+        ranks, m = checkpoint_observed(
+            step(ranks, m["n"]), n=F.count(F.lit(1))
         )
     return ranks

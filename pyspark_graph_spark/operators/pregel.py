@@ -21,6 +21,10 @@ Physical redesign for scale (the reference's biggest flaw, SURVEY.md §3b):
   the previous round's checkpoint, are broadcast to it while they fit
   (util.broadcast_if_small). Above the threshold the plain join runs,
   and AQE's skew-join splitting spreads a hub's edge rows.
+- **One plan per superstep.** Round 0's checkpoint has the columns,
+  types and nullability of every later round's (util.round_zero), and
+  every round's senders are the changed rows of the last checkpoint, so
+  Spark compiles a round's code once per session, not again for round 2.
 - **``unionByName`` upsert** — the reference's positional union
   (pregel.py:68) silently depends on column order.
 
@@ -51,6 +55,7 @@ from pyspark_graph_spark.util import (
     broadcast_if_small,
     checkpoint_observed,
     ne_null_safe,
+    round_zero,
 )
 
 
@@ -143,16 +148,62 @@ class Pregel:
 
     # -- main loop ----------------------------------------------------------
 
+    def _round(
+        self, edges: DataFrame, updated: DataFrame, n_changed
+    ) -> DataFrame:
+        """The next ``(id, ..., state, __changed)`` frame from this one.
+
+        One LEFT join computes the next state in one pass, one vertex
+        shuffle and one checkpoint job per round: vertices with no message
+        keep their state, vertices with a message apply update_expr.
+        ``__has_msg`` tells "no message" from an aggregated NULL message,
+        so an update applies exactly where an inner join with the messages
+        would match. The changed flag rides the same frame, and the
+        convergence probe rides its checkpoint job (checkpoint_observed).
+        """
+        state = updated.drop("__changed")
+        changed = updated.filter(F.col("__changed")).drop("__changed")
+        agg = self._aggregate(self._messages(edges, changed, n_changed))
+        return (
+            state.join(
+                agg.withColumn("__has_msg", F.lit(True)), on=ID, how="left"
+            )
+            .withColumn(OLD_STATE, F.col(STATE))
+            .withColumn("__new_state", self.update_expr)
+            .withColumn(
+                "__changed",
+                F.coalesce(F.col("__has_msg"), F.lit(False))
+                & self.comparison(F.col(OLD_STATE), F.col("__new_state")),
+            )
+            # a messaged-but-unchanged vertex KEEPS its old state row,
+            # which matters when a lenient custom comparison deems two
+            # unequal values "unchanged"
+            .withColumn(
+                STATE,
+                F.when(F.col("__changed"), F.col("__new_state")).otherwise(
+                    F.col(STATE)
+                ),
+            )
+            .drop(OLD_STATE, MSG, "__has_msg", "__new_state")
+        )
+
     def run(self, g: Graph) -> DataFrame:
         """Returns the vertex table with a final ``state`` column."""
         # the static edge side is materialized once and scanned by both
         # message directions
         edges = g.edges.localCheckpoint()
-        state = g.vertices.withColumn(STATE, self.initial_state)
+        seed = g.vertices.withColumn(STATE, self.initial_state)
         if self.carry_columns is not None:
-            state = state.select(ID, *self.carry_columns, STATE)
-        state, m = checkpoint_observed(state, __n=F.count(F.lit(1)))
-        changed = state  # every vertex is "changed" before round 1
+            seed = seed.select(ID, *self.carry_columns, STATE)
+        # every vertex is "changed" before round 1; round 0 is typed as
+        # every later round's frame, so all rounds run one plan
+        updated, m = checkpoint_observed(
+            round_zero(
+                seed.withColumn("__changed", F.lit(True)),
+                lambda u: self._round(edges, u, None),
+            ),
+            __n=F.count(F.lit(1)),
+        )
         n_changed = m["__n"]
 
         # exposed after run(): False means the loop hit max_iterations with
@@ -162,47 +213,13 @@ class Pregel:
         self.converged = False
         self.rounds_run = 0
         while self.rounds_run < self.max_iterations:
-            agg = self._aggregate(
-                self._messages(edges, changed, n_changed)
-            )
-            # One LEFT join computes the next state in one pass, one
-            # vertex shuffle and one checkpoint job per round: vertices
-            # with no message keep their state, vertices with a message
-            # apply update_expr. `__has_msg` tells "no message" from an
-            # aggregated NULL message, so an update applies exactly where
-            # an inner join with the messages would match. The changed
-            # flag rides the same checkpointed frame, and the convergence
-            # probe rides its checkpoint job (checkpoint_observed).
             updated, probe = checkpoint_observed(
-                state.join(
-                    agg.withColumn("__has_msg", F.lit(True)),
-                    on=ID,
-                    how="left",
-                )
-                .withColumn(OLD_STATE, F.col(STATE))
-                .withColumn("__new_state", self.update_expr)
-                .withColumn(
-                    "__changed",
-                    F.coalesce(F.col("__has_msg"), F.lit(False))
-                    & self.comparison(F.col(OLD_STATE), F.col("__new_state")),
-                )
-                # a messaged-but-unchanged vertex KEEPS its old state row,
-                # which matters when a lenient custom comparison deems two
-                # unequal values "unchanged"
-                .withColumn(
-                    STATE,
-                    F.when(
-                        F.col("__changed"), F.col("__new_state")
-                    ).otherwise(F.col(STATE)),
-                )
-                .drop(OLD_STATE, MSG, "__has_msg", "__new_state"),
+                self._round(edges, updated, n_changed),
                 __n_changed=F.sum(F.col("__changed").cast("long")),
             )
-            changed = updated.filter(F.col("__changed")).drop("__changed")
-            state = updated.drop("__changed")
             self.rounds_run += 1
             n_changed = probe["__n_changed"]
             if not n_changed:
                 self.converged = True
                 break
-        return state
+        return updated.drop("__changed")

@@ -34,7 +34,7 @@ job in, one Arrow collect out. The second bound is
 the candidate wedges Σ C(k, 2) over the neighbour groups, counted from the
 fetched arrays, so checking it costs no job. Over either bound, and for
 non-integral ids, ``auto`` takes a Spark plan, and only then pays the
-vertex-count and distinct-edge probes that choose it (``_choose_pairs``).
+one edge and endpoint count that chooses it (``_choose_pairs``).
 
 Every plan ignores an edge with a null endpoint: a null is nobody's
 neighbour, and it counts toward no degree (SQL's ``COUNT(DISTINCT dst)``).
@@ -50,6 +50,7 @@ from pyspark_graph_spark.graph import Graph
 from pyspark_graph_spark.util import (
     BATCH_ROWS,
     dense_pairs,
+    edge_counts,
     fetch_arrays,
     later_pairs,
     local_frame,
@@ -194,13 +195,15 @@ def _choose_pairs(
     ``auto`` (above the driver bounds): index under a degree cap, else
     complement once the graph holds over half of all possible edges (the
     rule of TriangleCount's ``auto``) and the V²/2 pair cross join stays
-    tractable, else index. Choosing costs a vertex and an edge count.
+    tractable, else index. n is the universe complement cross-joins:
+    the non-null edge endpoints, counted in one job with the edges.
     """
     if strategy == "auto":
         strategy = "index"
         if max_degree is None:
-            n = g.vertices.count()
-            n_edges = g.symmetric_edges.select(SRC, DST).distinct().count()
+            n_edges, n = edge_counts(
+                g.symmetric_edges.select(SRC, DST).dropna().distinct()
+            )
             density = n_edges / max(n * (n - 1), 1)
             if density > 0.5 and n <= 200_000:
                 strategy = "complement"

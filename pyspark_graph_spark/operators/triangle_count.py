@@ -24,6 +24,7 @@ from pyspark_graph_spark.util import (
     BATCH_ROWS,
     checkpoint_observed,
     dense_pairs,
+    edge_counts,
     fetch_arrays,
     later_pairs,
     match_structure,
@@ -156,9 +157,10 @@ class TriangleCount:
             n = self._count_batch(g)
             if n is not None:
                 return n
-            n = g.vertices.count()
+            # n is the universe complement cross-joins: the canonical
+            # edges' endpoints, counted in one job with the edges
+            n_edges, n = edge_counts(order_edges(g.edges))
             if 2 < n <= 200_000:
-                n_edges = order_edges(g.edges).count()
                 density = 2 * n_edges / (n * (n - 1))
                 strategy = "complement" if density > 0.5 else "motif"
             else:

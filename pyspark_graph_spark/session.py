@@ -12,6 +12,16 @@ import uuid
 
 from pyspark.sql import SparkSession
 
+# Entries of Spark's codegen cache (spark.sql.codegen.cache.maxEntries).
+# Counted with Spark's CodegenMetrics compile counter on the powerlaw-bsp
+# benchmark workload (indexing, degrees, and PageRank, alternating
+# connected components and label propagation on their distributed loops):
+# its small warm-up pass compiles 155 classes and the first full pass 10
+# more, 165 in all; no later pass compiles any. At Spark's default of 100
+# entries each pass evicted and recompiled 138 classes. 1024 holds six
+# such working sets.
+CODEGEN_CACHE_ENTRIES = 1024
+
 
 def get_spark(
     app_name: str = "pyspark_graph_spark",
@@ -48,6 +58,11 @@ def get_spark(
         # every such table into rows in the driver, measured at ~28 ms/MB
         # each way against ~20-30 ms for the job that reads the batches
         .config("spark.sql.execution.arrow.localRelationThreshold", "1MB")
+        # the JVM-wide cache of compiled whole-stage and expression classes
+        # (static, default 100 entries) is sized to hold the engine's
+        # working set, so a plan a BSP loop has run before is not compiled
+        # again. CODEGEN_CACHE_ENTRIES notes the measurement
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     return builder.getOrCreate()
 

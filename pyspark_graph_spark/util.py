@@ -7,8 +7,8 @@ bounded-batch helpers at the end (``checkpoint_observed``,
 ``fetch_bounded`` with its numpy gate ``fetch_arrays``, and
 ``driver_finish``) are the actions the iterative operators share,
 ``broadcast_if_small`` is how their loops decide which side of a join
-moves, and ``local_frame`` builds the small frames they seed them with
-and return. ``BATCH_ROWS`` is the default bound of the core operators'
+moves, ``round_zero`` types their round 0 as any other round, and
+``local_frame`` builds the small frames they seed them with and return. ``BATCH_ROWS`` is the default bound of the core operators'
 driver finishes.
 """
 
@@ -111,6 +111,18 @@ def order_edges(edges: DataFrame) -> DataFrame:
     )
 
 
+def edge_counts(edges: DataFrame) -> tuple[int, int]:
+    """``(rows, endpoints)`` of a ``(src, dst)`` frame with no null
+    endpoint: its rows and its distinct endpoints, from one job. Each row
+    becomes its two endpoints, which one aggregate counts and dedups."""
+    row = (
+        edges.select(F.explode(F.array(SRC, DST)).alias(ID))
+        .agg(F.count(F.lit(1)).alias("ends"), F.count_distinct(ID).alias("n"))
+        .first()
+    )
+    return row["ends"] // 2, row["n"]
+
+
 def checkpoint_observed(
     df: DataFrame, **metrics: Column
 ) -> tuple[DataFrame, dict]:
@@ -139,6 +151,20 @@ def checkpoint_observed(
     return out, obs.get
 
 
+def round_zero(seed: DataFrame, step) -> DataFrame:
+    """Round 0 of a BSP loop: the rows of ``seed``, typed as the frame
+    ``step(seed)`` that every round builds from the last. The columns
+    must be the same; the order, types and nullability become the
+    step's. A seed built with its own expressions differs from a round,
+    most often in nullability (a round's outer join or aggregate makes a
+    column nullable), and Spark then generates and compiles a second set
+    of classes for round 2. Seeded this way every round runs one plan,
+    which Spark compiles once per session (session.py). No row of
+    ``step(seed)`` is computed: the optimizer drops the empty side of
+    the union, and the union's schema keeps the wider nullability."""
+    return step(seed).limit(0).unionByName(seed)
+
+
 def fetch_bounded(bound: int, *dfs: DataFrame):
     """``(tables, seen)``: the rows of ``dfs``, one ``pyarrow.Table`` per
     frame with that frame's columns, from ONE limited collect and no
@@ -155,6 +181,7 @@ def fetch_bounded(bound: int, *dfs: DataFrame):
     Several frames share one ``unionByName`` tagged with their position;
     a single frame goes untagged. ``DataFrame.toArrow`` is public API
     (Spark >= 4.0), so the gate also works under Spark Connect."""
+    import numpy as np
     import pyarrow.compute as pc
 
     tagged = dfs[0] if len(dfs) == 1 else reduce(
@@ -162,13 +189,16 @@ def fetch_bounded(bound: int, *dfs: DataFrame):
         [df.withColumn("__fetch_tag", F.lit(i)) for i, df in enumerate(dfs)],
     )
     table = tagged.coalesce(1).limit(bound + 1).toArrow()
-    tag = None if len(dfs) == 1 else table.column("__fetch_tag")
-    tables = [table] if tag is None else [
+    if len(dfs) == 1:
+        return (None if table.num_rows > bound else [table]), [table.num_rows]
+    tag = table.column("__fetch_tag")
+    seen = np.bincount(tag.to_numpy(), minlength=len(dfs)).tolist()
+    if table.num_rows > bound:  # counted from the tags alone
+        return None, seen
+    return [
         table.filter(pc.equal(tag, i)).select(df.columns)
         for i, df in enumerate(dfs)
-    ]
-    seen = [t.num_rows for t in tables]
-    return (None if table.num_rows > bound else tables), seen
+    ], seen
 
 
 def fetch_arrays(bound: int, *dfs: DataFrame):

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
-from pyspark_graph_spark.operators import similarity
+from pyspark_graph_spark.operators import similarity, triangle_count
 from pyspark_graph_spark.operators.connected_components import (
     AlternatingConnectedComponents,
     ConnectedComponents,
@@ -303,10 +303,13 @@ def test_similarity_defers_string_ids(spark):
 @pytest.mark.parametrize("directed", [False, True], ids=["undirected", "directed"])
 def test_similarity_dense_auto_takes_complement(spark, monkeypatch, directed):
     # over the driver bounds and over half dense: self-loops at 0 and 4, a
-    # null endpoint, and vertex 6 outside the vertex table
+    # null endpoint, and vertex 6 outside the vertex table. Density counts
+    # the 7 non-null endpoints; the reversed edges 6-0 and 5-1 put the
+    # directed view over half (22 of 42 ordered pairs)
     edges = [(a, b) for a in range(7) for b in range(a + 1, 7)
              if (a, b) not in ((0, 1), (2, 5), (3, 6))]
-    g = _graph(spark, range(6), edges + [(0, 0), (4, 4), (1, None)], directed)
+    extra = [(0, 0), (4, 4), (1, None), (6, 0), (5, 1)]
+    g = _graph(spark, range(6), edges + extra, directed)
     monkeypatch.setattr(similarity, "BATCH_ROWS", 0)
     taken = []
     complement = similarity._pair_common_counts_complement
@@ -320,6 +323,26 @@ def test_similarity_dense_auto_takes_complement(spark, monkeypatch, directed):
         got = _scores(op().run(g))
         assert got == _scores(op(strategy="index").run(g)), op.__name__
     assert len(taken) == len(ops)
+
+
+def test_auto_sizes_the_complement_choice_from_the_edge_endpoints(
+    spark, monkeypatch
+):
+    # over the driver bounds, a 399-edge path over 400 vertices is sparse
+    # however few rows its vertex table has: the complement plans
+    # cross-join the edge endpoints, not the vertex rows
+    g = _graph(spark, range(3), [(i, i + 1) for i in range(399)])
+    monkeypatch.setattr(similarity, "BATCH_ROWS", 0)
+    monkeypatch.setattr(triangle_count, "BATCH_ROWS", 0)
+    want = _scores(JaccardSimilarity(strategy="index").run(g))
+
+    def refuse(*args):
+        raise AssertionError("the complement plan ran on a sparse graph")
+
+    monkeypatch.setattr(similarity, "_pair_common_counts_complement", refuse)
+    monkeypatch.setattr(TriangleCount, "_count_complement", refuse)
+    assert _scores(JaccardSimilarity().run(g)) == want
+    assert TriangleCount().run(g) == TriangleCount(strategy="motif").run(g) == 0
 
 
 def test_similarity_defers_wedges_over_the_bound(spark, monkeypatch):

@@ -116,3 +116,17 @@ def test_ppr_multi_nonpositive_weight_defers_to_distributed(spark):
     am = {(r[ID], r["source"]): r["pagerank"] for r in a.collect()}
     bm = {(r[ID], r["source"]): r["pagerank"] for r in b.collect()}
     assert am == bm  # deferred == distributed, including the row set
+
+
+@pytest.mark.parametrize("directed", [True, False], ids=["directed", "undirected"])
+def test_distributed_null_vertex_id_joins_no_edge(spark, directed):
+    # a null id matches no edge endpoint, as in a join: the null vertex
+    # sends no rank and receives none, so it keeps its reset mass
+    v = spark.createDataFrame([(0,), (1,), (2,), (None,)], "id long")
+    e = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, None), (None, 0)], "src long, dst long"
+    )
+    g = Graph(v, e, directed=directed, indexed=True)
+    got = PageRank(max_iterations=3, batch_finish=0).run(g).collect()
+    null = [r["pagerank"] for r in got if r[ID] is None]
+    assert null == [pytest.approx(0.15, abs=1e-12)]
