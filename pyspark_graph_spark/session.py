@@ -58,10 +58,8 @@ def get_spark(
         # every such table into rows in the driver, measured at ~28 ms/MB
         # each way against ~20-30 ms for the job that reads the batches
         .config("spark.sql.execution.arrow.localRelationThreshold", "1MB")
-        # the JVM-wide cache of compiled whole-stage and expression classes
-        # (static, default 100 entries) is sized to hold the engine's
-        # working set, so a plan a BSP loop has run before is not compiled
-        # again. CODEGEN_CACHE_ENTRIES notes the measurement
+        # the JVM-wide cache of compiled classes holds the engine's working
+        # set, so a plan a BSP loop has run before is not compiled again
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     return builder.getOrCreate()

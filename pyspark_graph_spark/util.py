@@ -8,8 +8,9 @@ bounded-batch helpers at the end (``checkpoint_observed``,
 ``driver_finish``) are the actions the iterative operators share,
 ``broadcast_if_small`` is how their loops decide which side of a join
 moves, ``round_zero`` types their round 0 as any other round, and
-``local_frame`` builds the small frames they seed them with and return. ``BATCH_ROWS`` is the default bound of the core operators'
-driver finishes.
+``local_frame`` builds the small frames they seed them with and return.
+``BATCH_ROWS`` is the default bound of the core operators' driver
+finishes.
 """
 
 from __future__ import annotations
@@ -161,7 +162,10 @@ def round_zero(seed: DataFrame, step) -> DataFrame:
     of classes for round 2. Seeded this way every round runs one plan,
     which Spark compiles once per session (session.py). No row of
     ``step(seed)`` is computed: the optimizer drops the empty side of
-    the union, and the union's schema keeps the wider nullability."""
+    the union, and the union's schema keeps the wider nullability.
+    A checkpoint also keeps its plan's constraints (``isnotnull(id)``
+    of non-null ids, say), which the step must carry from round to
+    round itself."""
     return step(seed).limit(0).unionByName(seed)
 
 
